@@ -11,6 +11,14 @@ sbt -batch test 2>&1 | grep -E "Tests: |All tests"
 echo "== vanilla entry smoke (driver-like session) =="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep "\[smoke\]"
 
+echo "== snapshot_churn: SnapshotTable against the pandas replay =="
+churn=$(python3 perfbench/run.py --workload snapshot_churn --seed 1 \
+  --seconds 60 --trace 0 | tail -1) || true
+case "$churn" in
+  *'"correct": true'*) echo "snapshot_churn correct" ;;
+  *) echo "snapshot_churn FAILED: ${churn:0:400}"; exit 1 ;;
+esac
+
 for sf in 0.001 0.01 $([ "${1:-}" = quick ] || echo 0.1); do
   echo "== verify + DuckDB oracle @ sf$sf =="
   sbt -batch "runMain graft.Verify /root/testdata/sf$sf /tmp/graft_gate_$sf" \

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.GraftStreamingBridge
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, DoubleType, IntegerType, LongType, MapType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.SnapshotTable
@@ -124,13 +124,7 @@ class SnapshotSource extends RelationProvider
         s"table $dir (v$v) records no schema header — it predates the " +
           "#schema manifest header; recommit it through the current " +
           "writer, or read via the Scala API"))
-    HadoopFsRelation(
-      location = new SnapshotFileIndex(spark, dir, v),
-      partitionSchema = StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
+    SnapshotFileIndex.relation(spark, dir, v, schema)
   }
 
   /** The writer side (`df.write.format("graft-snapshot")`): every mode
@@ -210,28 +204,43 @@ private[v2] class SnapshotSink(spark: SparkSession, dir: String,
   override def toString: String = s"SnapshotSink[$dir, app=$appId]"
 }
 
-/** The manifest AS a Spark [[FileIndex]]: listing resolves version `v`'s
-  * entries once (never a directory walk), and [[listFiles]] prunes them
-  * against the pushed data filters — partition-value equality/IN on the
-  * table's recorded partition column, [lo, hi] overlap on any column the
-  * manifest carries min/max stats for (LONG and STRING). The data files
-  * store the partition column as an ordinary column, so `partitionSchema`
-  * is empty and every filter arrives as a data filter.
+/** The manifest AS a Spark [[FileIndex]] — the ONE file index every
+  * snapshot scan goes through: the `graft-snapshot` source's reads and
+  * every [[SnapshotTable]] read (live, time-travel, range-pruned and
+  * partition-pruned reads, the MERGE base, the DML and compaction
+  * rewrites, both sides of a diff). Listing resolves version `version`'s
+  * entries once (never a directory walk) — all of them, or the subset
+  * `files` the Scala API already chose by manifest partition/stats — and
+  * [[listFiles]] prunes them further against the pushed data filters:
+  * partition-value equality/IN on the table's recorded partition column,
+  * [lo, hi] overlap on any column the manifest carries min/max stats for.
+  * The data files store the partition column as an ordinary column, so
+  * `partitionSchema` is empty and every filter arrives as a data filter.
   *
-  * ZERO-RPC listing: every FileStatus is synthesized from the manifest's
-  * recorded `bytes:rows` field ([[SnapshotTable.fileMetaAt]]) — index
-  * construction performs NO per-file metadata calls, the property that
-  * separates an open table format from a directory listing at 10⁶ live
-  * files. Only entries written before the field existed fall back to one
-  * `getFileStatus` each ([[fallbackStatCalls]] counts them — the spec
-  * pins the count at zero for current-writer tables). `sizeInBytes`
-  * (join-strategy input) sums the same recorded lengths. The index is an
-  * immutable snapshot of version `v`: `refresh` is a no-op by design
-  * (re-load the source to see later commits). */
+  * ZERO-RPC, ZERO-JOB listing: every FileStatus is synthesized from the
+  * manifest's recorded `bytes:rows` field ([[SnapshotTable.fileMetaAt]])
+  * — index construction performs NO per-file metadata calls and launches
+  * no Spark job (a `spark.read.parquet` of more than 32 paths lists them
+  * in a job with one task per file). Only entries written before the
+  * field existed fall back to one `getFileStatus` each
+  * ([[fallbackStatCalls]] counts them — the spec pins the count at zero
+  * for current-writer tables). `sizeInBytes` (join-strategy input) sums
+  * the same recorded lengths. The index is an immutable snapshot of
+  * version `version`: `refresh` is a no-op by design (re-load the source
+  * to see later commits). */
 class SnapshotFileIndex(spark: SparkSession, tableDir: String,
-    version: Long) extends FileIndex {
+    version: Long, files: Option[Seq[String]] = None) extends FileIndex {
 
-  private val entries = SnapshotTable.entriesAt(tableDir, version)
+  private val entries = {
+    val all = SnapshotTable.entriesAt(tableDir, version)
+    files.fold(all) { fs =>
+      val want = fs.toSet
+      val sub = all.filter(e => want(e._2))
+      require(sub.size == want.size, s"files not live in version $version " +
+        s"of $tableDir: ${(want -- sub.map(_._2)).take(3).mkString(", ")}")
+      sub
+    }
+  }
   private val stats = SnapshotTable.typedStatsAt(tableDir, version)
   private val partCol = SnapshotTable.partColAt(tableDir, version)
 
@@ -512,5 +521,35 @@ class SnapshotFileIndex(spark: SparkSession, tableDir: String,
         }
       }
     }
+  }
+}
+
+object SnapshotFileIndex {
+
+  /** A parquet [[HadoopFsRelation]] over `files` (default: every live
+    * file) of version `version`, read with `schema` — the scan both the
+    * `graft-snapshot` source and [[SnapshotTable]]'s reads wrap in a
+    * frame. The schema is made nullable throughout, as `spark.read
+    * .schema(s)` does: a file staged before an add-column commit lacks
+    * the column and reads it as NULL, so no column may claim non-null
+    * to the optimizer. */
+  def relation(spark: SparkSession, tableDir: String, version: Long,
+      schema: StructType, files: Option[Seq[String]] = None)
+      : HadoopFsRelation =
+    HadoopFsRelation(
+      location = new SnapshotFileIndex(spark, tableDir, version, files),
+      partitionSchema = StructType(Nil),
+      dataSchema = nullable(schema).asInstanceOf[StructType],
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty)(spark)
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

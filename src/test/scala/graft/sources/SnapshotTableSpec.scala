@@ -714,11 +714,82 @@ class SnapshotTableSpec extends SparkSpec {
       s"hot partition must split across tasks, got ${byPart("hot")} file(s)")
     assert(byPart("cold") == 1,
       s"cold partition must stay one file, got ${byPart("cold")}")
+    // no unbounded file: the row cap holds for every hot file
+    def hotFiles(st: Seq[(String, String)]) =
+      st.collect { case ("hot", f) => s"$dir/data/$f" }
+    hotFiles(staged).foreach { f =>
+      val n = spark.read.parquet(f).count()
+      assert(n <= 200L, s"$f holds $n rows, above targetRowsPerFile 200")
+    }
     SnapshotTable.casCommit(dir, 0L, staged, schema = Some(rows.schema))
     val got = SnapshotTable.read(spark, dir)
       .select("k", "name", "part").as[(Long, String, String)].collect().toSet
     val want = rows.as[(Long, String, String)].collect().toSet
     assert(got == want, "skew-split staging must read back byte-identical")
+    // no single-task funnel: with a small advisory size AQE's rebalance
+    // skew split spreads the hot partition over several write tasks
+    // (a file name's part-NNNNN is its writer task's partition id), with
+    // no row cap left to split it
+    val split = withSQLConf(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      SnapshotTable.stageBatch(rows, dir, "part",
+        SnapshotTable.newBatchTag(2L), targetRowsPerFile = 1L << 40)
+    }
+    val tasks = hotFiles(split)
+      .map(f => f.split('/').last.split('-')(1)).distinct
+    assert(tasks.size > 1,
+      s"hot partition must stage from several write tasks, got $tasks")
+  }
+
+  test("reads build their frames through the manifest index: no Spark " +
+      "job (no listing of > 32 files), every scan via SnapshotFileIndex") {
+    val dir = Files.createTempDirectory("graft-snap-nolist").toString
+    val rows = spark.range(0L, 4000L).select(col("id").as("k"),
+      concat(lit("n"), col("id").cast("string")).as("name"),
+      lit("all").as("part"))
+    val v1 = SnapshotTable.overwriteClustered(spark, dir, rows, "part",
+      Seq("k"), rangeFiles = 40)
+    val v2 = SnapshotTable.overwriteClustered(spark, dir,
+      rows.withColumn("name", concat(col("name"), lit("'"))), "part",
+      Seq("k"), rangeFiles = 40)
+    assert(Seq(v1, v2).forall(v => SnapshotTable.entriesAt(dir, v).size > 32))
+    // jobs started while `body` runs, by job group; listener events arrive
+    // in order, so once a later barrier job shows every earlier one has
+    def jobsIn[A](body: => A): (A, Int) = {
+      val sc = spark.sparkContext
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(Option(e.properties)
+            .map(_.getProperty("spark.jobGroup.id")).orNull))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("counted", "snapshot read construction")
+        val out = try body finally sc.clearJobGroup()
+        sc.setJobGroup("barrier", "listener barrier")
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!groups.contains("barrier") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groups.contains("barrier"), "listener never saw the barrier")
+        (out, groups.toArray.count(_ == "counted"))
+      } finally sc.removeSparkListener(listener)
+    }
+    val (frames, jobs) = jobsIn(Seq(
+      "readAt" -> SnapshotTable.readAt(spark, dir, v1),
+      "readRange" -> SnapshotTable.readRange(spark, dir, "k", 0L, 3999L),
+      "changesBetween" ->
+        SnapshotTable.changesBetween(spark, dir, v1, v2, Seq("k"))))
+    assert(jobs == 0, s"building the read frames launched $jobs Spark job(s)")
+    frames.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("SnapshotFileIndex") &&
+        !plan.contains("InMemoryFileIndex"),
+        s"$name must scan through the manifest index:\n${plan.take(800)}")
+    }
+    assert(frames.map(_._2.count()) == Seq(4000L, 4000L, 4000L))
   }
 
   test("stageBatch with NULL partition values: null-part rows stage into " +
@@ -727,8 +798,8 @@ class SnapshotTableSpec extends SparkSpec {
     val rows = (0L until 600L).map(k =>
       (k, s"n$k", if (k % 3 == 0) null else "p" + (k % 2)))
       .toDF("k", "name", "part")
-    // hot partition forces the slicing branch; null keys must not reach
-    // the map literal
+    // a hot partition splits by the row cap; null keys stage as their
+    // own partition all the same
     val staged = SnapshotTable.stageBatch(rows, dir, "part",
       SnapshotTable.newBatchTag(1L), targetRowsPerFile = 100L)
     assert(staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"),
