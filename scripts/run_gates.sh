@@ -21,8 +21,24 @@ esac
 
 for sf in 0.001 0.01 $([ "${1:-}" = quick ] || echo 0.1); do
   echo "== verify + DuckDB oracle @ sf$sf =="
-  sbt -batch "runMain graft.Verify /root/testdata/sf$sf /tmp/graft_gate_$sf" \
+  # sf0.001 runs with its own empty java.io.tmpdir: any graft* entry left
+  # there once the JVM has exited is an artifact the run did not delete
+  tmpset="" vtmp=""
+  if [ "$sf" = 0.001 ]; then
+    vtmp=$(mktemp -d)
+    tmpset="set run / javaOptions += \"-Djava.io.tmpdir=$vtmp\""
+  fi
+  sbt -batch ${tmpset:+"$tmpset"} \
+    "runMain graft.Verify /root/testdata/sf$sf /tmp/graft_gate_$sf" \
     2>&1 | grep "\[verify\]" || true
+  if [ -n "$vtmp" ]; then
+    left=$(find "$vtmp" -mindepth 1 -maxdepth 1 -name 'graft*')
+    if [ -n "$left" ]; then
+      echo "verify left artifacts in java.io.tmpdir: $left"; exit 1
+    fi
+    rm -rf "$vtmp"
+    echo "verify left no graft* entry in java.io.tmpdir"
+  fi
   python3 scripts/check_oracle.py "/root/testdata/sf$sf" "/tmp/graft_gate_$sf" | tail -1
 done
 

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -100,7 +100,9 @@ object Bench {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         (fullJson + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) => System.err.println(s"[bench] bench_out.json not written: $e")
+    }
     spark.stop()
   }
 }

@@ -24,8 +24,7 @@ object Sessions {
       // with a fresh metastore hits LOCATION_ALREADY_EXISTS on the stale
       // directory (saveAsTable overwrite can't fix a location the catalog
       // doesn't own)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", graft.core.Artifacts.dir("graft-wh"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

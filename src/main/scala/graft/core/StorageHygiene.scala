@@ -18,10 +18,9 @@ import org.apache.spark.sql.SparkSession
   * every query start from the same clean-storage state.
   *
   * Safe to call between queries because nothing holds a live DataFrame
-  * across query boundaries: the cross-query artifact caches
-  * (DedupQueries.simhashSigMemo, SimQueries/TextQueries memos) memoize
-  * PARQUET PATHS and scalar parameters, never frames, so re-reads after a
-  * drain hit disk, not a truncated lineage. */
+  * across query boundaries: the one cross-query artifact store,
+  * [[Artifacts]], memoizes PARQUET PATHS and scalar parameters, never
+  * frames, so re-reads after a drain hit disk, not a truncated lineage. */
 object StorageHygiene {
 
   /** Unpersist every cached Dataset AND every persisted/checkpointed RDD

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, min}
 import graft.Q
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.dedup.Dedup
 
 /** Near-duplicate detection queries. The MinHash/SimHash oracles are full
@@ -78,54 +78,32 @@ object DedupQueries {
     * table-derived ≡ recomputed. Signatures are per-document, so a
     * corpus/batch SLICE of the signature table is that side's signature
     * set (the incremental queries ride this). */
-  private val minhashArtMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def minhashArtifacts(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val (sigP, shP) = minhashArtMemo.getOrElseUpdate(key, {
-      val docs = Tables.documents(s, d)
-      val sp = java.nio.file.Files
-        .createTempDirectory("graft-minhash-sig").toString
-      val hp = java.nio.file.Files
-        .createTempDirectory("graft-minhash-sh").toString
-      // shingles land first; the signature build then derives from the
-      // just-written parquet — one tokenize→window→distinct pass instead
-      // of two (the build used to run it once per artifact)
-      Dedup.shingles(docs, "doc_id", "text", n = 3)
-        .write.mode("overwrite").parquet(hp)
-      Dedup.minhashSignaturesFromShingles(s.read.parquet(hp),
-        numHashes = NumHashes).write.mode("overwrite").parquet(sp)
-      (sp, hp)
-    })
-    (s.read.parquet(sigP), s.read.parquet(shP))
+    // shingles land first; the signature build then derives from the
+    // just-written parquet — one tokenize→window→distinct pass instead
+    // of two (the build used to run it once per artifact)
+    val sh = Artifacts.parquet(s, d, "graft-minhash-sh")(
+      Dedup.shingles(Tables.documents(s, d), "doc_id", "text", n = 3))
+    val sig = Artifacts.parquet(s, d, "graft-minhash-sig")(
+      Dedup.minhashSignaturesFromShingles(sh, numHashes = NumHashes))
+    (sig, sh)
   }
-
-  private val clusterTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Cluster table over the docs whose ids satisfy `docPred` (lit(true)
     * for the full corpus) — pairs derive from the persisted artifacts. */
   private def persistClusters(
       s: org.apache.spark.sql.SparkSession, d: String, tag: String,
-      docPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d + "|" + tag
-    val path = clusterTableMemo.getOrElseUpdate(key, {
+      docPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, s"graft-lsh-clusters-$tag") {
       val (sig, sh) = minhashArtifacts(s, d)
       val pairs = Dedup.minhashLshPairsFromArtifacts(sig.filter(docPred),
         sh, numHashes = NumHashes, bands = Bands, threshold = 0.5)
-      val cl = graft.graph.GraphOps
+      graft.graph.GraphOps
         .connectedComponents(s, pairs.select("a", "b"))
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-lsh-clusters").toString
-      cl.write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   private def lshClustersPersisted(
       s: org.apache.spark.sql.SparkSession,
@@ -348,21 +326,11 @@ object DedupQueries {
     * corpus); the sig query emits it and the pairs/incremental queries
     * derive their combination tables from it — the per-word hash votes
     * never recompute. */
-  private val simhashSigMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def simhashSigPersisted(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = simhashSigMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-simhash-sig").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-simhash-sig")(
       Dedup.simhashSignatures(Tables.documents(s, d), "doc_id", "text",
-        bits = SimBits).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        bits = SimBits))
 
   val xDedupSimhashSig = Q(
     "x_dedup_simhash_sig",
@@ -383,11 +351,9 @@ object DedupQueries {
     * 8, blocks 9 → 10 → 11 across SFs — the parameters are LIVE), and
     * DedupSpec pins the large-n degradation; the oracle computes the
     * identical pair in SQL, so a drifted formula goes red. */
-  private val simParamsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
   private def simParams(s: org.apache.spark.sql.SparkSession,
       d: String): (Int, Int) =
-    simParamsMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + d,
+    Artifacts.memo(s, d, "simhash-params")(
       Dedup.mankuParamsFor(simhashSigPersisted(s, d).count(), bits = SimBits,
         maxHamming = SimMaxHamming, tableCeiling = SimTableCeiling))
 

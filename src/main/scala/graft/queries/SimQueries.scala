@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 
@@ -476,67 +476,32 @@ object SimQueries {
     * LSH/IVF consumer derives its query/corpus sides from the table while
     * its DuckDB oracle still recomputes the index from raw embeddings —
     * so each green row re-proves table-derived ≡ recomputed, and
-    * x_ann_index_persisted pins the tables themselves. Assumes the
-    * corpus at `d` is immutable for the session (bench/verify fixtures
-    * are); temp dirs live for the JVM lifetime by design. */
-  private val lshIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * x_ann_index_persisted pins the tables themselves. */
   private def lshIndexPersisted(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = lshIdxMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-lsh-idx").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-lsh-idx")(
       Similarity.lshIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-        planes = lshPlanes(s, d), dim = 64, carryCols = Seq("label"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  private val ivfIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+        planes = lshPlanes(s, d), dim = 64, carryCols = Seq("label")))
 
   private def ivfAssignmentsPersisted(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = ivfIdxMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-idx").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-ivf-idx")(
       Similarity.ivfAssignments(Tables.embeddings(s, d), "vec_id",
-        "embedding", centroidStep = 40, maxRank = 2)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        "embedding", centroidStep = 40, maxRank = 2))
 
   /** The settled-corpus (vectors ≢ 3 mod 10) assignment table for the
     * incremental IVF query — membership only (maxRank 1: probe ranks
     * come from the BATCH side), persisted once per (session, corpus)
     * like the full-corpus table above. */
-  private val ivfCorpusIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def ivfCorpusAssignmentsPersisted(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = ivfCorpusIdxMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-corpus-idx").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-ivf-corpus-idx")(
       Similarity.ivfAssignments(
         Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 3),
-        "vec_id", "embedding", centroidStep = 40, maxRank = 1)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        "vec_id", "embedding", centroidStep = 40, maxRank = 1))
 
   /** Shared DuckDB replica of the multi-probe LSH machinery (Similarity
     * .lshCandidates): hyperplane ±1 literals baked in, projections as
@@ -562,11 +527,9 @@ object SimQueries {
     * growth policy now lives in code and the registered parameter CHANGES
     * with the scale factor; the oracle computes the identical value in
     * SQL, so a drifted formula goes red at the next SF). */
-  private val lshPlanesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
   private def lshPlanes(s: org.apache.spark.sql.SparkSession,
       d: String): Int =
-    lshPlanesMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + d,
+    Artifacts.memo(s, d, "lsh-planes")(
       Similarity.planesFor(Tables.embeddings(s, d).count(),
         targetBucket = LshTargetBucket, maxPlanes = MaxLshPlanes))
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.sources.{Sinks, SnapshotSql, SnapshotTable}
 
 /** Driver-checkable queries for the non-parquet source/sink operators:
@@ -57,7 +57,7 @@ object SourceQueries {
       |UNION ALL
       |SELECT s_suppkey, 'NATION', CAST(s_nationkey AS VARCHAR) FROM supplier"""
       .stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_kegg_dsv2").toString
+    val dir = Artifacts.dir("graft_kegg_dsv2")
     Tables.supplier(s, d).select(
       concat(
         lit("ENTRY       "), col("s_suppkey"), lit("\n"),
@@ -90,7 +90,7 @@ object SourceQueries {
     "s12_dsv2_agg",
     """SELECT COUNT(*) AS n_records, CAST(0 AS BIGINT) AS min_offset
       |FROM supplier""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_kegg_agg").toString
+    val dir = Artifacts.dir("graft_kegg_agg")
     Tables.supplier(s, d).select(
       concat(
         lit("ENTRY       "), col("s_suppkey"), lit("\n"),
@@ -115,8 +115,7 @@ object SourceQueries {
     "s12_dsv2_limit",
     """SELECT least(CAST(7 AS BIGINT), COUNT(*)) AS n FROM supplier""") {
     (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_kegg_limit").toString
+      val dir = Artifacts.dir("graft_kegg_limit")
       Tables.supplier(s, d).select(
         concat(
           lit("ENTRY       "), col("s_suppkey"), lit("\n"),
@@ -140,7 +139,7 @@ object SourceQueries {
     """SELECT 'ENTRY       ' || CAST(s_suppkey AS VARCHAR) || chr(10) ||
       |  'NAME        ' || s_name AS record
       |FROM supplier""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_kegg_w").toString
+    val dir = Artifacts.dir("graft_kegg_w")
     Tables.supplier(s, d).select(
       concat(
         lit("ENTRY       "), col("s_suppkey"), lit("\n"),
@@ -170,7 +169,7 @@ object SourceQueries {
     "s12_dsv2_runtime",
     """SELECT s_suppkey AS rec_id, s_name AS name FROM supplier
       |WHERE s_suppkey % 4 = 1""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_kegg_rt").toString
+    val dir = Artifacts.dir("graft_kegg_rt")
     (0 until 4).foreach { b =>
       Tables.supplier(s, d)
         .filter(pmod(col("s_suppkey"), lit(4)) === b)
@@ -200,7 +199,7 @@ object SourceQueries {
     """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
       |  translate(n_name || '|' || n_regionkey, '''|', '^,') AS props
       |FROM nation""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_rt").toString
+    val dir = Artifacts.dir("graft_csv_rt")
     Sinks.chunkedCsv(
       Tables.nation(s, d).select(col("n_nationkey"),
         // pipe-encoded props cell so the sink's Neo4j escaping (F4) is
@@ -259,7 +258,7 @@ object SourceQueries {
     "s_orc_roundtrip",
     """SELECT s_suppkey, s_name, s_acctbal, s_nationkey
       |FROM supplier WHERE s_nationkey < 20""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_rt").toString
+    val dir = Artifacts.dir("graft_orc_rt")
     Tables.supplier(s, d)
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
         col("s_nationkey"))
@@ -291,8 +290,8 @@ object SourceQueries {
       |UNION ALL
       |SELECT k + 100000000, o_custkey, price, 'N', '2099-01'
       |FROM base WHERE k % 1000 = 7""".stripMargin) { (s, d) =>
-    val baseDir = java.nio.file.Files.createTempDirectory("graft_upsert_base").toString
-    val stagingDir = java.nio.file.Files.createTempDirectory("graft_upsert_stage").toString
+    val baseDir = Artifacts.dir("graft_upsert_base")
+    val stagingDir = Artifacts.dir("graft_upsert_stage")
     // partitioned by YEAR, month kept as a data column (the
     // s_snapshot_skip layout lesson): the CDC batch touches every month,
     // so month partitions mean ~85 tiny files rewritten per merge pass
@@ -373,23 +372,18 @@ object SourceQueries {
     * answer from the committed versions — exactly how a downstream
     * consumer uses a real table. Every oracle recomputes its answer from
     * the raw orders formulas, so each green row still proves
-    * derived-from-table ≡ recomputed. Assumes the corpus at `d` is
-    * immutable for the session (bench/verify fixtures are). */
-  private val cdcTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * derived-from-table ≡ recomputed. */
   private def cdcSnapshotTable(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    cdcTableMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + d, {
-      val tableDir =
-        java.nio.file.Files.createTempDirectory("graft_snap_tbl").toString
+    Artifacts.memo(s, d, "graft_snap_tbl") {
+      val tableDir = Artifacts.dir("graft_snap_tbl")
       val snap = ordersSnapFrame(s, d)
       SnapshotTable.overwrite(s, tableDir, snap, partCol = "yr")   // v1
       SnapshotTable.upsert(s, tableDir, ordersCdcBatch(snap),      // v2
         partCol = "yr", keyCols = Seq("o_orderkey"),
         versionCol = "version", deleteCol = "del")
       tableDir
-    })
+    }
 
   /** The same CDC MERGE through the manifest-pinned [[SnapshotTable]]
     * (atomic multi-partition commit, round-6 verdict gap): version 1 is
@@ -513,7 +507,7 @@ object SourceQueries {
       |  strftime(o_orderdate, '%Y-%m') AS month
       |FROM orders WHERE o_orderkey BETWEEN 100 AND 2000""".stripMargin) {
     (s, d) =>
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_snap_skip").toString
+    val tableDir = Artifacts.dir("graft_snap_skip")
     // partitioned by YEAR, month kept as data: staging splits each range
     // slice per partition, so month partitions meant 8 × ~80 = 640 files
     // at sf0.1 — 10× the write cost for zero extra skipping here (the
@@ -547,8 +541,7 @@ object SourceQueries {
       |  strftime(o_orderdate, '%Y-%m') AS month
       |FROM orders WHERE strftime(o_orderdate, '%Y-%m') >= '1997-01'"""
       .stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_sstr").toString
+    val tableDir = Artifacts.dir("graft_snap_sstr")
     val snap = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").as("price"),
@@ -595,8 +588,7 @@ object SourceQueries {
     "s_snapshot_skip_dbl",
     """SELECT o_orderkey, o_custkey, o_totalprice AS price
       |FROM orders WHERE o_totalprice >= 400000.0""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_dbl").toString
+    val tableDir = Artifacts.dir("graft_snap_dbl")
     val snap = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").as("price"), lit("all").as("p"))
@@ -639,8 +631,7 @@ object SourceQueries {
       |FROM orders
       |WHERE CAST(ROUND(o_totalprice * 100) AS BIGINT) >= 40000000"""
       .stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_dec").toString
+    val tableDir = Artifacts.dir("graft_snap_dec")
     val dec12 = org.apache.spark.sql.types.DecimalType(12, 2)
     // integer cents (exact in both engines) → exact DECIMAL(12,2): the
     // decimal arithmetic below never touches a double→decimal cast
@@ -688,8 +679,7 @@ object SourceQueries {
       |SELECT o_orderkey, o_totalprice AS price,
       |  strftime(o_orderdate, '%Y-%m') AS month, 'ins' AS src
       |FROM orders WHERE o_orderkey % 1000 = 0""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_writer").toString
+    val tableDir = Artifacts.dir("graft_snap_writer")
     // month stays a DATA column; the partition column is a single bucket
     // and rangeFiles is explicit — partitioning by month here would cross
     // ~80 partitions × range slices into thousands of files for zero
@@ -733,10 +723,8 @@ object SourceQueries {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_sink").toString
-    val ckpt =
-      java.nio.file.Files.createTempDirectory("graft_snap_sink_ck").toString
+    val tableDir = Artifacts.dir("graft_snap_sink")
+    val ckpt = Artifacts.dir("graft_snap_sink_ck")
     val rows = Tables.orders(s, d).filter(col("o_orderkey") % 15 === 0)
       .select(col("o_orderkey"), col("o_totalprice").as("price"))
     def feed(first: Boolean): Seq[(Long, Double, String)] = rows
@@ -782,8 +770,7 @@ object SourceQueries {
       |FROM orders WHERE o_orderkey % 800 = 0
       |UNION ALL SELECT o_orderkey, o_totalprice AS price, 'a3' AS src
       |FROM orders WHERE o_orderkey % 800 = 0""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_dc").toString
+    val tableDir = Artifacts.dir("graft_snap_dc")
     val base = Tables.orders(s, d).filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_totalprice").as("price"),
         lit("base").as("src"), lit("all").as("p"))
@@ -822,8 +809,7 @@ object SourceQueries {
       |FROM orders
       |WHERE o_orderkey BETWEEN 200 AND 900 AND o_custkey BETWEEN 20 AND 90"""
       .stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_z").toString
+    val tableDir = Artifacts.dir("graft_snap_z")
     val snap = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").as("price"), lit("all").as("p"))
@@ -860,8 +846,7 @@ object SourceQueries {
       |  strftime(o_orderdate, '%Y-%m') AS month,
       |  CASE WHEN o_orderkey % 14 = 0 THEN 'cdc' END AS src
       |FROM orders WHERE o_orderkey % 7 = 0""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_evolve").toString
+    val tableDir = Artifacts.dir("graft_snap_evolve")
     // partitioned by YEAR, month kept as data (the s_snapshot_skip
     // layout lesson): the evolving batch touches every month, so month
     // partitions staged ~80 tiny files per version for zero pruning
@@ -895,16 +880,12 @@ object SourceQueries {
     * are key-band-scoped, so only the clustered files overlapping the
     * band restage — every other file carries forward by manifest entry
     * (the spec pins the mechanism; the queries pin the visible result). */
-  private val dmlTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long)]
-
   /** Key bands sized to exist at EVERY SF (o_orderkey starts at 0; the
     * smallest corpus tops out under 1500). */
   private def dmlSnapshotTable(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Long, Long) =
-    dmlTableMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + d, {
-      val tableDir =
-        java.nio.file.Files.createTempDirectory("graft_snap_dml").toString
+    Artifacts.memo(s, d, "graft_snap_dml") {
+      val tableDir = Artifacts.dir("graft_snap_dml")
       // partitioned by YEAR (≈7 partitions), month kept as a data
       // column: range slices split per partition at stage time, so a
       // finer partCol would multiply file count (8 slices × ~80 months
@@ -926,7 +907,7 @@ object SourceQueries {
           "price" -> (col("price") + 50), "status" -> lit("X")),
         partCol = "yr", pruneRange = Some(("o_orderkey", 500L, 700L)))
       (tableDir, vDel, vUpd)
-    })
+    }
 
   /** Predicate DELETE on the snapshot table
     * ([[SnapshotTable.deleteWhere]]) — the row-level DML the tombstone
@@ -998,7 +979,7 @@ object SourceQueries {
       |  CASE WHEN s_suppkey % 10 = 0
       |    THEN s_suppkey || ',' || s_name || ',bad' END AS corrupt_raw
       |FROM supplier""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_perm").toString
+    val dir = Artifacts.dir("graft_csv_perm")
     Tables.supplier(s, d).select(
       when(col("s_suppkey") % 10 === 0,
         concat(col("s_suppkey"), lit(","), col("s_name"), lit(",bad")))
@@ -1026,8 +1007,8 @@ object SourceQueries {
       |UNION ALL
       |SELECT n_nationkey, CAST(NULL AS VARCHAR), n_regionkey
       |FROM nation""".stripMargin) { (s, d) =>
-    val d1 = java.nio.file.Files.createTempDirectory("graft_evolve_v1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_evolve_v2").toString
+    val d1 = Artifacts.dir("graft_evolve_v1")
+    val d2 = Artifacts.dir("graft_evolve_v2")
     Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
       .write.mode("overwrite").parquet(d1)
     Tables.nation(s, d).select(col("n_nationkey"), col("n_regionkey"))
@@ -1054,7 +1035,7 @@ object SourceQueries {
       |  md5(text) AS content_md5
       |FROM documents WHERE text IS NOT NULL AND text <> ''"""
       .stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_blobs").toString
+    val dir = Artifacts.dir("graft_blobs")
     Sinks.writeBlobs(
       Tables.documents(s, d)
         .filter(col("text").isNotNull && length(col("text")) > 0)
@@ -1113,8 +1094,7 @@ object SourceQueries {
       |  (CAST(2 AS BIGINT), 'delete', 'yr'),
       |  (CAST(1 AS BIGINT), 'overwrite', 'yr'))
       |t(version, operation, part_col)""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_maint").toString
+    val tableDir = Artifacts.dir("graft_snap_maint")
     val base = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_totalprice").as("price"),
       date_format(col("o_orderdate"), "yyyy").as("yr"))
@@ -1199,10 +1179,8 @@ object SourceQueries {
       |FROM orders
       |WHERE o_orderkey % 5 = 0 AND o_orderkey BETWEEN 600 AND 800"""
       .stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_cdf").toString
-    val ckpt =
-      java.nio.file.Files.createTempDirectory("graft_snap_cdf_ck").toString
+    val tableDir = Artifacts.dir("graft_snap_cdf")
+    val ckpt = Artifacts.dir("graft_snap_cdf_ck")
     val base = Tables.orders(s, d).filter(col("o_orderkey") % 5 === 0)
       .select(col("o_orderkey"), col("o_totalprice").as("price"),
         date_format(col("o_orderdate"), "yyyy").as("yr"),
@@ -1278,8 +1256,7 @@ object SourceQueries {
       |WHERE NOT (o_orderkey BETWEEN 100 AND 300 AND o_orderkey % 3 = 0)
       |  AND NOT (o_orderkey % 11 = 0 AND o_orderkey BETWEEN 800 AND 1200
       |           AND o_orderkey % 2 = 0)""".stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_sql").toString
+    val tableDir = Artifacts.dir("graft_snap_sql")
     val base = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").as("price"),
@@ -1337,8 +1314,7 @@ object SourceQueries {
       |FROM orders
       |WHERE o_orderkey <= 1000 OR o_orderkey BETWEEN 1200 AND 1400"""
       .stripMargin) { (s, d) =>
-    val tableDir =
-      java.nio.file.Files.createTempDirectory("graft_snap_ins").toString
+    val tableDir = Artifacts.dir("graft_snap_ins")
     val base = Tables.orders(s, d).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").as("price"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.dedup.Dedup
 import graft.text.TextFns
 
@@ -1067,22 +1067,11 @@ object TextQueries {
     * each is the token+bigram feature fold over the text, identical in
     * all five. Every consumer's DuckDB oracle recomputes the fold from
     * scratch, so each green row re-proves table-derived ≡ recomputed
-    * (the nbMatrixPersisted discipline). ASSUMES the documents table at
-    * `d` is immutable for the session (bench/verify fixtures are — a
-    * mutated corpus at the same path would be served the stale snapshot);
-    * the temp dirs live for the JVM lifetime by design (one per (app,
-    * corpus), reclaimed with the container/tmpfs — not a leak that grows
-    * per query). */
-  private val scoredMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * (the nbMatrixPersisted discipline). */
   private def scoredPersisted(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = scoredMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-scored").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-scored")(
       Tables.documents(s, d)
         .select(col("doc_id"),
           TextFns.classifierFeatures(col("text")).as("__f"),
@@ -1090,12 +1079,7 @@ object TextQueries {
         .select(col("doc_id"), col("label"),
           size(col("__f")).cast("long").as("n_feats"),
           aggregate(col("__f"), lit(0L),
-            (acc, f) => acc + TextFns.classifierWeight(f)).as("score"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+            (acc, f) => acc + TextFns.classifierWeight(f)).as("score")))
 
   /** Spark twin of [[rankedPosCtes]]: one row per positive document with
     * its global position `k` and positive-rank `cumpos`. */
@@ -1424,23 +1408,12 @@ object TextQueries {
     * bounded-group windows and broadcast joins over that table. Each
     * consumer's DuckDB oracle still recomputes the matrix from scratch,
     * so every green row re-proves table-derived ≡ recomputed. */
-  private val nbMatrixMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def nbMatrixPersisted(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + d
-    val path = nbMatrixMemo.getOrElseUpdate(key, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-nb-matrix").toString
+      d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.parquet(s, d, "graft-nb-matrix")(
       graft.text.Relevance.nbScoreMatrix(
-        Tables.documents(s, d), "doc_id", "text", "source")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Tables.documents(s, d), "doc_id", "text", "source"))
 
   /** Confident-learning label-issue flags
     * ([[graft.text.Relevance.nbLabelIssues]]): class thresholds are mean

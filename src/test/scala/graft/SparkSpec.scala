@@ -8,6 +8,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlCtx = spark.sqlContext
 
+  /** A fresh, empty directory, deleted when the JVM exits. */
+  def scratch(prefix: String): String = graft.core.Artifacts.dir(prefix)
+
   /** Run `body` with the given SQL confs set, restoring priors after —
     * the session is shared across suites, so never leave confs dirty. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
@@ -25,20 +28,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local("4")
 }

@@ -250,8 +250,8 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("upsertPartitioned with an EMPTY update batch leaves the base " +
     "untouched (empty touched-partition set)") {
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-up-empty").toString
-    val stage = java.nio.file.Files.createTempDirectory("graft-up-empty-s").toString
+    val baseDir = scratch("graft-up-empty")
+    val stage = scratch("graft-up-empty-s")
     val base = Seq((1L, "one", "A", 0L, false))
       .toDF("k", "payload", "p", "version", "del")
     base.write.mode("overwrite").partitionBy("p").parquet(baseDir)

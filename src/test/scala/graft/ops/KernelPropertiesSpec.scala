@@ -248,8 +248,7 @@ class KernelPropertiesSpec extends SparkSpec {
       m <- Gen.choose(2L, 5L); r <- Gen.choose(0L, 1L)
     } yield (lo, lo + w, m, r), n = 6)
     bands.foreach { case (lo, hi, m, r) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-dml-prop").toString
+      val dir = scratch("graft-dml-prop")
       SnapshotTable.overwriteClustered(spark, dir, rows, "p",
         statsCols = Seq("k"), rangeFiles = 8)
       // the predicate's support is INSIDE the declared band — the caller
@@ -295,8 +294,7 @@ class KernelPropertiesSpec extends SparkSpec {
     cases.foreach { case (lo, hi, glue, extra) =>
       val where = s"k BETWEEN $lo AND $hi" +
         (if (glue.isEmpty) "" else s" $glue $extra")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-sqldel-prop").toString
+      val dir = scratch("graft-sqldel-prop")
       SnapshotTable.overwriteClustered(spark, dir, rows, "p",
         statsCols = Seq("k"), rangeFiles = 8)
       SnapshotSql.exec(spark, s"DELETE FROM snap('$dir') WHERE $where")

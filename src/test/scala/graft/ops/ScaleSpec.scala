@@ -254,7 +254,7 @@ class ScaleSpec extends SparkSpec {
     // the 100 TB shape: fact partitioned on the join key, dim filtered —
     // Catalyst injects a DynamicPruning subquery so only the dim's
     // surviving keys' partitions are ever read
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = scratch("graft_dpp")
     val fact = spark.range(0, 10000)
       .select((col("id") % 25).as("nk"), col("id").as("v"))
     graft.sources.Sinks.writePartitioned(fact, dir, Seq("nk"))

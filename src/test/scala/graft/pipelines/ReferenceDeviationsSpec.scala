@@ -30,7 +30,7 @@ class ReferenceDeviationsSpec extends SparkSpec {
     // (both the mondo-hierarchy and organism-disease exports), so neither
     // file is ever written. Intended semantics: the export lands on disk
     // and reads back equal.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dev-csv")
+    val dir = java.nio.file.Paths.get(scratch("graft-dev-csv"))
     try {
       val edges = DiseaseEdgesPipeline.ddaMerged(spark, sf)
         .select("disease_id1", "disease_id2", "source")

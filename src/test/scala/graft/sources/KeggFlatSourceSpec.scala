@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -26,7 +26,7 @@ class KeggFlatSourceSpec extends SparkSpec {
     }
 
   test("reads records with offsets; agrees with the lineSep parse path") {
-    val dir = Files.createTempDirectory("kegg_dsv2")
+    val dir = Paths.get(scratch("kegg_dsv2"))
     val recs = mkRecords(20, seed = 1)
     writeFlat(dir, "a.flat", recs)
     val got = spark.read.format("kegg-flat")
@@ -47,7 +47,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("split-boundary alignment: identical result for any splitSize") {
-    val dir = Files.createTempDirectory("kegg_dsv2_split")
+    val dir = Paths.get(scratch("kegg_dsv2_split"))
     // records of varying size so boundaries land mid-record, mid-line,
     // mid-delimiter, and exactly on frame starts
     val recs = mkRecords(60, seed = 7) ++ Seq(
@@ -69,7 +69,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("frames with only whitespace emit no row, in pruned and unpruned mode") {
-    val dir = Files.createTempDirectory("kegg_dsv2_blank")
+    val dir = Paths.get(scratch("kegg_dsv2_blank"))
     val body = "///\nENTRY  A\n///\n\n///\n   \n///\nENTRY  B\n///\n"
     Files.write(dir.resolve("c.flat"), body.getBytes(StandardCharsets.UTF_8))
     val path = dir.resolve("c.flat").toString
@@ -83,7 +83,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("column pruning reaches the scan") {
-    val dir = Files.createTempDirectory("kegg_dsv2_prune")
+    val dir = Paths.get(scratch("kegg_dsv2_prune"))
     writeFlat(dir, "d.flat", mkRecords(5, seed = 3))
     val df = spark.read.format("kegg-flat")
       .option("path", dir.resolve("d.flat").toString).load()
@@ -96,7 +96,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("directory input lists files; hidden/_ files skipped") {
-    val dir = Files.createTempDirectory("kegg_dsv2_dir")
+    val dir = Paths.get(scratch("kegg_dsv2_dir"))
     writeFlat(dir, "p1.flat", mkRecords(4, seed = 2))
     writeFlat(dir, "p2.flat", mkRecords(3, seed = 5))
     Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
@@ -108,7 +108,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("file without trailing delimiter keeps its last record") {
-    val dir = Files.createTempDirectory("kegg_dsv2_tail")
+    val dir = Paths.get(scratch("kegg_dsv2_tail"))
     val body = "ENTRY  A\n///\nENTRY  B\nNAME   tail"
     Files.write(dir.resolve("e.flat"), body.getBytes(StandardCharsets.UTF_8))
     val recs = spark.read.format("kegg-flat")
@@ -119,7 +119,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("feeds flatRecordFieldsKeyed with offset as the stable record id") {
-    val dir = Files.createTempDirectory("kegg_dsv2_parse")
+    val dir = Paths.get(scratch("kegg_dsv2_parse"))
     writeFlat(dir, "f.flat", mkRecords(10, seed = 1))
     val src = spark.read.format("kegg-flat")
       .option("path", dir.resolve("f.flat").toString).load()
@@ -136,7 +136,7 @@ class KeggFlatSourceSpec extends SparkSpec {
 
   test("offset-range pushdown prunes input partitions and is exact for " +
     "any split size") {
-    val dir = Files.createTempDirectory("kegg_dsv2_push")
+    val dir = Paths.get(scratch("kegg_dsv2_push"))
     writeFlat(dir, "g.flat", mkRecords(40, seed = 2))
     def scan(split: Int) = spark.read.format("kegg-flat")
       .option("path", dir.resolve("g.flat").toString)
@@ -173,7 +173,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   test("aggregate pushdown: COUNT/MIN/MAX computed split-locally (one " +
     "partial row per split, no record strings), composing with pushed " +
     "filters; values equal the raw-scan aggregation") {
-    val dir = Files.createTempDirectory("kegg_dsv2_agg")
+    val dir = Paths.get(scratch("kegg_dsv2_agg"))
     writeFlat(dir, "a.flat", mkRecords(40, seed = 2))
     def scan(split: Int) = spark.read.format("kegg-flat")
       .option("path", dir.resolve("a.flat").toString)
@@ -212,7 +212,7 @@ class KeggFlatSourceSpec extends SparkSpec {
     "commit; overwrite truncates, append accumulates; round-trip through " +
     "the splittable reader equals the input; wrong schema rejected") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("kegg_dsv2_write").toString
+    val dir = scratch("kegg_dsv2_write")
     val recs = mkRecords(25, seed = 5)
     recs.toDF("record").repartition(3)
       .write.format("kegg-flat").option("path", dir)
@@ -251,7 +251,7 @@ class KeggFlatSourceSpec extends SparkSpec {
 
   test("runtime filtering (DPP analog): a file-key join prunes whole files " +
       "before any task launches, observable via the plannedSplits metric") {
-    val dir = Files.createTempDirectory("kegg_dsv2_runtime")
+    val dir = Paths.get(scratch("kegg_dsv2_runtime"))
     (0 until 4).foreach(i => writeFlat(dir, s"f$i.flat", mkRecords(6, seed = i)))
     def load() = spark.read.format("kegg-flat")
       .option("path", dir.toString).option("splitSize", "64").load()
@@ -293,7 +293,7 @@ class KeggFlatSourceSpec extends SparkSpec {
   }
 
   test("file-equality pushdown plans only the named file's splits") {
-    val dir = Files.createTempDirectory("kegg_dsv2_pushfile")
+    val dir = Paths.get(scratch("kegg_dsv2_pushfile"))
     writeFlat(dir, "a.flat", mkRecords(5, seed = 1))
     writeFlat(dir, "b.flat", mkRecords(5, seed = 3))
     val df = spark.read.format("kegg-flat")
@@ -307,7 +307,7 @@ class KeggFlatSourceSpec extends SparkSpec {
 
   test("limit pushdown reaches the scan (PushedLimit), yields exactly k " +
     "rows, and an over-sized limit returns everything") {
-    val dir = Files.createTempDirectory("kegg_limit")
+    val dir = Paths.get(scratch("kegg_limit"))
     writeFlat(dir, "a.flat", mkRecords(20, seed = 1))
     val df = spark.read.format("kegg-flat")
       .option("path", dir.toString).option("splitSize", "128").load()

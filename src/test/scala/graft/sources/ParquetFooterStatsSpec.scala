@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -22,7 +20,7 @@ class ParquetFooterStatsSpec extends SparkSpec {
 
   test("footer-derived LONG/STRING/DECIMAL manifest stats equal Spark's " +
       "per-file scan bounds; all-null columns record no bound") {
-    val dir = Files.createTempDirectory("graft_footer_stats").toString
+    val dir = scratch("graft_footer_stats")
     val df = spark.range(0L, 400L).toDF("k")
       .withColumn("s",
         when(col("k") % 7 === 0, lit("ätlas-"))
@@ -79,7 +77,7 @@ class ParquetFooterStatsSpec extends SparkSpec {
 
   test("DOUBLE stat batches keep the scan path: a NaN-carrying file still " +
       "records hi = NaN (parquet footers drop NaN and must not be used)") {
-    val dir = Files.createTempDirectory("graft_footer_nan").toString
+    val dir = scratch("graft_footer_nan")
     val df = spark.range(0L, 200L).toDF("k")
       .withColumn("x",
         when(col("k") === 150, lit(Double.NaN))

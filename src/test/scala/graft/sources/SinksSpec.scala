@@ -7,7 +7,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("chunkedCsv writes header CSVs capped at maxRecordsPerFile with escaping") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = scratch("graft-csv")
     val df = Seq(
       (1L, "it's|weird", Seq("x", "y")),
       (2L, "plain", Seq("z")),
@@ -31,7 +31,7 @@ class SinksSpec extends SparkSpec {
 
   test("writePartitioned: directory layout + partition pruning in the plan") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = scratch("graft-part")
     val li = graft.core.Tables.lineitem(spark, "/root/testdata/sf0.001")
       .withColumn("ship_year", year(col("l_shipdate")))
     Sinks.writePartitioned(li, dir, Seq("ship_year"))
@@ -49,8 +49,8 @@ class SinksSpec extends SparkSpec {
   test("compactParquet collapses a many-small-files table to the target " +
     "file count with identical content") {
     import org.apache.spark.sql.functions.col
-    val in = java.nio.file.Files.createTempDirectory("graft-small").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val in = scratch("graft-small")
+    val out = scratch("graft-compact")
     // 40 tiny files of 25 rows each
     spark.range(1000).select(col("id"), (col("id") % 7).as("v"))
       .repartition(40).write.mode("overwrite").parquet(in)
@@ -67,8 +67,8 @@ class SinksSpec extends SparkSpec {
   test("clusterParquet: output files cover disjoint key ranges (footer " +
     "min/max prune whole files for range predicates)") {
     import org.apache.spark.sql.functions.{col, max, min}
-    val in = java.nio.file.Files.createTempDirectory("graft-unclustered").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-clustered").toString
+    val in = scratch("graft-unclustered")
+    val out = scratch("graft-clustered")
     // hash-partitioned write: every file spans ~the full key range
     spark.range(2000).select(col("id"), (col("id") * 37 % 1000).as("k"))
       .repartition(8, col("id")).write.mode("overwrite").parquet(in)
@@ -91,8 +91,8 @@ class SinksSpec extends SparkSpec {
   test("zorderParquet: every file covers a small rectangle of BOTH key " +
     "domains (range clustering only bounds the leading key)") {
     import org.apache.spark.sql.functions.{col, max, min}
-    val in = java.nio.file.Files.createTempDirectory("graft-zin").toString
-    val outZ = java.nio.file.Files.createTempDirectory("graft-zout").toString
+    val in = scratch("graft-zin")
+    val outZ = scratch("graft-zout")
     // two independent 0..1023 keys, hash-scattered input layout
     spark.range(4096).select(
         (col("id") * 37 % 1024).as("x"), (col("id") * 101 % 1024).as("y"))
@@ -118,7 +118,7 @@ class SinksSpec extends SparkSpec {
 
   test("ORC round trip: content identical, predicate pushed to the ORC scan") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = scratch("graft-orc")
     val df = spark.range(1000).select(col("id"), (col("id") % 7).as("v"))
     df.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -133,8 +133,8 @@ class SinksSpec extends SparkSpec {
   test("upsertPartitioned: update wins, tombstone deletes, insert creates " +
     "a new partition, untouched partitions are NOT rewritten") {
     import org.apache.spark.sql.functions._
-    val baseDir = Files.createTempDirectory("graft-upsert-base").toString
-    val stage = Files.createTempDirectory("graft-upsert-stage").toString
+    val baseDir = scratch("graft-upsert-base")
+    val stage = scratch("graft-upsert-stage")
     val base = Seq(
       (1L, "one", "A", 0L, false),
       (2L, "two", "A", 0L, false),
@@ -186,7 +186,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("flatRecords + flatRecordFields parse ///-delimited keyword records") {
-    val path = Files.createTempFile("graft-flat", ".txt")
+    val path = java.nio.file.Paths.get(scratch("graft-flat"), "records.txt")
     Files.writeString(path,
       """ENTRY       H00001
         |NAME        Some disease
@@ -210,7 +210,7 @@ class SinksSpec extends SparkSpec {
   test("writeBlobs + binaryFile read round-trips exact bytes, one file " +
     "per row; the source SKIPS zero-byte files (documented contract)") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_blob_rt").toString
+    val dir = scratch("graft_blob_rt")
     val docs = Seq((1L, "alpha"), (2L, "Ünïcode ✓"), (3L, ""))
       .toDF("id", "text")
     Sinks.writeBlobs(docs.select($"id", encode($"text", "UTF-8").as("p")),

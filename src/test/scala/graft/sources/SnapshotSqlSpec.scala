@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,7 +13,7 @@ class SnapshotSqlSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(): String = {
-    val dir = Files.createTempDirectory("graft-snapsql").toString
+    val dir = scratch("graft-snapsql")
     val rows = (1L to 100L).map(k =>
       (k, s"n$k", k * 1.0, if (k % 2 == 0) "2024-01" else "2024-02"))
       .toDF("k", "name", "price", "month")
@@ -89,7 +87,7 @@ class SnapshotSqlSpec extends SparkSpec {
   test("MERGE INTO … USING (subquery) KEY/VERSION/TOMBSTONE routes to the " +
       "retrying upsert: update + tombstone + insert in one statement") {
     // the CDC contract: the table carries the version/tombstone columns
-    val dir = Files.createTempDirectory("graft-snapsql-cdc").toString
+    val dir = scratch("graft-snapsql-cdc")
     val base = (1L to 100L).map(k =>
       (k, s"n$k", k * 1.0, if (k % 2 == 0) "2024-01" else "2024-02",
         0L, false))
@@ -224,7 +222,7 @@ class SnapshotSqlSpec extends SparkSpec {
     }
     assert(exExtra.getMessage.contains("unexpected: bogus"))
     // INSERT into a never-created table is a create, not an append
-    val empty = Files.createTempDirectory("graft-snapsql-empty").toString
+    val empty = scratch("graft-snapsql-empty")
     val exEmpty = intercept[IllegalArgumentException] {
       SnapshotSql.exec(spark, s"INSERT INTO snap('$empty') " +
         "SELECT k, name, price, month FROM ins_batch")
@@ -265,7 +263,7 @@ class SnapshotSqlSpec extends SparkSpec {
       SnapshotSql.exec(spark, s"TRUNCATE snap('$dir')")
     }
     // a manifest without the partcol header (hand-built entries commit)
-    val dir2 = Files.createTempDirectory("graft-snapsql-old").toString
+    val dir2 = scratch("graft-snapsql-old")
     val rows = Seq((1L, "a", "p1")).toDF("k", "name", "p")
     val staged = SnapshotTable.stageBatch(rows, dir2, "p",
       SnapshotTable.newBatchTag(1L))

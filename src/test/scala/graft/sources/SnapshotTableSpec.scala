@@ -42,7 +42,7 @@ class SnapshotTableSpec extends SparkSpec {
     (9L, "i", 90.0, "2024-09"))
 
   test("overwrite + read round trip; upsert applies update/tombstone/insert") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     assert(v1 == 1L && SnapshotTable.currentVersion(dir) == 1L)
     assert(contents(SnapshotTable.read(spark, dir)) == contents(baseRows))
@@ -53,7 +53,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("untouched partitions are carried forward by manifest entry — same files, no rewrite") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val before = SnapshotTable.entries(dir).toMap
     SnapshotTable.upsert(spark, dir, updateRows,
@@ -68,7 +68,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("crash mid-commit: staged batch and even a prepared manifest stay invisible; " +
     "the pointer swap alone publishes") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val oldContents = contents(SnapshotTable.read(spark, dir))
 
@@ -101,7 +101,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("time travel: every committed version stays readable after later commits") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows,
       "month", Seq("k"), "version", "del")
@@ -110,7 +110,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("manifest-level partition pruning selects files before any is opened") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val pruned = SnapshotTable.readPartitions(spark, dir, Set("2024-02"))
     assert(contents(pruned) == Set((3L, "c", 30.0, "2024-02"), (4L, "d", 40.0, "2024-02")))
@@ -122,7 +122,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("replaying an already-applied batch is a fixed point (streaming replay contract)") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"), "version", "del")
     val once = contents(SnapshotTable.read(spark, dir))
@@ -132,7 +132,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("vacuum deletes only files outside the retention window; kept " +
     "versions stay readable, vacuumed ones are gone") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")                  // v1
     SnapshotTable.upsert(spark, dir, updateRows,
       "month", Seq("k"), "version", "del")                                  // v2
@@ -153,7 +153,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("diff classifies inserts/updates/deletes between versions and " +
     "never opens carry-forward partitions") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val v2 = SnapshotTable.upsert(spark, dir, updateRows,
       "month", Seq("k"), "version", "del")
@@ -179,7 +179,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("changeDeltas retraction fold: incremental view refresh equals the " +
     "full recompute, including a group emptied by deletes") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     // tombstone BOTH 2024-02 rows (group must leave the view), update k=1,
     // insert k=9 into a new month
@@ -215,7 +215,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("optimistic concurrency: a commit based on a stale version throws " +
     "instead of losing the interleaved writer's update") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     // writer A reads v1... writer B commits v2 in the meantime
     val v2 = SnapshotTable.upsert(spark, dir, updateRows,
@@ -239,7 +239,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("manifest file stats: range read prunes files without opening them; " +
     "result equals the exact filter; stats carry forward on upsert") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val rows = (0L until 1000L)
       .map(k => (k, s"n$k", k.toDouble, "p" + (k % 4), 0L, false))
       .toDF("k", "name", "price", "part", "version", "del")
@@ -276,7 +276,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("schema evolution: an add-column upsert null-fills old rows; " +
     "time travel projects each version to ITS schema") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     // the batch ADDS a `source` column the table has never seen
     val evolved = Seq(
@@ -319,7 +319,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("schema evolution flows through diff: the old side null-fills and " +
     "the added column's arrival reads as updates") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val evolved = Seq((1L, "a", 11.0, "2024-01", 1L, false, "api"))
       .toDF("k", "name", "price", "month", "version", "del", "source")
@@ -333,7 +333,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("two LIVE racing CAS writers: exactly one wins each version, the " +
     "loser's retry lands, final state equals serial application") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     // two threads each upsert a DISJOINT key into a DISJOINT partition,
     // retrying on CAS conflict exactly as the contract prescribes
@@ -365,7 +365,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("readAt of a vacuumed (or never-committed) version throws the " +
     "pinned error; empty-table reads degrade gracefully") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     // never-committed table: read() is an empty frame, readAt(1) throws
     assert(SnapshotTable.read(spark, dir).count() == 0)
     val exNever = intercept[IllegalArgumentException] {
@@ -384,14 +384,14 @@ class SnapshotTableSpec extends SparkSpec {
     // kept versions still read
     assert(contents(SnapshotTable.readAt(spark, dir, 2L)) == mergedWant)
     // a committed EMPTY table reads as an empty frame with the schema
-    val dir2 = Files.createTempDirectory("graft-snap").toString
+    val dir2 = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir2, baseRows.limit(0), "month")
     val empty = SnapshotTable.read(spark, dir2)
     assert(empty.count() == 0 && empty.columns.contains("price"))
   }
 
   test("vacuum leaves a staged-but-uncommitted future batch alone") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"), "version", "del")
     SnapshotTable.compact(spark, dir, "month")
@@ -410,7 +410,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("compactClustered restores manifest stats that plain compact loses; " +
     "content unchanged, skipping improves after scattered upserts") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val rows = (0L until 1000L)
       .map(k => (k, s"n$k", k.toDouble, "p" + (k % 4), 0L, false))
       .toDF("k", "name", "price", "part", "version", "del")
@@ -448,7 +448,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("changesSince: the polling change feed replays every version step; " +
     "an up-to-date consumer gets an empty frame; below the retention " +
     "window it fails loudly") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows,
       "month", Seq("k"), "version", "del")                          // v2
@@ -492,7 +492,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("compact folds live files into one batch, content unchanged") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"), "version", "del")
     val before = contents(SnapshotTable.read(spark, dir))
@@ -507,7 +507,7 @@ class SnapshotTableSpec extends SparkSpec {
   /** 100 keys clustered on k across two month partitions, stats in the
     * manifest — the layout the stats-pruned DML scoping needs. */
   private def dmlFixture(): String = {
-    val dir = Files.createTempDirectory("graft-snap-dml").toString
+    val dir = scratch("graft-snap-dml")
     val rows = (1L to 100L).map(k =>
       (k, s"n$k", k * 1.0, if (k % 2 == 0) "2024-01" else "2024-02"))
       .toDF("k", "name", "price", "month")
@@ -519,7 +519,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("overwriteZordered: manifest stats prune files on EITHER " +
       "interleaved column (linear clustering only prunes the leading " +
       "one); conjunction prunes hardest; content identical") {
-    val dir = Files.createTempDirectory("graft-snap-z").toString
+    val dir = scratch("graft-snap-z")
     // a 64×64 grid: k1 = row, k2 = column — range predicates on either
     // axis are narrow stripes of the plane
     val rows = (0 until 4096).map(i =>
@@ -552,7 +552,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("deleteWhere removes TRUE rows only (SQL semantics: NULL/FALSE " +
       "kept), time travel still sees them, diff reports them as deletes") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = scratch("graft-snap")
     val rows = Seq(
       (1L, Some(5L), "2024-01"), (2L, None, "2024-01"),
       (3L, Some(50L), "2024-02"), (4L, Some(7L), "2024-02"))
@@ -663,7 +663,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("the whole table lifecycle runs against an explicit file: URI — " +
       "the control plane is Hadoop FileSystem, not java.nio (a nio " +
       "Paths.get over a URI string would mangle every path)") {
-    val dir = "file:" + Files.createTempDirectory("graft-snap-uri").toString
+    val dir = "file:" + scratch("graft-snap-uri")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     assert(v1 == 1L && SnapshotTable.currentVersion(dir) == 1L)
     assert(contents(SnapshotTable.read(spark, dir)) == contents(baseRows))
@@ -702,7 +702,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("stageBatch splits a hot partition across multiple files " +
       "(rows/targetRowsPerFile sizing) and reads back byte-identical; " +
       "small partitions still stage one file each") {
-    val dir = Files.createTempDirectory("graft-snap-skew").toString
+    val dir = scratch("graft-snap-skew")
     // planted skew: 'hot' has 900 of 1000 rows, 'cold' has 100
     val rows = (0L until 1000L).map(k =>
       (k, s"n$k", if (k < 900) "hot" else "cold"))
@@ -743,7 +743,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("reads build their frames through the manifest index: no Spark " +
       "job (no listing of > 32 files), every scan via SnapshotFileIndex") {
-    val dir = Files.createTempDirectory("graft-snap-nolist").toString
+    val dir = scratch("graft-snap-nolist")
     val rows = spark.range(0L, 4000L).select(col("id").as("k"),
       concat(lit("n"), col("id").cast("string")).as("name"),
       lit("all").as("part"))
@@ -794,7 +794,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("stageBatch with NULL partition values: null-part rows stage into " +
       "the hive default directory and never break the slice map") {
-    val dir = Files.createTempDirectory("graft-snap-nullp").toString
+    val dir = scratch("graft-snap-nullp")
     val rows = (0L until 600L).map(k =>
       (k, s"n$k", if (k % 3 == 0) null else "p" + (k % 2)))
       .toDF("k", "name", "part")
@@ -811,7 +811,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("changesSinceOrRebase: within the window it IS changesSince; past " +
       "vacuum's grace it re-baselines with the full snapshot as inserts " +
       "and flags the consumer to replace its state") {
-    val dir = Files.createTempDirectory("graft-snap-rebase").toString
+    val dir = scratch("graft-snap-rebase")
     val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
     SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"),
       "version", "del")                                              // v2
@@ -844,7 +844,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("DML against a Z-ordered table restages with the FULL stat-column " +
       "set: the second dimension keeps its min/max on rewritten files, so " +
       "two-sided skipping survives row-level deletes") {
-    val dir = Files.createTempDirectory("graft-snap-zdml").toString
+    val dir = scratch("graft-snap-zdml")
     val rows = (0 until 4096).map(i =>
       (i.toLong, (i / 64).toLong, (i % 64).toLong, "all"))
       .toDF("id", "k1", "k2", "p")
@@ -882,7 +882,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("restore commits a FORWARD version equal to the old snapshot: " +
       "bad commits stay in history, zero data movement, diff sees the " +
       "restoration as ordinary change rows") {
-    val dir = Files.createTempDirectory("graft-snap-restore").toString
+    val dir = scratch("graft-snap-restore")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     SnapshotTable.deleteWhere(spark, dir, col("k") <= 2, "month")   // v2 (bad)
     assert(SnapshotTable.read(spark, dir).count() == 3)
@@ -911,7 +911,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("compactSmall folds ONLY partitions with several sub-threshold " +
       "files, carries well-sized files by entry, and restores stats on " +
       "the folded output") {
-    val dir = Files.createTempDirectory("graft-snap-opt").toString
+    val dir = scratch("graft-snap-opt")
     val rows = (0L until 400L).map(k =>
       (k, s"n$k", k.toDouble, "p" + (k % 2), 0L, false))
       .toDF("k", "name", "price", "part", "version", "del")
@@ -956,7 +956,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("history surfaces the retained commit trail newest-first with " +
       "recorded operations; vacuumed versions drop out") {
-    val dir = Files.createTempDirectory("graft-snap-hist").toString
+    val dir = scratch("graft-snap-hist")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"),
       "version", "del")                                             // v2
@@ -975,7 +975,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("a reader looping against LIVE commits always sees a consistent " +
       "whole snapshot — never a mix, never a transient metadata failure " +
       "(the checksum-sidecar race is retried away)") {
-    val dir = Files.createTempDirectory("graft-snap-race").toString
+    val dir = scratch("graft-snap-race")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     // valid counts: each commit i inserts one NEW key, so a consistent
     // snapshot at any moment counts 5 + i for some 0 <= i <= 12
@@ -1007,7 +1007,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("manifests record the partition column as table metadata " +
       "(#partcol header) and carry it across commits") {
-    val dir = Files.createTempDirectory("graft-snap-pc").toString
+    val dir = scratch("graft-snap-pc")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     assert(SnapshotTable.partColAt(dir, 1L) == Some("month"))
     val v2 = SnapshotTable.upsert(spark, dir, updateRows, "month",
@@ -1021,7 +1021,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("changesBetween folds wide version windows in bounded union groups " +
       "— a consumer far behind gets the same feed without an " +
       "O(versions)-wide plan") {
-    val dir = Files.createTempDirectory("graft-snap-wide").toString
+    val dir = scratch("graft-snap-wide")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     for (i <- 1 to 6)
       SnapshotTable.upsert(spark, dir,
@@ -1044,7 +1044,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("manifests record bytes:rows per file (fileMetaAt): lengths match " +
       "the filesystem, clustered staging counts rows, carried entries " +
       "keep their meta across commits") {
-    val dir = Files.createTempDirectory("graft-snap-meta").toString
+    val dir = scratch("graft-snap-meta")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     val meta1 = SnapshotTable.fileMetaAt(dir, 1L)
     val entries1 = SnapshotTable.entries(dir)
@@ -1056,7 +1056,7 @@ class SnapshotTableSpec extends SparkSpec {
       assert(rows == -1L, "plain staging does not count rows")
     }
     // clustered staging rides a stats scan — rows are free there
-    val dir2 = Files.createTempDirectory("graft-snap-meta2").toString
+    val dir2 = scratch("graft-snap-meta2")
     SnapshotTable.overwriteClustered(spark, dir2,
       baseRows.withColumn("k2", col("k")), "month",
       statsCols = Seq("k2"), rangeFiles = 2)
@@ -1076,7 +1076,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("STRING manifest stats: readRangeStr prunes files lexicographically " +
       "(UTF-8 byte order) and row-level DML preserves typed stats on " +
       "restaged files") {
-    val dir = Files.createTempDirectory("graft-snap-str").toString
+    val dir = scratch("graft-snap-str")
     // month correlates with k (50 keys per month) so the k-range
     // clustering also bands months — the layout string stats can skip on
     val rows = (0L until 600L).map(k =>
@@ -1136,7 +1136,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("DOUBLE manifest stats: readRangeDbl prunes files from bounds " +
       "alone, NaN rows never poison the bounds, and row-level DML " +
       "preserves the double stat on restaged files") {
-    val dir = Files.createTempDirectory("graft-snap-dbl").toString
+    val dir = scratch("graft-snap-dbl")
     // score tracks k (the clustering key) so range slices band scores;
     // every 97th row is NaN — the stats scan must mask it out of min/max
     val rows = (0L until 600L).map { k =>
@@ -1197,7 +1197,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("DECIMAL manifest stats: exact-numeric pruning (scale-insensitive " +
       "compare), plain-string round trip, DML restaging preserves them") {
-    val dir = Files.createTempDirectory("graft-snap-dec").toString
+    val dir = scratch("graft-snap-dec")
     val rows = (0L until 600L).map(k => (k, "p" + (k % 2))).toSeq
       .toDF("k", "part")
       .withColumn("amount",
@@ -1240,7 +1240,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("a partition value containing tab/newline/CR is rejected LOUDLY at " +
       "stage time — never written into the line-delimited manifest") {
-    val dir = Files.createTempDirectory("graft-snap-ctl").toString
+    val dir = scratch("graft-snap-ctl")
     val bad = Seq((1L, "a\tb"), (2L, "ok")).toDF("k", "part")
     val e = intercept[IllegalArgumentException] {
       SnapshotTable.overwrite(spark, dir, bad, "part")
@@ -1252,7 +1252,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("a malformed stats token (no '=') skips per the documented " +
       "contract instead of failing the whole read path") {
-    val dir = Files.createTempDirectory("graft-snap-badstat").toString
+    val dir = scratch("graft-snap-badstat")
     SnapshotTable.overwrite(spark, dir,
       Seq((1L, "p0")).toDF("k", "part"), "part")
     // hand-corrupt the stats field of the live manifest: a foreign writer
@@ -1288,7 +1288,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("commits between checkpoints write O(touched) delta manifests, " +
       "every version resolves exactly, and the Nth commit checkpoints — " +
       "bytes per commit is O(touched + live/N), never O(live)") {
-    val dir = Files.createTempDirectory("graft-snap-delta").toString
+    val dir = scratch("graft-snap-delta")
     // a wide v1 (many live files) makes the O(live)-vs-O(touched)
     // difference visible in manifest byte counts
     val wide = (0L until 400L).map(k => (k, "p" + (k % 40))).toSeq
@@ -1336,7 +1336,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("row-level DML through deltas records removes AND adds; stats " +
       "survive the chain; an overwrite-sized change falls back to a " +
       "full manifest even off-cadence") {
-    val dir = Files.createTempDirectory("graft-snap-dml-delta").toString
+    val dir = scratch("graft-snap-dml-delta")
     val rows = (0L until 300L).map(k => (k, "p" + (k % 3))).toSeq
       .toDF("k", "part")
     SnapshotTable.overwriteClustered(spark, dir, rows, "part",
@@ -1361,7 +1361,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("vacuum materializes the retention cutoff as a checkpoint before " +
       "deleting below it — delta chains never dangle past retention") {
-    val dir = Files.createTempDirectory("graft-snap-vac-delta").toString
+    val dir = scratch("graft-snap-vac-delta")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")       // v1 ckpt
     (2L to 6L).foreach { v =>
       SnapshotTable.append(spark, dir,
@@ -1384,7 +1384,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("a failed commit attempt discards its staged-batch metadata: the " +
       "size/row maps never grow across CAS losses (driver-JVM leak pin)") {
-    val dir = Files.createTempDirectory("graft-snap-leak").toString
+    val dir = scratch("graft-snap-leak")
     SnapshotTable.overwrite(spark, dir, baseRows, "month") // v1
     val before = SnapshotTable.stagedMetaCount
     // deterministically occupy manifest v2 WITHOUT moving the pointer:
@@ -1402,7 +1402,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("upsert with a narrow LONG key batch restages only files whose " +
       "recorded key stats overlap the batch; disjoint files carry forward " +
       "by identical path with their stats") {
-    val dir = Files.createTempDirectory("graft-snap-upsert-prune").toString
+    val dir = scratch("graft-snap-upsert-prune")
     val rows = (1L to 100L).map(k =>
       (k, s"n$k", k * 1.0, if (k % 2 == 0) "2024-01" else "2024-02",
         0L, false))

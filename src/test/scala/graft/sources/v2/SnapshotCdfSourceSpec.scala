@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -41,8 +39,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
 
   test("baseline + incremental: the first batch is the snapshot as " +
       "inserts, later commits arrive as per-version change windows") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     val q = startFeed(dir, ckpt, "cdf_sink1")
     q.processAllAvailable()
@@ -80,8 +78,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
 
   test("restart from the checkpoint resumes at the committed version — " +
       "no replayed baseline, no duplicated window") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     val got =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Double)]()
@@ -100,8 +98,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
 
   test("startingVersion skips the baseline: the first batch is the " +
       "changes after that version") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     SnapshotTable.upsert(spark, dir, upd(1L, "a", 12.0, "2024-01", 1L),
       "month", Seq("k"), "version", "del")                          // v2
@@ -113,8 +111,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
 
   test("the streamed feed equals the batch changesSince over the same " +
       "window (streamed ≡ batch, the house streaming contract)") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     val q = startFeed(dir, ckpt, "cdf_sink4",
       Map("startingVersion" -> "1"))
@@ -136,8 +134,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
   test("onVacuumedCheckpoint=rebase: a checkpoint below retention " +
       "RE-BASELINES (full snapshot as inserts, rebased=true) instead of " +
       "failing; incremental batches carry rebased=false") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     val got = new java.util.concurrent.ConcurrentLinkedQueue[
       (Long, String, Long, Double, Boolean)]()
@@ -184,8 +182,8 @@ class SnapshotCdfSourceSpec extends SparkSpec {
   test("schema-evolution replay: a crash-replayed PRE-evolution window " +
       "under a POST-evolution pinned schema null-fills the new column " +
       "instead of crashing the stream") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val dir = scratch("graft-cdf")
+    val ckpt = scratch("graft-cdf-ck")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     SnapshotTable.upsert(spark, dir, upd(1L, "a", 15.0, "2024-01", 1L),
       "month", Seq("k"), "version", "del")                          // v2 (old schema)
@@ -234,14 +232,14 @@ class SnapshotCdfSourceSpec extends SparkSpec {
 
   test("guardrails: missing keyCols refuses; vacuum past the checkpoint " +
       "fails the stream loudly (retention is the downtime budget)") {
-    val dir = Files.createTempDirectory("graft-cdf").toString
+    val dir = scratch("graft-cdf")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")
     intercept[IllegalArgumentException] {
       spark.readStream.format("graft-snapshot-cdf")
         .option("path", dir).load()
     }
     // checkpointed at v1, then the table advances and vacuums past it
-    val ckpt = Files.createTempDirectory("graft-cdf-ck").toString
+    val ckpt = scratch("graft-cdf-ck")
     val got =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Double)]()
     val q = startCollecting(dir, ckpt, got)
@@ -265,7 +263,7 @@ class SnapshotCdfSourceSpec extends SparkSpec {
   test("rebase covers the inverted replay window too: start ahead of a " +
       "vacuumed end re-baselines instead of throwing fromVersion-ahead; " +
       "the loud default still throws") {
-    val dir = Files.createTempDirectory("graft-cdf-inv").toString
+    val dir = scratch("graft-cdf-inv")
     SnapshotTable.overwrite(spark, dir, baseRows, "month")          // v1
     SnapshotTable.compact(spark, dir, "month")                      // v2
     SnapshotTable.compact(spark, dir, "month")                      // v3
@@ -277,7 +275,7 @@ class SnapshotCdfSourceSpec extends SparkSpec {
       val opts = Map("path" -> dir, "keyCols" -> "k") ++
         (if (rebase) Map("onVacuumedCheckpoint" -> "rebase") else Map.empty)
       new SnapshotCdfSource().createSource(spark.sqlContext,
-        Files.createTempDirectory("graft-cdf-md").toString, None,
+        scratch("graft-cdf-md"), None,
         "graft-snapshot-cdf", opts)
     }
     // the inconsistent window (from=3 exists, to=2 vacuumed, from > to):

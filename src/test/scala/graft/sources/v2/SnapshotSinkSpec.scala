@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -19,8 +17,8 @@ class SnapshotSinkSpec extends SparkSpec {
       "creates the table; the txn watermark tracks the last batch id") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sink").toString
-    val ckpt = Files.createTempDirectory("graft-sink-c").toString
+    val dir = scratch("graft-sink")
+    val ckpt = scratch("graft-sink-c")
     val ms = MemoryStream[(Long, String)]
     val q = ms.toDF().toDF("k", "part")
       .writeStream.format("graft-snapshot")
@@ -47,7 +45,7 @@ class SnapshotSinkSpec extends SparkSpec {
 
   test("replayed batch ids are SKIPPED (exactly-once): re-applying the " +
       "same (appId, batchId) commits nothing, a NEWER id commits") {
-    val dir = Files.createTempDirectory("graft-sink-replay").toString
+    val dir = scratch("graft-sink-replay")
     val sink = new SnapshotSource().createSink(spark.sqlContext,
       Map("path" -> dir, "partCol" -> "part", "txnAppId" -> "replayer"),
       Nil, OutputMode.Append())
@@ -72,7 +70,7 @@ class SnapshotSinkSpec extends SparkSpec {
 
   test("complete mode overwrites per trigger; update mode and a " +
       "create without partCol are refused loudly") {
-    val dir = Files.createTempDirectory("graft-sink-complete").toString
+    val dir = scratch("graft-sink-complete")
     val sink = new SnapshotSource().createSink(spark.sqlContext,
       Map("path" -> dir, "partCol" -> "part"), Nil, OutputMode.Complete())
     sink.addBatch(0L, Seq((1L, "p0"), (2L, "p1")).toDF("k", "part"))
@@ -88,7 +86,7 @@ class SnapshotSinkSpec extends SparkSpec {
     assert(exMode.getMessage.contains("streamingSnapshotUpsert"))
     val exPc = intercept[IllegalArgumentException] {
       new SnapshotSource().createSink(spark.sqlContext,
-        Map("path" -> Files.createTempDirectory("graft-sink-nopc").toString),
+        Map("path" -> scratch("graft-sink-nopc")),
         Nil, OutputMode.Append())
         .addBatch(0L, Seq((1L, "x")).toDF("k", "part"))
     }

@@ -17,7 +17,7 @@ class SnapshotSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def clusteredFixture(): String = {
-    val dir = Files.createTempDirectory("graft-snapsrc").toString
+    val dir = scratch("graft-snapsrc")
     val rows = (0L until 1000L).map(k =>
       (k, s"n$k", k.toDouble, "p" + (k % 4)))
       .toDF("k", "name", "price", "part")
@@ -69,7 +69,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("Z-ordered table: conjuncts on BOTH stat columns prune " +
       "multiplicatively through the format read") {
-    val dir = Files.createTempDirectory("graft-snapsrc-z").toString
+    val dir = scratch("graft-snapsrc-z")
     val rows = (0 until 4096).map(i =>
       (i.toLong, (i / 64).toLong, (i % 64).toLong, "all"))
       .toDF("id", "k1", "k2", "p")
@@ -164,7 +164,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("STRING stats prune files for range/equality predicates on a " +
       "string-statted column (the month >= '…' class); results exact") {
-    val dir = Files.createTempDirectory("graft-snapsrc-str").toString
+    val dir = scratch("graft-snapsrc-str")
     val rows = (0L until 1200L).map(k =>
       (k, f"2024-${k % 12 + 1}%02d", "p" + (k % 2)))
       .toDF("k", "month", "part")
@@ -194,7 +194,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("escaped partition values (':' etc.) prune and read correctly — " +
       "manifest speaks raw values, not directory encoding") {
-    val dir = Files.createTempDirectory("graft-snapsrc-esc").toString
+    val dir = scratch("graft-snapsrc-esc")
     val rows = (0L until 300L).map(k =>
       (k, s"n$k", "t:" + (k % 3), 0L, false)) // ':' Hive-escapes to %3A
       .toDF("k", "name", "part", "version", "del")
@@ -228,7 +228,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("pre-schema-header tables refuse the format read with a pointed " +
       "error; a missing versionAsOf manifest fails loudly") {
-    val dir = Files.createTempDirectory("graft-snapsrc-old").toString
+    val dir = scratch("graft-snapsrc-old")
     val rows = Seq((1L, "a", "p1")).toDF("k", "name", "p")
     val staged = SnapshotTable.stageBatch(rows, dir, "p",
       SnapshotTable.newBatchTag(1L))
@@ -246,7 +246,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("DOUBLE stats prune format reads from pushed filters; the " +
       "no-ceiling probe is NaN (Spark's total-order top), so an all-NaN " +
       "stat can never be pruned by a lower-bounded predicate") {
-    val dir = Files.createTempDirectory("graft-snapsrc-dbl").toString
+    val dir = scratch("graft-snapsrc-dbl")
     val rows = (0L until 1000L).map(k => (k, k.toDouble / 2.0, "all"))
       .toDF("k", "score", "p")
     SnapshotTable.overwriteClustered(spark, dir, rows, "p",
@@ -280,7 +280,7 @@ class SnapshotSourceSpec extends SparkSpec {
       "column through a widening cast); narrowing casts decline") {
     import org.apache.spark.sql.types.{Decimal, DecimalType}
     import org.apache.spark.sql.catalyst.expressions.{Cast => CCast}
-    val dir = Files.createTempDirectory("graft-snapsrc-dec").toString
+    val dir = scratch("graft-snapsrc-dec")
     val rows = (0L until 1000L).map(k => (k, "all")).toDF("k", "p")
       .withColumn("amount", (col("k") * 10).cast(DecimalType(12, 2)))
     SnapshotTable.overwriteClustered(spark, dir, rows, "p",
@@ -316,7 +316,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("df.write.format(graft-snapshot): create routes through the " +
       "clustered stats-carrying commit, append is a transactional " +
       "INSERT, schema mismatch rejects, modes behave") {
-    val dir = Files.createTempDirectory("graft-snapsrc-w").toString
+    val dir = scratch("graft-snapsrc-w")
     val rows = (0L until 200L).map(k => (k, s"n$k", "p" + (k % 2)))
       .toDF("k", "name", "part")
     // a create in any mode needs partCol
@@ -353,7 +353,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("concurrent writer-path appends serialize through the CAS retry " +
       "loop — both land, no lost update") {
-    val dir = Files.createTempDirectory("graft-snapsrc-race").toString
+    val dir = scratch("graft-snapsrc-race")
     (0L until 50L).map(k => (k, "p" + (k % 2))).toDF("k", "part")
       .write.format("graft-snapshot").mode("overwrite")
       .option("partCol", "part").save(dir)
@@ -374,7 +374,7 @@ class SnapshotSourceSpec extends SparkSpec {
 
   test("saveAsTable registers a snapshot table by IDENTIFIER and " +
       "spark.table / SQL resolve it back through the provider") {
-    val dir = Files.createTempDirectory("graft-snapsrc-cat").toString
+    val dir = scratch("graft-snapsrc-cat")
     val rows = (0L until 120L).map(k => (k, k.toDouble, "p" + (k % 3)))
       .toDF("k", "score", "part")
     rows.write.format("graft-snapshot").mode("overwrite")

@@ -22,8 +22,8 @@ class DedupStreamsSpec extends SparkSpec {
       (25L, "the quick brown fox jumps over the lazy cat"),
       (27L, "another corpus document about nothing in particular today"))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-incdedup").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-incdedup-c").toString
+    val out = scratch("graft-incdedup")
+    val ckpt = scratch("graft-incdedup-c")
     val ms = MemoryStream[(Long, String)]
     val q = DedupStreams.streamingCrossSnapshotDedup(
       ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text", out, ckpt)
@@ -61,8 +61,8 @@ class DedupStreamsSpec extends SparkSpec {
     val batch1 = Seq((11L, v(3)), (15L, v(21)))
     val batch2 = Seq((13L, v(3)), (17L, v(7)))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-embdedup").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-embdedup-c").toString
+    val out = scratch("graft-embdedup")
+    val ckpt = scratch("graft-embdedup-c")
     val ms = MemoryStream[(Long, Seq[Float])]
     val q = DedupStreams.streamingEmbNearDups(
       ms.toDF().toDF("vec_id", "embedding"), corpus, "vec_id", "embedding",
@@ -97,8 +97,8 @@ class DedupStreamsSpec extends SparkSpec {
       (25L, "the quick brown fox jumps over the lazy dog today"),
       (27L, "wholly novel second-batch material with zero overlap"))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-simdedup").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-simdedup-c").toString
+    val out = scratch("graft-simdedup")
+    val ckpt = scratch("graft-simdedup-c")
     val ms = MemoryStream[(Long, String)]
     val q = DedupStreams.streamingSimhashDedup(
       ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text", out, ckpt)
@@ -135,8 +135,8 @@ class DedupStreamsSpec extends SparkSpec {
       (30L, "totally unrelated content matching nothing else at all"))
     val batch3 = Seq((41L, a))
 
-    val state = java.nio.file.Files.createTempDirectory("graft-clstate").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-clstate-c").toString
+    val state = scratch("graft-clstate")
+    val ckpt = scratch("graft-clstate-c")
     val ms = MemoryStream[(Long, String)]
     val q = DedupStreams.streamingClusterMaintenance(
       ms.toDF().toDF("doc_id", "text"), "doc_id", "text", state, ckpt,

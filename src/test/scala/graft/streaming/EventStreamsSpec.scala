@@ -15,11 +15,10 @@ class EventStreamsSpec extends SparkSpec {
   /** The streaming file source wants a directory; stage the single parquet
     * file into one. */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events")
+    val dir = java.nio.file.Paths.get(scratch("graft-events"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
-    dir.toFile.deleteOnExit()
     dir.toString
   }
 
@@ -144,8 +143,8 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("foreachBatch parquet sink is restart-safe on the same checkpoint") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val out = scratch("graft-sink")
+    val ckpt = scratch("graft-ckpt")
     def runOnce(): Unit = {
       val stream = EventStreams.readEventStream(spark, eventsDir)
       val q = EventStreams.streamToParquet(
@@ -165,8 +164,8 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("crashed commit replays the batch idempotently (exactly-once sink)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
+    val out = scratch("graft-sink2")
+    val ckpt = scratch("graft-ckpt2")
     def runOnce(): Unit = {
       val stream = EventStreams.readEventStream(spark, eventsDir)
       val q = EventStreams.streamToParquet(

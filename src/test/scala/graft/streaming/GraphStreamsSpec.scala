@@ -22,8 +22,8 @@ class GraphStreamsSpec extends SparkSpec {
     val b2 = Seq((3L, 4L), (11L, 12L))
     val b3 = Seq((4L, 12L), (40L, 41L))
 
-    val state = java.nio.file.Files.createTempDirectory("graft-gstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-gstream-c").toString
+    val state = scratch("graft-gstream")
+    val ckpt = scratch("graft-gstream-c")
     val ms = MemoryStream[(Long, Long)]
     val q = GraphStreams.streamingComponentMaintenance(
       ms.toDF().toDF("src", "dst"), state, ckpt)
@@ -69,12 +69,9 @@ class GraphStreamsSpec extends SparkSpec {
       "snapshot table by upsert, the CDF stream folds each commit's " +
       "inserts, and the labeling equals the one-shot CC over the live table") {
     import graft.sources.SnapshotTable
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft-gcdf-table").toString
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-gcdf-state").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-gcdf-ck").toString
+    val tableDir = scratch("graft-gcdf-table")
+    val state = scratch("graft-gcdf-state")
+    val ckpt = scratch("graft-gcdf-ck")
     def edges(rows: Seq[(Long, Long)], v: Long) = rows
       .toDF("src", "dst")
       .withColumn("eid", col("src") * 1000 + col("dst"))

@@ -14,7 +14,7 @@ class SinkStreamsSpec extends SparkSpec {
     "merge of all changes; replaying a batch is a fixed point") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val mkDir = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+    val mkDir = (p: String) => scratch(p)
     val baseDir = mkDir("graft-cdc-base")
     val oneShotDir = mkDir("graft-cdc-oneshot")
     val stagingRoot = mkDir("graft-cdc-stage")
@@ -70,7 +70,7 @@ class SinkStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.sources.SnapshotTable
     implicit val sqlCtx = spark.sqlContext
-    val mkDir = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+    val mkDir = (p: String) => scratch(p)
     val tableDir = mkDir("graft-cdc-snap")
     val ckpt = mkDir("graft-cdc-snap-ckpt")
 
@@ -110,7 +110,7 @@ class SinkStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.sources.SnapshotTable
     implicit val sqlCtx = spark.sqlContext
-    val mkDir = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+    val mkDir = (p: String) => scratch(p)
     val tableDir = mkDir("graft-cdc-evo")
     val base = Seq((1L, "one", "A", 0L, false), (2L, "two", "B", 0L, false))
       .toDF("k", "payload", "p", "version", "del")

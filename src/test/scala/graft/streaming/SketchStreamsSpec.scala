@@ -14,8 +14,8 @@ class SketchStreamsSpec extends SparkSpec {
     val batch2 = (200 to 500).map(i => ("en", s"tok$i gamma")) ++
       Seq(("fr", "un deux trois"))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-hll").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hll-c").toString
+    val out = scratch("graft-hll")
+    val ckpt = scratch("graft-hll-c")
     val ms = MemoryStream[(String, String)]
     val q = SketchStreams.streamingHllRegisters(
       ms.toDF().toDF("lang", "text"), "text", "lang", out, ckpt)
@@ -54,8 +54,8 @@ class SketchStreamsSpec extends SparkSpec {
     val batch1 = (1 to 200).map(i => s"alpha tok$i common")
     val batch2 = (1 to 150).map(i => s"beta tok$i common")
 
-    val out = java.nio.file.Files.createTempDirectory("graft-cms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cms-c").toString
+    val out = scratch("graft-cms")
+    val ckpt = scratch("graft-cms-c")
     val ms = MemoryStream[String]
     val q = SketchStreams.streamingCmsCells(
       ms.toDF().toDF("text"), "text", out, ckpt)
@@ -105,8 +105,8 @@ class SketchStreamsSpec extends SparkSpec {
     val batch1 = (1 to 300).map(i => i.toLong * 7 % 997)
     val batch2 = (1 to 200).map(i => i.toLong * 13 % 997)
 
-    val out = java.nio.file.Files.createTempDirectory("graft-hist").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hist-c").toString
+    val out = scratch("graft-hist")
+    val ckpt = scratch("graft-hist-c")
     val ms = MemoryStream[Long]
     val q = SketchStreams.streamingHistogramBins(
       ms.toDF().toDF("v"), "v", out, ckpt)
@@ -141,8 +141,8 @@ class SketchStreamsSpec extends SparkSpec {
     val batch2 = (200 to 450).map(i => ("en", s"tok$i")) ++
       Seq(("fr", "un deux trois"))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-kmv").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kmv-c").toString
+    val out = scratch("graft-kmv")
+    val ckpt = scratch("graft-kmv-c")
     val ms = MemoryStream[(String, String)]
     val q = SketchStreams.streamingKmvSketch(
       ms.toDF().toDF("lang", "text"), "text", "lang", out, ckpt, k = 64)
@@ -210,8 +210,8 @@ class SketchStreamsSpec extends SparkSpec {
     val batch1 = Seq((1L, 100L, 1L), (1L, 250L, 1L), (2L, 40L, 1L))
     val batch2 = Seq((1L, 600L, 1L), (9L, 7L, 1L))
 
-    val out = java.nio.file.Files.createTempDirectory("graft-agg").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-agg-c").toString
+    val out = scratch("graft-agg")
+    val ckpt = scratch("graft-agg-c")
     val ms = MemoryStream[(Long, Long, Long)]
     val q = SketchStreams.streamingAggMaintain(
       ms.toDF().toDF("k", "rev_c", "n_orders"),
@@ -244,8 +244,8 @@ class SketchStreamsSpec extends SparkSpec {
     val b3 = Seq((5L, "alpha delta delta gamma", "news"))
     val all = b1 ++ b2 ++ b3
 
-    val out = java.nio.file.Files.createTempDirectory("graft-nbm").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nbm-c").toString
+    val out = scratch("graft-nbm")
+    val ckpt = scratch("graft-nbm-c")
     val ms = MemoryStream[(Long, String, String)]
     val q = SketchStreams.streamingNbModel(
       ms.toDF().toDF("doc_id", "text", "source"), "text", "source",

@@ -12,8 +12,8 @@ class ViewStreamsSpec extends SparkSpec {
   test("maintained view equals the one-shot join across interleaved batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_vs").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_vs_ck").toString
+    val root = scratch("graft_vs")
+    val ckpt = scratch("graft_vs_ck")
     // (side, k, av, bv) — irrelevant side's payload carried as null
     val ms = MemoryStream[(String, Long, String, String)]
     val q = ViewStreams.streamingJoinView(
@@ -40,7 +40,7 @@ class ViewStreamsSpec extends SparkSpec {
 
   test("replaying an epoch is idempotent: same bases, same bytes") {
     import graft.ops.ViewMaintain
-    val root = java.nio.file.Files.createTempDirectory("graft_vs_rp").toString
+    val root = scratch("graft_vs_rp")
     // committed epoch 0 bases
     Seq((1L, "a1")).toDF("k", "av").write.parquet(s"$root/base_a/delta_0")
     Seq((1L, "b1")).toDF("k", "bv").write.parquet(s"$root/base_b/delta_0")

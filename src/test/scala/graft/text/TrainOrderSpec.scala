@@ -1,6 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -68,7 +67,7 @@ class TrainOrderSpec extends SparkSpec {
   }
 
   test("writeShards: partitioned layout, in-file pos_in_shard order, lossless replay") {
-    val dir = Files.createTempDirectory("graft-shards").toString
+    val dir = scratch("graft-shards")
     val sharded = TrainPrep.shardAssign(docs, "doc_id", nShards = 8)
     TrainPrep.writeShards(sharded, dir)
     val dirs = new java.io.File(dir).listFiles()
