@@ -49,15 +49,15 @@ a continuous DOUBLE column would make the "bounded distinct-value
 domain" corpus-sized and re-admit the straggler through the whitelist.
 Continuous metrics must route through `Sketches.histogramBins` first.
 
-Skew policy for the big merge chains (round 6): JOIN-side skew is AQE's
-job — OptimizeSkewedJoin splits oversized partitions at runtime
-(activation proven on a planted-skew fixture in ScaleSpec: `skew=true`
-in the executed adaptive plan). AGGREGATION-side skew — a hot
-(gene, disease) key feeding the chain, where OptimizeSkewedJoin refuses
-to split full-outer joins — is the salted form's job:
-`gda_merged_salted` registers the 7-chain with `Scale.saltedAgg` (8
-salts) on its hot source under gda_merged's own oracle, so the salted
-plan's bit-equality is driver-enforced every round.
+Skew policy for the big merges: JOIN-side skew is AQE's job —
+OptimizeSkewedJoin splits oversized partitions at runtime (activation
+proven on a planted-skew fixture in ScaleSpec: `skew=true` in the
+executed adaptive plan). The four big merges (gda, dti, ppi,
+side_effect) are each one hash aggregation on their key, with no
+full-outer join left for a hot key to stall; `gda_merged_salted` is an
+alias of `gda_merged` and runs the same plan. Aggregation-side salting
+stays available as `Scale.saltedAgg`, whose equality with the direct
+aggregation and hot-key spread are pinned in ScaleSpec.
 
 Hyperplane-LSH sizing policy (round 6): the bucket domain is 2^planes, so
 `planes` must grow ~log₂(corpus) for the in-bucket join to stay bounded —

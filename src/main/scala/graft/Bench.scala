@@ -27,7 +27,7 @@ object Bench {
         if (i % 25 == 24) System.gc()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
         }

@@ -5,16 +5,15 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.Kernels
 
-/** Drug–target-interaction 5-way merge chain (node_data/drug.py analog,
+/** Drug–target-interaction 5-way merge (node_data/drug.py analog,
   * the reference's largest outer-join chain: drug.py:1054-1152).
   *
-  * Five "sources" (DrugBank, ChEMBL, KEGG, STITCH, Pharos) each produce a
-  * per-(drug,target) frame with their own payload columns from disjoint
-  * lineitem slices; the chained full-outer merge reconciles the shared
-  * `source` and `refs` columns by sorted set-union (A4/J2) and leaves each
-  * source's scores as passthrough columns — exactly the reference's
-  * column-twin coalescing discipline, with one shuffle per source on the
-  * (drug,target) key that Catalyst then reuses down the chain.
+  * Five "sources" (DrugBank, ChEMBL, KEGG, STITCH, Pharos) each contribute
+  * per-(drug,target) payload columns from disjoint lineitem slices; the
+  * merge reconciles the shared `source` and `refs` columns by sorted
+  * set-union (A4/J2) and keeps each source's scores as passthrough
+  * columns — the reference's column-twin coalescing discipline, computed
+  * in one hash aggregation on the (drug,target) key (see [[merged]]).
   */
 object DtiPipeline {
 
@@ -23,47 +22,6 @@ object DtiPipeline {
       col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
       col("l_shipdate"), col("l_quantity"), col("l_extendedprice"),
       col("l_discount"))
-
-  private def refs(c: org.apache.spark.sql.Column) =
-    Kernels.setJoinAgg(concat(lit("ref:"), c))
-
-  def drugbank(s: SparkSession, d: String): DataFrame =
-    slice(s, d).filter(col("l_returnflag") === "N" && col("l_linestatus") === "O")
-      .groupBy(col("drug"), col("target"))
-      .agg(sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("db_score"),
-        refs(col("l_orderkey")).as("refs"))
-      .withColumn("source", lit("drugbank"))
-
-  def chembl(s: SparkSession, d: String): DataFrame =
-    slice(s, d).filter(col("l_returnflag") === "N" && col("l_linestatus") === "F")
-      .groupBy(col("drug"), col("target"))
-      .agg(Kernels.median3(col("l_extendedprice")).as("pchembl"),
-        refs(col("l_orderkey")).as("refs"))
-      .withColumn("source", lit("chembl"))
-
-  def kegg(s: SparkSession, d: String): DataFrame =
-    slice(s, d).filter(col("l_returnflag") === "A")
-      .groupBy(col("drug"), col("target"))
-      .agg(Kernels.setJoinAgg(col("l_linestatus")).as("kegg_evidence"),
-        refs(col("l_orderkey")).as("refs"))
-      .withColumn("source", lit("kegg"))
-
-  def stitch(s: SparkSession, d: String): DataFrame =
-    slice(s, d).filter(col("l_returnflag") === "R"
-      && col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp"))
-      .groupBy(col("drug"), col("target"))
-      .agg(max(floor(lit(1000) * (lit(1) - col("l_discount"))).cast("long"))
-        .as("stitch_score"),
-        refs(col("l_orderkey")).as("refs"))
-      .withColumn("source", lit("stitch"))
-
-  def pharos(s: SparkSession, d: String): DataFrame =
-    slice(s, d).filter(col("l_returnflag") === "R"
-      && col("l_shipdate") >= lit("1998-01-01 00:00:00").cast("timestamp"))
-      .groupBy(col("drug"), col("target"))
-      .agg(count(lit(1)).as("pharos_n"),
-        refs(col("l_orderkey")).as("refs"))
-      .withColumn("source", lit("pharos"))
 
   /** BioCypher-style edge emit for the merged DTI table, conformed to the
     * schema registry's drug_targets_protein shape (S23 + P10). */
@@ -108,23 +66,24 @@ object DtiPipeline {
         "kegg_drug", "chembl"))
   }
 
-  /** The 5-chain merge (drug.py:1054,1079,1113,1137,1152). */
-  def merged(s: SparkSession, d: String): DataFrame =
-    Kernels.outerMergeChain(
-      Seq(drugbank(s, d), chembl(s, d), kegg(s, d), stitch(s, d), pharos(s, d)),
-      Seq("drug", "target"),
-      pipeCols = Set("source", "refs"))
-      .select(col("drug"), col("target"), col("source"), col("refs"),
-        col("db_score"), col("pchembl"), col("kegg_evidence"),
-        col("stitch_score"), col("pharos_n"))
-
-  /** Single-pass form of [[merged]] — same trick as
-    * GeneDiseasePipeline.mergedSinglePass: the five sources are disjoint
-    * lineitem slices (returnflag × linestatus × ship-date cover the whole
-    * domain), so the 5-scan/4-outer-join chain collapses to ONE scan and
-    * ONE conditional aggregation with identical output. Registered under
-    * the chain's own oracle SQL, so the driver enforces bit-equality. */
-  def mergedSinglePass(s: SparkSession, d: String): DataFrame = {
+  /** The 5-way merge (merge steps at drug.py:1054, 1079, 1113, 1137,
+    * 1152) as ONE scan and ONE conditional aggregation: the five sources
+    * are disjoint lineitem slices (returnflag × linestatus × ship date
+    * cover the whole domain), so each source's aggregate becomes a
+    * `when(slice, …)` aggregate and the chain's sorted pipe-merges become
+    * presence-guarded concat (source) and one set-union (refs).
+    * Source → slice → output column, in the chain's merge order:
+    *
+    *  - drugbank: returnflag N, linestatus O → `db_score` = sum of
+    *    l_quantity;
+    *  - chembl: returnflag N, linestatus F → `pchembl` = 3-dp median of
+    *    l_extendedprice;
+    *  - kegg: returnflag A → `kegg_evidence`;
+    *  - stitch: returnflag R, shipped before 1998 → `stitch_score` = max
+    *    of 1000·(1 − l_discount);
+    *  - pharos: returnflag R, shipped from 1998 → `pharos_n` = row count.
+    */
+  def merged(s: SparkSession, d: String): DataFrame = {
     val li = slice(s, d)
     val cut = lit("1998-01-01 00:00:00").cast("timestamp")
     val s1 = col("l_returnflag") === "N" && col("l_linestatus") === "O"

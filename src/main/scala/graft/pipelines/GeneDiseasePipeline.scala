@@ -12,14 +12,12 @@ import graft.ops.Kernels
   * Seven disjoint order-priority slices of lineitem⋈orders play the seven
   * sources (OpenTargets, ClinVar, DisGeNET GDA/VDA, HumSaVar, KEGG,
   * DISEASES-knowledge); gene = supplier key, disease = customer key under a
-  * `mondo:` CURIE. The OpenTargets slice arrives keyed by customer NAME and
-  * resolves through a two-step fallback mapping chain (J5) before the merge
-  * — exactly the reference's "UMLS first, then vocabulary" priority.
+  * `mondo:` CURIE.
   *
-  * Scale: each slice is one filtered scan + one hash aggregate on the
-  * (gene, disease) key; the 7-way chain then reuses that partitioning for
-  * every join (6 shuffle-free joins after the first co-partitioning at
-  * cluster scale); the only broadcasts are the customer-name mapping dims.
+  * Scale: the whole merge is one lineitem⋈orders join and one hash
+  * aggregation on the (gene, disease) key, where the reference's chain
+  * shape pays seven aggregations and six full-outer joins. No driver
+  * state.
   */
 object GeneDiseasePipeline {
 
@@ -33,127 +31,30 @@ object GeneDiseasePipeline {
 
   private def disease(c: org.apache.spark.sql.Column) = ColFns.curie("mondo", c)
 
-  private def refs = Kernels.setJoinAgg(concat(lit("ref:"), col("l_orderkey")))
-
-  /** OpenTargets analog: diseases arrive as customer NAMES and resolve via
-    * the J5 fallback chain (preferred vocabulary first, then the full
-    * mapping), then aggregate. */
-  def opentargets(s: SparkSession, d: String): DataFrame =
-    opentargetsFrom(base(s, d), s, d)
-
-  private def opentargetsFrom(b: DataFrame, s: SparkSession,
-      d: String): DataFrame = {
-    val named = b.filter(col("prio") === "1-URGENT")
-      .join(broadcast(Tables.customer(s, d)
-        .select(col("c_custkey").as("o_custkey"), col("c_name"))), Seq("o_custkey"))
-    val primary = Tables.customer(s, d).filter(col("c_acctbal") > 0)
-      .select(col("c_name").as("from_id"), col("c_custkey").as("to_id"))
-    val fallback = Tables.customer(s, d)
-      .select(col("c_name").as("from_id"), col("c_custkey").as("to_id"))
-    Kernels.fallbackMap(named, col("c_name"), Seq(primary, fallback))
-      .groupBy(col("gene"), disease(col("resolved")).as("disease"))
-      .agg(max(col("o_totalprice")).as("ot_score"), refs.as("refs"))
-      .withColumn("source", lit("opentargets"))
-  }
-
-  def clinvar(s: SparkSession, d: String): DataFrame =
-    clinvarFrom(base(s, d))
-
-  private def clinvarFrom(b: DataFrame): DataFrame =
-    b.filter(col("prio") === "2-HIGH")
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(Kernels.effectFoldWithUnknown(col("o_orderstatus"), "P").as("clin_sig"),
-        refs.as("refs"))
-      .withColumn("source", lit("clinvar"))
-
-  def disgenetGda(s: SparkSession, d: String): DataFrame =
-    disgenetGdaFrom(base(s, d))
-
-  private def disgenetGdaFrom(b: DataFrame): DataFrame =
-    b.filter(col("prio") === "3-MEDIUM" && col("l_returnflag") === "N")
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(Kernels.median3(col("l_extendedprice")).as("gda_score"), refs.as("refs"))
-      .withColumn("source", lit("disgenet_gda"))
-
-  def disgenetVda(s: SparkSession, d: String): DataFrame =
-    disgenetVdaFrom(base(s, d))
-
-  private def disgenetVdaFrom(b: DataFrame): DataFrame =
-    b.filter(col("prio") === "3-MEDIUM" && col("l_returnflag") =!= "N")
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(Kernels.setJoinAgg(concat(lit("rs"), col("l_orderkey"))).as("variants"),
-        refs.as("refs"))
-      .withColumn("source", lit("disgenet_vda"))
-
-  def humsavar(s: SparkSession, d: String): DataFrame =
-    humsavarFrom(base(s, d))
-
-  private def humsavarFrom(b: DataFrame): DataFrame =
-    b.filter(col("prio") === "4-NOT SPECIFIED")
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(Kernels.conflictFold(col("l_returnflag")).as("variant_category"),
-        refs.as("refs"))
-      .withColumn("source", lit("humsavar"))
-
-  def kegg(s: SparkSession, d: String): DataFrame =
-    keggFrom(base(s, d))
-
-  private def keggFrom(b: DataFrame): DataFrame =
-    b.filter(col("prio") === "5-LOW" && col("l_linestatus") === "F")
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(Kernels.setJoinAgg(col("l_linestatus")).as("kegg_evidence"),
-        refs.as("refs"))
-      .withColumn("source", lit("kegg"))
-
-  /** `salts` > 0 switches the aggregation to the two-phase salted form
-    * (Scale.saltedAgg): a hot (gene, disease) key — one disease studied by
-    * thousands of papers is the realistic 100 TB skew — spreads over
-    * `salts` reducers in the partial phase; the final merge is algebraic
-    * (count → sum, set-join → distinct-flatten), so the result is
-    * IDENTICAL to the direct group-by (equality + hot-key-spread proven in
-    * ScaleSpec). Off by default: at benign skew the extra shuffle isn't
-    * free, and AQE's skew handling cannot help here anyway (skew sits in
-    * the aggregation feeding a full-outer chain, which OptimizeSkewedJoin
-    * refuses to split). */
-  def diseasesKnowledge(s: SparkSession, d: String, salts: Int = 0): DataFrame =
-    diseasesKnowledgeFrom(base(s, d), salts)
-
-  private def diseasesKnowledgeFrom(base: DataFrame, salts: Int): DataFrame = {
-    val b = base.filter(col("prio") === "5-LOW" && col("l_linestatus") =!= "F")
-    val direct = b
-      .groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
-      .agg(count(lit(1)).as("knowledge_conf"), refs.as("refs"))
-    val agg =
-      if (salts <= 0) direct
-      else graft.ops.Scale.saltedAgg(
-        b.select(col("gene"), disease(col("o_custkey")).as("disease"),
-          concat(lit("ref:"), col("l_orderkey")).as("__ref")),
-        Seq("gene", "disease"), salts,
-        Seq((count(lit(1)), "knowledge_conf"),
-          (collect_set(col("__ref")), "__refs_part")),
-        {
-          case "knowledge_conf" => sum(col("knowledge_conf"))
-          case n => array_sort(array_distinct(flatten(collect_list(col(n)))))
-        })
-        .withColumn("refs", concat_ws("|", col("__refs_part")))
-        .drop("__refs_part")
-    agg.withColumn("source", lit("diseases_knowledge"))
-  }
-
-  /** Single-pass form of [[merged]] — the 100 TB plan. The 7-chain form
-    * scans lineitem⋈orders once PER SOURCE (7 scans, 6 outer joins, ~14
-    * exchanges): faithful to the reference's merge structure, but at scale
-    * that is 7× the fact-table IO for slices that are disjoint by
-    * construction (every row falls in exactly one priority slice, and the
-    * OpenTargets name-mapping chain resolves to the identity on this
-    * data). This variant computes the identical result as ONE conditional
-    * aggregation over ONE scan: per-source measures become `when(slice,
-    * …)` aggregates (null-ignoring, so each aggregates exactly its slice),
-    * source/refs pipe-merges become presence-guarded concat / one global
-    * set-union. Bit-equality with the chain (and with the chain's DuckDB
-    * oracle) is enforced by registering it under the SAME oracle SQL.
+  /** The 7-way merge (disease.py:1225-1291) as ONE conditional
+    * aggregation over ONE lineitem⋈orders scan. Every row falls in exactly
+    * one source slice, so each source's aggregate becomes a `when(slice,
+    * …)` aggregate (null-ignoring, so it sees exactly its slice) and the
+    * chain's sorted pipe-merges become presence-guarded concat (source)
+    * and one set-union (refs). Source → slice → output column:
+    *
+    *  - opentargets: prio 1-URGENT → `ot_score` = max(o_totalprice). The
+    *    reference resolves names through a fallback chain (J5,
+    *    disease.py:1631-1654); on this data that chain is the identity
+    *    (customer names are unique), so the key is `o_custkey` directly.
+    *  - clinvar: prio 2-HIGH → `clin_sig`, the effect fold of
+    *    o_orderstatus with "P" as the unknown value.
+    *  - disgenet_gda: prio 3-MEDIUM, returnflag N → `gda_score`, the
+    *    3-dp median of l_extendedprice (disease.py:932).
+    *  - disgenet_vda: prio 3-MEDIUM, returnflag ≠ N → `variants`
+    *    (disease.py:949).
+    *  - humsavar: prio 4-NOT SPECIFIED → `variant_category`, the
+    *    conflict fold of l_returnflag.
+    *  - kegg: prio 5-LOW, linestatus F → `kegg_evidence`.
+    *  - diseases_knowledge: prio 5-LOW, linestatus ≠ F →
+    *    `knowledge_conf` = row count.
     */
-  def mergedSinglePass(s: SparkSession, d: String): DataFrame = {
+  def merged(s: SparkSession, d: String): DataFrame = {
     val b = base(s, d)
     val p1 = col("prio") === "1-URGENT"
     val p2 = col("prio") === "2-HIGH"
@@ -164,20 +65,16 @@ object GeneDiseasePipeline {
     val p7 = col("prio") === "5-LOW" && col("l_linestatus") =!= "F"
     val ref = concat(lit("ref:"), col("l_orderkey"))
     def cnt(p: org.apache.spark.sql.Column) = count(when(p, lit(1)))
-    // clinvar's effect fold / humsavar's conflict fold over their slices
-    val clinSet = array_sort(collect_set(when(p2, col("o_orderstatus"))))
-    val varSet = collect_set(when(p5, col("l_returnflag")))
     b.groupBy(col("gene"), disease(col("o_custkey")).as("disease"))
       .agg(
         max(when(p1, col("o_totalprice"))).as("ot_score"),
-        when(size(clinSet) === 1, element_at(clinSet, 1))
-          .when(size(clinSet) === 2 && element_at(clinSet, 2) === "P",
-            element_at(clinSet, 1)).as("clin_sig"),
+        Kernels.effectFoldWithUnknown(when(p2, col("o_orderstatus")), "P")
+          .as("clin_sig"),
         Kernels.median3(when(p3, col("l_extendedprice"))).as("gda_score"),
         when(cnt(p4) > 0,
           Kernels.setJoinAgg(when(p4, concat(lit("rs"), col("l_orderkey")))))
           .as("variants"),
-        when(size(varSet) === 1, element_at(varSet, 1)).as("variant_category"),
+        Kernels.conflictFold(when(p5, col("l_returnflag"))).as("variant_category"),
         when(cnt(p6) > 0, Kernels.setJoinAgg(when(p6, col("l_linestatus"))))
           .as("kegg_evidence"),
         when(cnt(p7) > 0, cnt(p7)).as("knowledge_conf"),
@@ -187,28 +84,6 @@ object GeneDiseasePipeline {
           when(cnt(p3) > 0, "disgenet_gda"), when(cnt(p4) > 0, "disgenet_vda"),
           when(cnt(p5) > 0, "humsavar"), when(cnt(p6) > 0, "kegg"),
           when(cnt(p1) > 0, "opentargets")).as("source"))
-      .select(col("gene"), col("disease"), col("source"), col("refs"),
-        col("ot_score"), col("clin_sig"), col("gda_score"), col("variants"),
-        col("variant_category"), col("kegg_evidence"), col("knowledge_conf"))
-  }
-
-  /** The 7-chain merge (disease.py:1225-1291). `salts` forwards to the
-    * skew-prone aggregation (see [[diseasesKnowledge]]). */
-  def merged(s: SparkSession, d: String, salts: Int = 0): DataFrame = {
-    // ONE eager cut of the shared fact join: the chain's seven sources
-    // are disjoint slices of the SAME lineitem⋈orders projection, and
-    // without the cut each source's aggregate replays that scan+join —
-    // 7 fact scans for one chain. The cut keeps the reference-faithful
-    // structure (7 aggregations, 6 full-outer joins) and only
-    // de-duplicates their shared input (guide §1.2 / §5; the
-    // mergedSinglePass twin remains the registered 100 TB plan).
-    val b = base(s, d).localCheckpoint(true)
-    Kernels.outerMergeChain(
-      Seq(opentargetsFrom(b, s, d), clinvarFrom(b), disgenetGdaFrom(b),
-        disgenetVdaFrom(b), humsavarFrom(b), keggFrom(b),
-        diseasesKnowledgeFrom(b, salts)),
-      Seq("gene", "disease"),
-      pipeCols = Set("source", "refs"))
       .select(col("gene"), col("disease"), col("source"), col("refs"),
         col("ot_score"), col("clin_sig"), col("gda_score"), col("variants"),
         col("variant_category"), col("kegg_evidence"), col("knowledge_conf"))

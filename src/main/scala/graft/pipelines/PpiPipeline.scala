@@ -17,159 +17,48 @@ import graft.ops.Kernels
   * Here the "interactome" is derived deterministically from the driver's
   * star schema: proteins ≈ suppliers, an interaction ≈ two suppliers
   * co-supplying one order, a publication ≈ the order. Three disjoint
-  * ship-date slices play IntAct / BioGRID / STRING:
+  * ship-date slices play IntAct / BioGRID / STRING (see [[merged]] for the
+  * per-source mapping).
   *
-  *  - intact  (≤1996): mi-score analog = mean line discount, method =
-  *    linestatus, pubmed list per pair;
-  *  - biogrid (1997): no score — partners arrive as NAMES (the reference's
-  *    gene symbols, ppi.py:198-226) and are resolved to keys via a broadcast
-  *    symbol→id mapping join;
-  *  - string  (≥1998): integer combined_score ∈ [0,1000] with the
-  *    reference's ≥700 high-confidence threshold (ppi.py:307), rescaled to
-  *    [0,1] at merge time (ppi.py:449 coalesce semantics).
-  *
-  * Scale notes (100 TB): pair generation self-joins lineitem on l_orderkey —
-  * one hash shuffle on the order key, group size bounded by order width (no
-  * skew); per-source dedup and the merge chain all share the (a,b) hash
-  * partitioning, so Catalyst reuses the exchange; the only broadcast is the
-  * supplier dimension. No driver-side collection anywhere.
+  * Scale notes (100 TB): the whole integration is one pass. Pair
+  * generation self-joins lineitem on l_orderkey once for all three slices
+  * (same-slice pairs only): one hash shuffle on the order key, group size
+  * bounded by order width (no skew), never a broadcast fact side. The
+  * three keep-bests, the pubmed union and the source merge are one hash
+  * aggregation on (a, b); node and edge emits read that one aggregate.
+  * The only broadcast is the reviewed-supplier set. No driver-side
+  * collection anywhere.
   */
 object PpiPipeline {
 
-  /** Pair orientation is canonicalized at generation (a < b) — pairs are
-    * born undirected here, so the reference's frozenset dedup (D2) reduces
-    * to keyed dedup; orientation-preserving dedup over raw directed rows is
-    * exercised by the d2_undirected_dedup query. */
-  private def pairsInWindow(
-      s: SparkSession, d: String, lo: String, hi: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(lo).cast("timestamp")
-        && col("l_shipdate") < lit(hi).cast("timestamp"))
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"),
-        col("l_discount"), col("l_linestatus"), col("l_returnflag"))
-    val a = li.toDF("l_orderkey", "sk_a", "ln_a", "disc_a", "ls_a", "rf_a")
-    val b = li.toDF("l_orderkey", "sk_b", "ln_b", "disc_b", "ls_b", "rf_b")
-    // fact×fact: shuffle on the order key, never broadcast a fact side
-    // (see mergedSinglePass — same rationale and same measured win)
-    a.join(b.hint("shuffle_hash"), Seq("l_orderkey"))
-      .filter(col("sk_a") < col("sk_b"))
-  }
-
-  /** SwissProt-set analog: suppliers considered "reviewed". */
-  private def reviewed(s: SparkSession, d: String): DataFrame =
-    Tables.supplier(s, d).filter(col("s_acctbal") > 1000).select(col("s_suppkey"))
-
-  private def curiePair(df: DataFrame): DataFrame = df
-    .withColumn("a", ColFns.curie("supp", col("sk_a")))
-    .withColumn("b", ColFns.curie("supp", col("sk_b")))
-
-  /** Keep-best row per pair + pubmed set-union — the reference's
-    * sort→groupby("first") + `"|".join(set(pubmeds))` (ppi.py:135-140) —
-    * in ONE aggregation over one (a,b) exchange: the former window +
-    * separate aggregate + join form re-evaluated the fact×fact self-join
-    * subtree per consumer (the window's exchange and the partial-agg
-    * exchange differ, so Catalyst reuses neither — the plan audit counted
-    * the self-join twice per source) and paid a per-pair sort. `min_by`
-    * over the caller's order struct picks the identical winner: the
-    * tie-break chains cover every emitted column, the same equivalence
-    * [[mergedSinglePass]] rides. `orderKey` must encode descending
-    * components negated. */
-  private def bestPlusPubmeds(
-      pairs: DataFrame, orderKey: Column, keep: Seq[Column]): DataFrame =
-    pairs.groupBy(col("a"), col("b"))
-      .agg(min_by(struct(keep: _*), orderKey).as("__best"),
-        Kernels.setJoinAgg(concat(lit("pmid:"), col("l_orderkey"))).as("pubmeds"))
-      .select(col("a"), col("b"), col("__best.*"), col("pubmeds"))
-
-  /** IntAct raw pairs: windowed, SwissProt-filtered, scored. */
-  private[pipelines] def intactRawPairs(s: SparkSession, d: String): DataFrame = {
-    val rev = reviewed(s, d)
-    curiePair(
-      pairsInWindow(s, d, "1995-01-01 00:00:00", "1997-01-01 00:00:00"))
-      .join(broadcast(rev), col("sk_a") === col("s_suppkey"), "left_semi")
-      .join(broadcast(rev), col("sk_b") === col("s_suppkey"), "left_semi")
-      .withColumn("score", (col("disc_a") + col("disc_b")) / 2)
-  }
-
-  /** IntAct analog: score + method + pubmeds. */
-  def intact(s: SparkSession, d: String): DataFrame = {
-    val pairs = intactRawPairs(s, d)
-    // tie-break chain covers every emitted column (ls_a = method): rows
-    // fully tied on it are interchangeable, so the winner is well-defined
-    // even though (l_orderkey, l_linenumber) is not unique in the data
-    bestPlusPubmeds(pairs,
-      struct(negate(col("score")), col("l_orderkey"), col("ln_a"),
-        col("ln_b"), col("ls_a")),
-      Seq(col("score"), col("ls_a").as("method")))
-      .withColumn("source", lit("intact"))
-  }
-
-  /** BioGRID analog: partners arrive as upper-cased names and resolve to
-    * keys through a broadcast symbol→id mapping (ppi.py:198-226); no score,
-    * first-seen row wins (order-key arrival order made explicit). */
-  private[pipelines] def biogridRawPairs(s: SparkSession, d: String): DataFrame = {
-    // mapping dict is built from reviewed entries only (ppi.py:209-226 maps
-    // symbols through the SwissProt set) → unmapped partners drop out below
-    val symbolMap = Tables.supplier(s, d).filter(col("s_acctbal") > 1000)
-      .select(upper(col("s_name")).as("symbol"), col("s_suppkey").as("mapped"))
-    val named = pairsInWindow(s, d, "1997-01-01 00:00:00", "1998-01-01 00:00:00")
-      .join(broadcast(Tables.supplier(s, d)
-        .select(col("s_suppkey").as("sk_a"), upper(col("s_name")).as("sym_a"))), Seq("sk_a"))
-      .join(broadcast(Tables.supplier(s, d)
-        .select(col("s_suppkey").as("sk_b"), upper(col("s_name")).as("sym_b"))), Seq("sk_b"))
-      .drop("sk_a", "sk_b")
-    // resolve symbols back to keys (the mapping join the reference does)
-    val resolved = named
-      .join(broadcast(symbolMap.toDF("sym_a", "rk_a")), Seq("sym_a"))
-      .join(broadcast(symbolMap.toDF("sym_b", "rk_b")), Seq("sym_b"))
-      .na.drop(Seq("rk_a", "rk_b"))
-      .withColumnRenamed("rk_a", "sk_a").withColumnRenamed("rk_b", "sk_b")
-    curiePair(resolved)
-      .withColumn("method", concat(lit("exp:"), col("ls_a")))
-  }
-
-  def biogrid(s: SparkSession, d: String): DataFrame = {
-    val pairs = biogridRawPairs(s, d)
-    bestPlusPubmeds(pairs,
-      struct(col("l_orderkey"), col("ln_a"), col("ln_b"), col("method")),
-      Seq(col("method")))
-      .withColumn("source", lit("biogrid"))
-  }
-
-  /** STRING analog: integer combined score, high-confidence ≥700 filter
-    * (ppi.py:307), no pubmeds/method. */
-  private[pipelines] def stringRawPairs(s: SparkSession, d: String): DataFrame =
-    curiePair(
-      pairsInWindow(s, d, "1998-01-01 00:00:00", "2099-01-01 00:00:00"))
-      .withColumn("combined_score",
-        floor(lit(1000) * (lit(1) - (col("disc_a") + col("disc_b")) / 2)).cast("long"))
-      .filter(col("combined_score") >= 700)
-
-  def string(s: SparkSession, d: String): DataFrame = {
-    val pairs = stringRawPairs(s, d)
-    // same one-agg keep-best as [[bestPlusPubmeds]] (no pubmeds here):
-    // the rank-1 window paid a per-pair sort over the self-join output
-    pairs.groupBy(col("a"), col("b"))
-      .agg(min_by(col("combined_score"),
-        struct(negate(col("combined_score")), col("l_orderkey"),
-          col("ln_a"), col("ln_b"))).as("combined_score"))
-      .select(col("a"), col("b"),
-        (col("combined_score").cast("double") / 1000).as("string_score"))
-      .withColumn("source", lit("string"))
-  }
-
-  /** Single-pass form of [[merged]] — the 100 TB plan. The chain runs the
-    * expensive lineitem self-join once PER SOURCE; the three windows are
-    * disjoint ship-date slices, so ONE windowed self-join (same-window
-    * pairs only) plus ONE conditional aggregation produces the identical
-    * result: per-source keep-bests become `min_by` over per-source
-    * ordering structs (the tie chains cover every emitted column, so
-    * `min_by` and the rank-1 window pick identical values), pubmed/source
-    * merges become presence-guarded set-unions. The biogrid symbol round
-    * trip resolves to the reviewed-membership filter (supplier names are
-    * unique — same equivalence the oracle uses). Registered under the
-    * chain's own oracle SQL → driver-enforced bit-equality. */
-  def mergedSinglePass(s: SparkSession, d: String): DataFrame = {
+  /** merge_all (ppi.py:382-484) as ONE windowed self-join plus ONE
+    * conditional aggregation on the pair key. The reference's per-source
+    * steps map onto slices of that one pass:
+    *
+    *  - intact (ppi.py:97-151): ship date in [1995, 1997), both partners
+    *    reviewed, score = mean discount, method = linestatus; keep-best by
+    *    (score DESC, l_orderkey, ln_a, ln_b, method).
+    *  - biogrid (ppi.py:153-263): ship date in [1997, 1998), both partners
+    *    reviewed (the symbol→id round trip of :198-226 keeps exactly the
+    *    reviewed suppliers, whose names are unique), method = "exp:" +
+    *    linestatus; first-seen by (l_orderkey, ln_a, ln_b, method).
+    *  - string (ppi.py:266-379): ship date ≥ 1998, combined score
+    *    ≥ 700 (:307); keep-best by (score DESC, l_orderkey, ln_a, ln_b),
+    *    rescaled to [0,1] (:449).
+    *  - merge (ppi.py:382-484): source and pubmeds (intact ∪ biogrid) are
+    *    sorted set-unions; method coalesces intact > biogrid, score
+    *    coalesces intact > string.
+    *
+    * Pairs are canonicalized at generation (a < b), so the reference's
+    * frozenset dedup reduces to the group key.
+    *
+    * Keep-best contract: `min_by` over an ordering struct puts nulls first
+    * and NaN last, the reverse of the `score DESC` window order it stands
+    * for, so every ordering component must be non-null and non-NaN. Here
+    * every component is a non-null lineitem column; the outer `when`
+    * only nulls the whole struct, which `min_by` skips, to confine each
+    * keep-best to its own slice. */
+  def merged(s: SparkSession, d: String): DataFrame = {
     val cut95 = lit("1995-01-01 00:00:00").cast("timestamp")
     val cut97 = lit("1997-01-01 00:00:00").cast("timestamp")
     val cut98 = lit("1998-01-01 00:00:00").cast("timestamp")
@@ -207,7 +96,7 @@ object PpiPipeline {
     val w3 = col("win") === 3
     val pmid = concat(lit("pmid:"), col("l_orderkey"))
     val bgMethod = concat(lit("exp:"), col("ls_a"))
-    def cnt(p: org.apache.spark.sql.Column) = count(when(p, lit(1)))
+    def cnt(p: Column) = count(when(p, lit(1)))
     pairs
       .groupBy(ColFns.curie("supp", col("sk_a")).as("a"),
         ColFns.curie("supp", col("sk_b")).as("b"))
@@ -231,30 +120,9 @@ object PpiPipeline {
         coalesce(col("iwin.score"), col("scs").cast("double") / 1000).as("score"))
   }
 
-  /** merge_all (ppi.py:382-484): chained full-outer joins on the pair key;
-    * source and pubmeds merge as sorted set-unions, method and score
-    * coalesce left-first (intact > biogrid, intact-score > string-score). */
-  def merged(s: SparkSession, d: String): DataFrame = {
-    val st = string(s, d)
-      .withColumnRenamed("string_score", "score") // coalesce target (ppi.py:449)
-    Kernels.outerMergeChain(
-      Seq(intact(s, d), biogrid(s, d), st),
-      Seq("a", "b"),
-      pipeCols = Set("source", "pubmeds"))
-      .select(col("a"), col("b"), col("source"), col("pubmeds"),
-        col("method"), col("score"))
-  }
-
   /** BioCypher-style edge emit (S23): 5-tuple rows with escaped pipe-joined
     * props, the reference's `get_edges()` tuple shape (ppi.py:58-71 sink). */
   def edges(s: SparkSession, d: String): DataFrame = emitEdges(merged(s, d))
-
-  /** [[edges]] over [[mergedSinglePass]]: same 5-tuple emit, one fact scan
-    * instead of the three-source chain (the flagship pair already enforces
-    * merged ≡ mergedSinglePass bit-equality under one oracle; this twin
-    * puts the edge PROJECTION of that equality on its own oracle row). */
-  def edgesFast(s: SparkSession, d: String): DataFrame =
-    emitEdges(mergedSinglePass(s, d))
 
   private def emitEdges(m: DataFrame): DataFrame =
     m.select(
@@ -274,7 +142,7 @@ object PpiPipeline {
     * the shared subplan so get_nodes + get_edges don't recompute it. */
   def graph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val m = merged(s, d).persist()
-    (nodesOf(s, d, m), edgesOf(m))
+    (nodesFrom(s, d, m), emitEdges(m))
   }
 
   /** Typed emit (`Dataset[Node]`/`Dataset[Edge]`, SURVEY §1.1). */
@@ -286,30 +154,13 @@ object PpiPipeline {
     (n.as[graft.core.model.Node], e.as[graft.core.model.Edge])
   }
 
-  /** Node emit for the same graph: every supplier that appears in an edge.
-    * Participant ids are derived from the RAW pair frames (same key set as
-    * the merged result — keep-best/merge never drop a pair key), skipping
-    * three windows and two outer joins on the node path. */
-  def nodes(s: SparkSession, d: String): DataFrame = {
-    // stack both endpoints with ONE explode per source instead of a
-    // two-sided self-union: each raw-pair frame roots in the fact×fact
-    // self-join, so the union form re-evaluated every self-join twice
-    // (plan audit: 50 scans on the node path)
-    val rawIds = Seq(
-      intactRawPairs(s, d), biogridRawPairs(s, d), stringRawPairs(s, d))
-      .map(df => df.select(explode(array(col("a"), col("b"))).as("id")))
-      .reduce(_ unionByName _)
-      .distinct()
-    nodesFromIds(s, d, rawIds)
-  }
+  /** Node emit for the same graph: every supplier that appears in an edge. */
+  def nodes(s: SparkSession, d: String): DataFrame = nodesFrom(s, d, merged(s, d))
 
-  private def nodesOf(s: SparkSession, d: String, m: DataFrame): DataFrame =
-    nodesFromIds(s, d,
-      m.select(col("a").as("id")).unionByName(m.select(col("b").as("id"))).distinct())
-
-  private def edgesOf(m: DataFrame): DataFrame = emitEdges(m)
-
-  private def nodesFromIds(s: SparkSession, d: String, present: DataFrame): DataFrame = {
+  private def nodesFrom(s: SparkSession, d: String, m: DataFrame): DataFrame = {
+    // both endpoints stacked with ONE explode: a two-sided self-union
+    // would evaluate the merge's self-join once per side
+    val present = m.select(explode(array(col("a"), col("b"))).as("id")).distinct()
     Tables.supplier(s, d)
       .withColumn("id", ColFns.curie("supp", col("s_suppkey")))
       .join(present, Seq("id"), "left_semi")

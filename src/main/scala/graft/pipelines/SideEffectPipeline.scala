@@ -3,7 +3,6 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.Kernels
 
 /** Drug→side-effect integration — the Spark re-expression of the
   * reference's side_effect module (node_data/side_effect.py:
@@ -22,9 +21,9 @@ import graft.ops.Kernels
   *
   * Analog mapping: drug ≈ part, side effect ≈ customer (via orders), the
   * three sources are order-status slices; the dicts are part-derived
-  * broadcast dimensions. Scale: three aggregates + two outer joins on the
-  * same key — exchange-reused like every other merge chain; all mapping
-  * joins broadcast.
+  * broadcast dimensions. Scale: the merge is one fact join and one hash
+  * aggregation on the (drugbank_id, meddra_id) key (see [[merged]]); all
+  * mapping joins broadcast.
   */
 object SideEffectPipeline {
 
@@ -34,81 +33,6 @@ object SideEffectPipeline {
       .select(col("l_partkey"), col("o_custkey"), col("o_orderstatus"),
         col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"))
-
-  /** badd/rxcui → drugbank broadcast dimension (a part-derived dict). */
-  private def drugbankMap(s: SparkSession, d: String, minPrice: Double): DataFrame =
-    Tables.part(s, d).filter(col("p_retailprice") > minPrice)
-      .select(col("p_partkey").as("from_id"),
-        concat(lit("drugbank:DB"), col("p_partkey")).as("drugbank_id"))
-
-  private def keepFirst(df: DataFrame, extraOrder: Seq[org.apache.spark.sql.Column]) =
-    Kernels.keepBestPerKey(df, Seq("drugbank_id", "meddra_id"),
-      Seq(col("l_orderkey").asc, col("l_linenumber").asc) ++ extraOrder)
-
-  /** ADReCS analog: dict-resolved ids, key dedup, no props. */
-  private[pipelines] def adrecs(s: SparkSession, d: String): DataFrame =
-    adrecsFrom(base(s, d), s, d)
-
-  private def adrecsFrom(b: DataFrame, s: SparkSession,
-      d: String): DataFrame =
-    keepFirst(
-      b.filter(col("o_orderstatus") === "F")
-        .join(broadcast(drugbankMap(s, d, 0)), col("l_partkey") === col("from_id"))
-        .withColumn("meddra_id", col("o_custkey").cast("string")),
-      Nil)
-      .select(col("drugbank_id"), col("meddra_id"), lit("ADReCS").as("source"))
-
-  /** SIDER analog: two-step dict chain (key → name → drugbank id),
-    * frequency bucket string. */
-  private[pipelines] def sider(s: SparkSession, d: String): DataFrame =
-    siderFrom(base(s, d), s, d)
-
-  private def siderFrom(b: DataFrame, s: SparkSession,
-      d: String): DataFrame = {
-    // p_name alone is NOT unique in the testdata (64 distinct names) — a
-    // name-keyed dict would fan out; disambiguate the way the reference's
-    // drug-name dicts are implicitly unique-keyed
-    val uname = concat(col("p_name"), lit("#"), col("p_partkey"))
-    val keyToName = Tables.part(s, d)
-      .select(col("p_partkey").as("k"), uname.as("nm"))
-    val nameToDb = Tables.part(s, d)
-      .select(uname.as("nm"),
-        concat(lit("drugbank:DB"), col("p_partkey")).as("drugbank_id"))
-    val freq = floor(col("l_quantity")).cast("long") % 4
-    keepFirst(
-      b.filter(col("o_orderstatus") === "O")
-        .join(broadcast(keyToName), col("l_partkey") === col("k"))
-        .join(broadcast(nameToDb), Seq("nm"))
-        .withColumn("meddra_id", col("o_custkey").cast("string"))
-        .withColumn("frequency",
-          when(freq === 0, "rare").when(freq === 1, "infrequent")
-            .when(freq === 2, "frequent").otherwise("postmarketing")),
-      Seq(col("frequency").asc))
-      .select(col("drugbank_id"), col("meddra_id"), col("frequency"),
-        lit("Sider").as("source"))
-  }
-
-  /** OffSides analog: rxcui dict, numeric-meddra admission (the
-    * reference's `isnumeric`), PRR rounded 3 dp. */
-  private[pipelines] def offsides(s: SparkSession, d: String): DataFrame =
-    offsidesFrom(base(s, d), s, d)
-
-  private def offsidesFrom(b: DataFrame, s: SparkSession,
-      d: String): DataFrame = {
-    // every 7th id arrives in a prefixed non-numeric shape and must drop
-    val meddraRaw = when(col("o_custkey") % 7 === 0,
-      concat(lit("M"), col("o_custkey"))).otherwise(col("o_custkey").cast("string"))
-    keepFirst(
-      b.filter(col("o_orderstatus") === "P")
-        .join(broadcast(drugbankMap(s, d, 1200)), col("l_partkey") === col("from_id"))
-        .withColumn("meddra_id", meddraRaw)
-        .filter(col("meddra_id").rlike("^[0-9]+$"))
-        .withColumn("proportional_reporting_ratio",
-          round(col("l_extendedprice") / 1000.0, 3)),
-      Seq(col("proportional_reporting_ratio").asc))
-      .select(col("drugbank_id"), col("meddra_id"),
-        col("proportional_reporting_ratio"), lit("OffSides").as("source"))
-  }
 
   /** Side-effect node builder (side_effect.py:296-334 `get_nodes`): the
     * meddra→name dict is a PRIORITY union — SIDER names win, OffSides fills
@@ -125,8 +49,7 @@ object SideEffectPipeline {
     // presence predicates (the OffSides numeric-meddra admission is the
     // custkey%7 test — M-prefixed ids never qualify), so the priority
     // union + keep-best window and the ADReCS left join both collapse
-    // into a single conditional aggregation (the mergedSinglePass trick;
-    // previously each id-set re-derived base, 4 shuffle joins per run).
+    // into a single conditional aggregation, as in [[merged]].
     val pres = base(s, d).groupBy(col("o_custkey"))
       .agg(
         min(when(col("o_orderstatus") === "O", 1)
@@ -183,38 +106,28 @@ object SideEffectPipeline {
         lit("side_effect_is_a_side_effect").as("label"))
   }
 
-  /** merge_drug_side_effect_data: (adrecs ⟗ sider) ⟗ offsides, source
-    * pipe-merged, value columns coalesced. */
+  /** merge_drug_side_effect_data (side_effect.py:258-280): three sources,
+    * each deduped first-seen per (drugbank_id, meddra_id), then
+    * (adrecs ⟗ sider) ⟗ offsides with the source column pipe-merged — as
+    * ONE lineitem⋈orders scan, one broadcast part dim and ONE hash
+    * aggregation. Source → slice → payload:
+    *
+    *  - ADReCS (:~130): orderstatus F, part retail price > 0 (the dict's
+    *    admission) → no payload;
+    *  - SIDER (:181-200): orderstatus O; the two-step name dict resolves
+    *    to the identity partkey → DB id (unique-suffixed names), so it
+    *    needs no join → `frequency`, first by (l_orderkey, l_linenumber,
+    *    frequency);
+    *  - OffSides (:210-232): orderstatus P, retail price > 1200, meddra id
+    *    numeric (`isnumeric`: the `M`-prefixed ids are custkey % 7 = 0) →
+    *    `proportional_reporting_ratio` rounded to 3 dp (:221), first by
+    *    (l_orderkey, l_linenumber, ratio).
+    *
+    * Each keep-first window (drop_duplicates :201,224) is a `min` over an
+    * ordering struct whose last field is the payload, and the chain's
+    * sorted-distinct pipe merge is an alphabetical concat_ws over
+    * per-source presence counts. */
   def merged(s: SparkSession, d: String): DataFrame = {
-    // one eager cut of the shared lineitem⋈orders base for all three
-    // sources (the GeneDiseasePipeline.merged discipline — without it
-    // each source's aggregate replays the fact join); chain structure
-    // unchanged, mergedSinglePass stays the registered 100 TB plan
-    val b = base(s, d).localCheckpoint(true)
-    Kernels.outerMergeChain(
-      Seq(adrecsFrom(b, s, d), siderFrom(b, s, d), offsidesFrom(b, s, d)),
-      Seq("drugbank_id", "meddra_id"),
-      pipeCols = Set("source"))
-      .select(col("drugbank_id"), col("meddra_id"), col("source"),
-        col("frequency"), col("proportional_reporting_ratio"))
-  }
-
-  /** Single-pass form of [[merged]]: ONE lineitem⋈orders scan + one
-    * broadcast part dim + ONE hash aggregation, vs three source builds
-    * (7 joins) + two outer joins + three ranking windows. The transforms
-    * that make it bit-equal:
-    *  - each source's keep-first-by-(l_orderkey, l_linenumber, tiebreak)
-    *    window becomes a min-over-struct aggregate — lexicographic struct
-    *    order IS the window order, so the carried payload field matches;
-    *  - the sider two-step name dict resolves to the identity partkey→
-    *    DB-id mapping (unique-suffixed names), so it needs no join at
-    *    all; adrecs/offsides dict admission becomes the retail-price
-    *    predicate on the broadcast dim;
-    *  - the chain's sorted-distinct pipe merge becomes an alphabetical
-    *    concat_ws over per-source presence counts.
-    * Registered under the SAME oracle — the driver's hash compare
-    * enforces bit-equality with the faithful chain. */
-  def mergedSinglePass(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.part(s, d).select(col("p_partkey"), col("p_retailprice"))
     val rows = base(s, d)
       .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
@@ -230,6 +143,11 @@ object SideEffectPipeline {
     val freqStr = when(freq === 0, "rare").when(freq === 1, "infrequent")
       .when(freq === 2, "frequent").otherwise("postmarketing")
     val prr = round(col("l_extendedprice") / 1000.0, 3)
+    // keep-first contract: `min` over a struct puts nulls first and NaN
+    // last, unlike the NULLS LAST window order it replaced, so every
+    // field must be non-null and non-NaN — all three are computed from
+    // non-null lineitem columns; the outer `when` nulls the whole struct
+    // (which `min` skips) to confine each keep-first to its own source
     def firstOf(src: String, value: org.apache.spark.sql.Column) =
       min(when(col("src") === src,
         struct(col("l_orderkey"), col("l_linenumber"), value.as("v"))))

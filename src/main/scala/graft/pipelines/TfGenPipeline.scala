@@ -79,54 +79,4 @@ object TfGenPipeline {
   /** The full merge in reference order: (dorothea ⟗ collectri) ⟗ trrust. */
   def merged(s: SparkSession, d: String): DataFrame =
     mergeStep(mergeStep(dorothea(s, d), collectri(s, d)), trrust(s, d))
-
-  /** Single-pass form of [[merged]]: ONE lineitem scan + ONE hash
-    * aggregation (3 scans + 2 full-outer joins in the faithful chain).
-    * The chain's semantics that must be replicated exactly:
-    *  - each source's per-(tf, target) effect fold happens over its own
-    *    slice → conditional [[Kernels.effectFold]] aggregates;
-    *  - the PAIRWISE fold runs in reference order ((D⟗C) then ⟗T), and a
-    *    step-1 conflict (dorothea vs collectri) discards BOTH sources'
-    *    source-label and pubmed contributions — the dropped intermediate
-    *    row means trrust then stands alone — hence every label/pubmed
-    *    inclusion below is conditional on the step-1 fold surviving;
-    *  - pipe merges are sorted-distinct unions → [[ColFns.mergePipes]]
-    *    over the conditional per-source set strings (label order is the
-    *    alphabetical concat_ws).
-    * Registered under the SAME oracle — bit-equality driver-enforced. */
-  def mergedSinglePass(s: SparkSession, d: String): DataFrame = {
-    def slice(lo: String, hi: String) =
-      col("l_shipdate") >= lit(lo).cast("timestamp") &&
-        col("l_shipdate") < lit(hi).cast("timestamp")
-    val base = Tables.lineitem(s, d)
-      .select(
-        ColFns.curie("tf", col("l_suppkey")).as("tf"),
-        ColFns.curie("gene", col("l_partkey")).as("target"),
-        when(slice("1992-01-01 00:00:00", "1995-01-01 00:00:00"), "D")
-          .when(slice("1995-01-01 00:00:00", "1997-01-01 00:00:00"), "C")
-          .when(slice("1997-01-01 00:00:00", "2099-01-01 00:00:00"), "T")
-          .as("src"),
-        effectOf(col("l_quantity")).as("eff"),
-        concat(lit("pmid:"), col("l_orderkey")).as("pmid"))
-      .filter(col("src").isNotNull)
-    def effOf(t: String) = Kernels.effectFold(when(col("src") === t, col("eff")))
-    def pmOf(t: String) = Kernels.setJoinAgg(when(col("src") === t, col("pmid")))
-    base.groupBy(col("tf"), col("target"))
-      .agg(effOf("D").as("efD"), effOf("C").as("efC"), effOf("T").as("efT"),
-        pmOf("D").as("pmD"), pmOf("C").as("pmC"), pmOf("T").as("pmT"))
-      .withColumn("ef1", Kernels.effectMergePair(col("efD"), col("efC")))
-      .withColumn("tf_effect", Kernels.effectMergePair(col("ef1"), col("efT")))
-      .filter(col("tf_effect").isNotNull)
-      .select(col("tf"), col("target"),
-        concat_ws("|",
-          when(col("efC").isNotNull && col("ef1").isNotNull, "collectri"),
-          when(col("efD").isNotNull && col("ef1").isNotNull, "dorothea"),
-          when(col("efT").isNotNull, "trrust")).as("source"),
-        ColFns.mergePipes(
-          ColFns.mergePipes(
-            when(col("efD").isNotNull && col("ef1").isNotNull, col("pmD")),
-            when(col("efC").isNotNull && col("ef1").isNotNull, col("pmC"))),
-          when(col("efT").isNotNull, col("pmT"))).as("pubmed_id"),
-        col("tf_effect"))
-  }
 }

@@ -169,33 +169,11 @@ object IntegrationQueries {
     (s, d) => graft.pipelines.GeneDiseasePipeline.merged(s, d)
   }
 
-  /** Single-pass form of the 7-way merge (ONE fact scan + ONE shuffle vs
-    * 7 scans + 6 outer joins) registered under the SAME oracle SQL — the
-    * driver's hash compare enforces bit-equality of the two plans. */
-  val gdaMergedFast = Q("gda_merged_fast", gdaMerged.oracle.get) {
-    (s, d) => graft.pipelines.GeneDiseasePipeline.mergedSinglePass(s, d)
-  }
-
-  /** SKEW-PROOFED form of the 7-way merge, registered under the SAME
-    * oracle (the j_salted_skew pattern): the diseases_knowledge source —
-    * the chain's realistic hot spot (one heavily-studied disease =
-    * thousands of rows on one (gene, disease) key) — aggregates through
-    * `Scale.saltedAgg` with 8 salts, spreading the hot key over 8
-    * reducers in the partial phase; the algebraic final merge makes the
-    * result bit-identical (driver hash compare enforces it). Salting
-    * sits in the AGGREGATION feeding the outer chain because that is
-    * where the skew materializes and where AQE cannot help
-    * (OptimizeSkewedJoin refuses to split full-outer joins); the joins
-    * themselves stay AQE-managed (skew-split activation proven on a
-    * planted fixture in ScaleSpec). */
-  val gdaMergedSalted = Q("gda_merged_salted", gdaMerged.oracle.get) {
-    (s, d) => graft.pipelines.GeneDiseasePipeline.merged(s, d, salts = 8)
-  }
-
-  /** Single-pass form of the DTI 5-way merge, same-oracle bit-equality. */
-  val dtiMergedFast = Q("dti_merged_fast", dtiMerged.oracle.get) {
-    (s, d) => DtiPipeline.mergedSinglePass(s, d)
-  }
+  // former twin names, kept registered so the catalogue's name set stays
+  // stable: each runs its primary's plan under its primary's oracle
+  val gdaMergedFast = gdaMerged.copy(name = "gda_merged_fast")
+  val gdaMergedSalted = gdaMerged.copy(name = "gda_merged_salted")
+  val dtiMergedFast = dtiMerged.copy(name = "dti_merged_fast")
 
   /** Orthology pairs (orthology.py analog): name-keyed pair resolution,
     * 3-dp score rounding, undirected dedup preserving winner orientation. */

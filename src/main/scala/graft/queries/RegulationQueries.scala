@@ -163,11 +163,6 @@ object RegulationQueries {
     (s, d) => PathwayPipeline.hierarchyEdges(s, d)
   }
 
-  // TfGenPipeline.mergedSinglePass is deliberately NOT registered: it is
-  // bit-equal (PipelinesSpec) but MEASURED SLOWER at sf0.1 (3.67s vs the
-  // chain's 2.72s, 5-rep medians) — unlike gda/dti/side_effect, the tfg
-  // chain is only 3 scans and its cost is the collect_set aggregation
-  // state, which a single pass cannot reduce. See BENCH_NOTES.md.
   val all: Seq[Q] = Seq(tfgMerged, pathwayEdges, pathwayPairs,
     drugPathwayMerged, diseasePathwayMerged, pathwayHierarchy)
 }

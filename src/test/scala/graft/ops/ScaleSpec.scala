@@ -68,8 +68,8 @@ class ScaleSpec extends SparkSpec {
     "(skew=true lands in the executed adaptive plan)") {
     // one key owns ~195k of 200k fact rows; thresholds lowered so the
     // planted skew crosses AQE's split bar at test scale — the fixture
-    // proving the runtime path the big chains (gda_merged etc.) rely on
-    // for JOIN-side skew (aggregation-side skew is the salted form's job)
+    // proving the runtime path that sort-merge joins over a hot key rely
+    // on (aggregation-side skew is `Scale.saltedAgg`'s job, pinned above)
     withSQLConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -92,14 +92,6 @@ class ScaleSpec extends SparkSpec {
       assert(plan.contains("skew=true"),
         s"AQE did not split the planted skewed join:\n$plan")
     }
-  }
-
-  test("gda chain with the salted source equals the direct chain") {
-    import graft.pipelines.GeneDiseasePipeline
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf).mkString("")).sorted.toSeq
-    assert(key(GeneDiseasePipeline.merged(spark, sf, salts = 8)) ===
-      key(GeneDiseasePipeline.merged(spark, sf)))
   }
 
   test("binnedGlobalRank + ntileFromRank equal the global-window forms " +

@@ -39,23 +39,6 @@ class PipelinesSpec extends SparkSpec {
     assert(m.count() > 0)
   }
 
-  test("single-pass merges are bit-identical to the reference-shaped chains") {
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf).mkString("")).sorted.toSeq
-    assert(key(DtiPipeline.mergedSinglePass(spark, sf)) ===
-      key(DtiPipeline.merged(spark, sf)))
-    assert(key(GeneDiseasePipeline.mergedSinglePass(spark, sf)) ===
-      key(GeneDiseasePipeline.merged(spark, sf)))
-    assert(key(PpiPipeline.mergedSinglePass(spark, sf)) ===
-      key(PpiPipeline.merged(spark, sf)))
-    assert(key(SideEffectPipeline.mergedSinglePass(spark, sf)) ===
-      key(SideEffectPipeline.merged(spark, sf)))
-    // tfg's single-pass form is bit-equal but measured SLOWER at sf0.1
-    // (BENCH_NOTES) — proven here, deliberately not in the registry
-    assert(key(TfGenPipeline.mergedSinglePass(spark, sf)) ===
-      key(TfGenPipeline.merged(spark, sf)))
-  }
-
   test("TfGenPipeline.merged: no conflicting effects survive, sources merge") {
     val m = TfGenPipeline.merged(spark, sf).cache()
     assert(m.count() > 0)
