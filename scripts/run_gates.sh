@@ -11,13 +11,27 @@ sbt -batch test 2>&1 | grep -E "Tests: |All tests"
 echo "== vanilla entry smoke (driver-like session) =="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep "\[smoke\]"
 
-echo "== snapshot_churn: SnapshotTable against the pandas replay =="
-churn=$(python3 perfbench/run.py --workload snapshot_churn --seed 1 \
+echo "== snapshot_churn: SnapshotTable against the pandas replay, fork count =="
+# build without the recording first, so the only JVM that JAVA_TOOL_OPTIONS
+# reaches below is the harness's
+python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
+jdir=$(mktemp -d)
+churn=$(JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=$jdir/churn.jfr" \
+  python3 perfbench/run.py --workload snapshot_churn --seed 1 \
   --seconds 60 --trace 0 | tail -1) || true
 case "$churn" in
   *'"correct": true'*) echo "snapshot_churn correct" ;;
   *) echo "snapshot_churn FAILED: ${churn:0:400}"; exit 1 ;;
 esac
+# every child process the harness JVM started (a chmod or readlink per file
+# written is the regression this catches)
+forks=$(jfr summary "$jdir/churn.jfr" | awk '$1 == "jdk.ProcessStart" {print $2}')
+rm -rf "$jdir"
+if [ -z "$forks" ] || [ "$forks" -gt 10 ]; then
+  echo "snapshot_churn harness JVM started ${forks:-an unknown number of} child processes (max 10)"
+  exit 1
+fi
+echo "snapshot_churn harness JVM started $forks child processes"
 
 for sf in 0.001 0.01 $([ "${1:-}" = quick ] || echo 0.1); do
   echo "== verify + DuckDB oracle @ sf$sf =="

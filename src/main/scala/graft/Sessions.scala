@@ -26,6 +26,9 @@ object Sessions {
       // doesn't own)
       .config("spark.sql.warehouse.dir", graft.core.Artifacts.dir("graft-wh"))
       .config("spark.ui.enabled", "false")
+      // checksummed local fs that sets permissions without forking chmod
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.core.NoForkLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

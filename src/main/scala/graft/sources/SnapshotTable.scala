@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options,
+  Path}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,7 +105,7 @@ object SnapshotTable {
       .getOrElse(new Configuration())
 
   /** The table's filesystem and its fully-qualified root path. */
-  private def fsRoot(tableDir: String): (FileSystem, Path) = {
+  private[graft] def fsRoot(tableDir: String): (FileSystem, Path) = {
     val raw = new Path(tableDir)
     val fs = raw.getFileSystem(hadoopConf)
     (fs, fs.makeQualified(raw))
@@ -144,26 +145,34 @@ object SnapshotTable {
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** Replacing rename (the pointer swap needs replace semantics, which
-    * [[FileSystem.rename]] lacks): [[FileContext]]'s `Rename.OVERWRITE`.
-    * Atomic on HDFS (server-side rename2); on the LOCAL filesystem the
-    * default AbstractFileSystem implementation is delete-then-rename, so
-    * there is a microsecond window with NO `_current` at all —
-    * [[currentVersion]] absorbs it with a bounded retry (a reader must
-    * never mistake a mid-swap table for a never-committed one). Object
-    * stores: the documented copy+delete caveat in the class doc. */
-  private def renameOverwrite(fs: FileSystem, src: Path, dst: Path): Unit = {
-    val fc = FileContext.getFileContext(fs.getUri, fs.getConf)
-    fc.rename(src, dst, Options.Rename.OVERWRITE)
-  }
+  /** Replacing rename (the pointer swap needs replace semantics).
+    * On the LOCAL filesystem [[FileSystem.rename]] is `rename(2)`, which
+    * atomically replaces `dst`, so `_current` always exists; the
+    * checksummed wrapper moves the `.crc` sidecar right after, a gap
+    * [[readText]] retries. Everywhere else (where [[FileSystem.rename]]
+    * refuses an existing destination): [[FileContext]]'s
+    * `Rename.OVERWRITE` — atomic on HDFS (server-side rename2), but the
+    * default AbstractFileSystem implementation is delete-then-rename, a
+    * window with NO `dst` that [[currentVersion]] absorbs. Object stores:
+    * the documented copy+delete caveat in the class doc. */
+  private def renameOverwrite(fs: FileSystem, src: Path, dst: Path): Unit =
+    fs match {
+      case _: LocalFileSystem =>
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(s"rename $src to $dst failed")
+      case _ =>
+        FileContext.getFileContext(fs.getUri, fs.getConf)
+          .rename(src, dst, Options.Rename.OVERWRITE)
+    }
 
   /** Version of the live snapshot, 0 if the table has never committed.
-    * Resilient to the local-FS pointer-swap window ([[renameOverwrite]]):
-    * a missing `_current` on a table that HAS manifests means a swap is
-    * in flight (or a writer crashed mid-swap) — retry briefly, then fail
-    * loudly rather than serving a phantom empty table; the exists→open
-    * race (pointer deleted between the two calls) retries the same
-    * way. */
+    * A missing `_current` on a table that HAS manifests means a
+    * delete-then-rename swap is in flight ([[renameOverwrite]] on a
+    * filesystem without a replacing rename) or a writer crashed
+    * mid-swap — retry briefly, then fail loudly rather than serving a
+    * phantom empty table; the exists→open race retries the same way. On
+    * the local filesystem the swap is one atomic rename, so there the
+    * retry only covers crashed writers. */
   def currentVersion(tableDir: String): Long = {
     val (fs, root) = fsRoot(tableDir)
     val cur = new Path(root, "_current")
@@ -1362,7 +1371,9 @@ object SnapshotTable {
     * — a frame missing or inventing columns is REJECTED loudly, never
     * null-filled: an append is not schema evolution). CAS-retried like
     * [[upsertRetrying]] so concurrent appenders serialize instead of
-    * losing rows. Returns the committed version. */
+    * losing rows. Returns the committed version. Keys are NOT checked:
+    * appending a key that is already live breaks the unique-key-per-
+    * version invariant [[diffImages]] (the change feed) relies on. */
   def append(spark: SparkSession, tableDir: String, rows: DataFrame,
       maxAttempts: Int = 5, txn: Option[(String, Long)] = None): Long = {
     require(maxAttempts >= 1, "need at least one attempt")
@@ -1910,7 +1921,19 @@ object SnapshotTable {
 
   /** [[diff]] with both images kept as structs — the core shared with
     * [[changeDeltas]]. Output: (change_type, keys…, __old, __new); an
-    * insert's `__old` and a delete's `__new` are NULL. */
+    * insert's `__old` and a delete's `__new` are NULL.
+    *
+    * Sound only under the UNIQUE-KEY-PER-VERSION invariant: a key is live
+    * in at most one file of each version (the file-scoped read below
+    * drops files live in both versions, and the key join pairs one
+    * pre-image with one post-image). The writers keep it, not this
+    * method: [[upsert]]'s keep-one `row_number` over the touched files ∪
+    * the batch (for a key whose partition value never changes — the
+    * merge is partition-scoped), and [[rewriteWhere]]'s row-preserving
+    * rewrite (a delete drops rows, an update replaces each row in place;
+    * an UPDATE that assigns a key column can collide). [[append]] does
+    * NOT check it: an `INSERT` of a live key breaks the diff. Nothing
+    * asserts it at run time. */
   def diffImages(spark: SparkSession, tableDir: String, from: Long,
       to: Long, keyCols: Seq[String]): DataFrame = {
     val ea = entriesAt(tableDir, from)
