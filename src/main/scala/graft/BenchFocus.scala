@@ -1,38 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Focused repeat-measurement harness: time a subset of registered queries
   * N times each in one warmed JVM. Usage:
   *   runMain graft.BenchFocus <sfDir> <reps> <query>[,<query>...]
-  * Prints one line per (query, rep) plus a median summary — the tool for
-  * separating real plan regressions from single-run JIT/GC noise.
+  * Prints one line per (query, rep) — `FAILED` for a rep that threw — plus
+  * the median over the reps that succeeded: the tool for separating real
+  * plan regressions from single-run JIT/GC noise.
   */
 object BenchFocus {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, repsS, names) = args
     val reps = repsS.toInt
-    // same builder + same SPARK_GRAFT_CPUS default as Bench — medians from
-    // this tool are directly comparable to the driver bench
+    // same session, warm-up and per-query timer as Bench — medians from
+    // this tool are directly comparable to Bench's
     val spark = Sessions.local()
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    Bench.warmUp(spark, sfDir)
     val picked = names.split(",").toSeq
     val times = picked.map { n =>
       val fn = SparkEntry.queries(n)
-      val ts = (1 to reps).map { r =>
-        // queries that persist()/localCheckpoint() intermediates would
-        // otherwise serve later reps from cached entries (or leak
-        // checkpoint blocks rep over rep) — the driver bench drains both
-        // storage layers per query, so reps must too
-        graft.core.StorageHygiene.drainAll(spark)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[focus] $n rep$r: $dt%.2f s")
+      val ok = (1 to reps).flatMap { r =>
+        val dt = Bench.timeQuery(spark, sfDir, n, fn)
+        println(dt.fold(s"[focus] $n rep$r: FAILED")(
+          t => f"[focus] $n rep$r: $t%.2f s"))
         dt
       }
-      n -> ts.sorted.apply(reps / 2)
+      n -> Option.when(ok.nonEmpty)(ok.sorted.apply(ok.size / 2))
     }
-    times.foreach { case (n, med) => println(f"[focus] MEDIAN $n: $med%.2f s") }
+    times.foreach { case (n, med) =>
+      println(med.fold(s"[focus] MEDIAN $n: FAILED")(
+        m => f"[focus] MEDIAN $n: $m%.2f s"))
+    }
     spark.stop()
   }
 }

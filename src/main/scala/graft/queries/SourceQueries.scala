@@ -549,12 +549,9 @@ object SourceQueries {
       lit("all").as("p"))
     SnapshotTable.overwriteClustered(s, tableDir, snap, partCol = "p",
       statsCols = Seq("month"), rangeFiles = 12)
-    val st = SnapshotTable.typedStatsAt(tableDir, 1L)
     val all = SnapshotTable.entries(tableDir).map(_._2)
-    val keptApi = all.count { f =>
-      st.get(f).flatMap(_.get("month")).forall(
-        SnapshotTable.ColStat.overlapsStr(_, Some("1997-01"), None))
-    }
+    val keptApi = SnapshotTable.keptFiles(tableDir, 1L,
+      Map("month" -> SnapshotTable.StrRange(Some("1997-01"), None))).size
     val idx = new graft.sources.v2.SnapshotFileIndex(s, tableDir, 1L)
     val m = org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "month", org.apache.spark.sql.types.StringType)()
@@ -594,15 +591,12 @@ object SourceQueries {
       col("o_totalprice").as("price"), lit("all").as("p"))
     SnapshotTable.overwriteClustered(s, tableDir, snap, partCol = "p",
       statsCols = Seq("price"), rangeFiles = 12)
-    val st = SnapshotTable.typedStatsAt(tableDir, 1L)
     val all = SnapshotTable.entries(tableDir).map(_._2)
     // "no upper bound" = NaN, the TOP of Spark's double total order (an
     // all-NaN file must survive a lower-bounded-only probe — NaN >= x
-    // is TRUE in Spark; see readRangeDbl's scaladoc)
-    val kept = all.count { f =>
-      st.get(f).flatMap(_.get("price")).forall(
-        SnapshotTable.ColStat.overlapsDbl(_, 400000.0, Double.NaN))
-    }
+    // is TRUE in Spark; see SnapshotTable.ColRange)
+    val kept = SnapshotTable.keptFiles(tableDir, 1L, Map("price" ->
+      SnapshotTable.DblRange(Some(400000.0), Some(Double.NaN)))).size
     val out = SnapshotTable.readRangeDbl(s, tableDir, "price",
         400000.0, Double.NaN)
       .filter(col("price") >= 400000.0)
@@ -645,12 +639,9 @@ object SourceQueries {
     SnapshotTable.overwriteClustered(s, tableDir, snap, partCol = "p",
       statsCols = Seq("amount"), rangeFiles = 12)
     val probeLo = Some(new java.math.BigDecimal("400000.00"))
-    val st = SnapshotTable.typedStatsAt(tableDir, 1L)
     val all = SnapshotTable.entries(tableDir).map(_._2)
-    val kept = all.count { f =>
-      st.get(f).flatMap(_.get("amount")).forall(
-        SnapshotTable.ColStat.overlapsDec(_, probeLo, None))
-    }
+    val kept = SnapshotTable.keptFiles(tableDir, 1L,
+      Map("amount" -> SnapshotTable.DecRange(probeLo, None))).size
     val out = SnapshotTable.readRangeDec(s, tableDir, "amount", probeLo, None)
       .filter(col("amount") >= lit("400000.00").cast(dec12))
       .select(col("o_orderkey"), col("o_custkey"),
@@ -816,11 +807,10 @@ object SourceQueries {
     SnapshotTable.overwriteZordered(s, tableDir, snap, partCol = "p",
       statsCols = Seq("o_orderkey", "o_custkey"), rangeFiles = 16)
     val ranges = Seq(("o_orderkey", 200L, 900L), ("o_custkey", 20L, 90L))
-    val st = SnapshotTable.statsAt(tableDir, 1L)
     val all = SnapshotTable.entries(tableDir).map(_._2)
-    val kept = all.count(f => ranges.forall { case (c, lo, hi) =>
-      st.get(f).flatMap(_.get(c)).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    })
+    val kept = SnapshotTable.keptFiles(tableDir, 1L, ranges.map {
+      case (c, lo, hi) => c -> SnapshotTable.LongRange(Some(lo), Some(hi))
+    }.toMap).size
     val out = SnapshotTable.readRanges(s, tableDir, ranges)
       .filter(col("o_orderkey").between(200L, 900L) &&
         col("o_custkey").between(20L, 90L))

@@ -511,6 +511,11 @@ object SnapshotTable {
       }
       x.length - y.length
     }
+    /** The orders STRING, DOUBLE and DECIMAL bounds are recorded under. */
+    val strOrder: Ordering[String] = Ordering.fromLessThan(utf8Cmp(_, _) < 0)
+    val dblOrder: Ordering[Double] = Ordering.Double.TotalOrdering
+    val decOrder: Ordering[java.math.BigDecimal] =
+      Ordering.fromLessThan(_.compareTo(_) < 0)
     /** Does `[lo, hi]` (inclusive, either side open when None) overlap the
       * stat's recorded range? Type-mismatched probes conservatively say
       * yes (the file must be read — stats only ever SHRINK file lists). */
@@ -549,6 +554,85 @@ object SnapshotTable {
       case _ => true
     }
   }
+
+  /** A provable value range of one column, either side open (None): the
+    * input of THE pruning kernel, [[keptFiles]], which every file-skipping
+    * decision goes through — the `readRange*` reads, the DML candidate
+    * selection, the MERGE's update-free test and the `graft-snapshot`
+    * source's pushed filters ([[SnapshotFileIndex.prune]]). One kind per
+    * stat kind, compared in the order its bounds were recorded under:
+    *
+    *  - LONG: exact; a strict comparison is the ±1 inclusive one.
+    *  - STRING: inclusive, in UNSIGNED UTF-8 byte order
+    *    ([[ColStat.utf8Cmp]]); a JVM `compareTo` (UTF-16 code units)
+    *    disagrees above the BMP and would prune unsoundly.
+    *  - DOUBLE: inclusive, in Spark's total order ([[DblStat]]: NaN above
+    *    +∞, ±0.0 equal). An open floor is −∞ and an open ceiling NaN, the
+    *    TOP: `NaN >= x` is TRUE in Spark, so an all-NaN file must survive
+    *    a lower bound, which a +∞ ceiling would prune.
+    *  - DECIMAL: inclusive, in exact numeric order (`compareTo`), never
+    *    approximated through double.
+    *
+    * A file whose max equals a strict lower bound of an inclusive kind is
+    * read and re-filtered to nothing. A file with no stat for the column,
+    * or a stat of another kind, always overlaps: stats only SHRINK a file
+    * list. */
+  sealed trait ColRange {
+    /** The conjunction of two ranges of the same kind on one column. */
+    def intersect(o: ColRange): ColRange = {
+      def meet[T](a: Option[T], b: Option[T])(pick: (T, T) => T) =
+        (a ++ b).reduceOption(pick)
+      (this, o) match {
+        case (LongRange(a, b), LongRange(c, d)) =>
+          LongRange(meet(a, c)(math.max), meet(b, d)(math.min))
+        case (StrRange(a, b), StrRange(c, d)) =>
+          StrRange(meet(a, c)(ColStat.strOrder.max),
+            meet(b, d)(ColStat.strOrder.min))
+        case (DblRange(a, b), DblRange(c, d)) =>
+          DblRange(meet(a, c)(ColStat.dblOrder.max),
+            meet(b, d)(ColStat.dblOrder.min))
+        case (DecRange(a, b), DecRange(c, d)) =>
+          DecRange(meet(a, c)(ColStat.decOrder.max),
+            meet(b, d)(ColStat.decOrder.min))
+        case _ => throw new IllegalArgumentException(
+          s"$this and $o are ranges of different kinds")
+      }
+    }
+    /** Can a file whose recorded [min, max] is `st` hold a row in range? */
+    def overlaps(st: ColStat): Boolean = this match {
+      case LongRange(lo, hi) => ColStat.overlapsLong(st,
+        lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
+      case StrRange(lo, hi) => ColStat.overlapsStr(st, lo, hi)
+      case DblRange(lo, hi) => ColStat.overlapsDbl(st,
+        lo.getOrElse(Double.NegativeInfinity), hi.getOrElse(Double.NaN))
+      case DecRange(lo, hi) => ColStat.overlapsDec(st, lo, hi)
+    }
+  }
+  final case class LongRange(lo: Option[Long], hi: Option[Long])
+      extends ColRange
+  final case class StrRange(lo: Option[String], hi: Option[String])
+      extends ColRange
+  final case class DblRange(lo: Option[Double], hi: Option[Double])
+      extends ColRange
+  final case class DecRange(lo: Option[java.math.BigDecimal],
+      hi: Option[java.math.BigDecimal]) extends ColRange
+
+  /** THE pruning kernel: the live files of version `v` that may hold a
+    * row inside EVERY range of `ranges` (per-kind contracts on
+    * [[ColRange]]), in manifest order. */
+  def keptFiles(tableDir: String, v: Long,
+      ranges: Map[String, ColRange]): Seq[String] =
+    keptFiles(entriesAt(tableDir, v).map(_._2), typedStatsAt(tableDir, v),
+      ranges)
+
+  /** [[keptFiles]] over `files` and per-file `stats` already in hand. */
+  def keptFiles(files: Seq[String], stats: Map[String, Map[String, ColStat]],
+      ranges: Map[String, ColRange]): Seq[String] =
+    files.filter { f =>
+      ranges.forall { case (c, r) =>
+        stats.get(f).flatMap(_.get(c)).forall(r.overlaps)
+      }
+    }
 
   /** Base64 (URL-safe, unpadded) for string stat bounds — the manifest is
     * tab/semicolon/colon-delimited text, so bounds must never collide
@@ -609,18 +693,21 @@ object SnapshotTable {
     * lines predate the field are absent, and readers fall back to the
     * filesystem for those only. */
   def fileMetaAt(tableDir: String, v: Long): Map[String, (Long, Long)] =
-    resolvedDataLines(tableDir, v).map {
-      _.iterator
-        .map(_.split('\t')).filter(_.length >= 4)
-        .flatMap { f =>
-          f(3).split(":", 2) match {
-            case Array(b, r) =>
-              try Some(f(1) -> (b.toLong, r.toLong))
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.filter(_._2._1 >= 0L).toMap
-    }.getOrElse(Map.empty)
+    resolvedDataLines(tableDir, v).map(metaOfLines).getOrElse(Map.empty)
+
+  /** The `bytes:rows` field of resolved data lines, by file; unparseable
+    * fields and unknown lengths are skipped. */
+  private def metaOfLines(lines: Seq[String]): Map[String, (Long, Long)] =
+    lines.iterator
+      .map(_.split('\t')).filter(_.length >= 4)
+      .flatMap { f =>
+        f(3).split(":", 2) match {
+          case Array(b, r) =>
+            try Some(f(1) -> (b.toLong, r.toLong))
+            catch { case _: NumberFormatException => None }
+          case _ => None
+        }
+      }.filter(_._2._1 >= 0L).toMap
 
   /** Live entries of the current snapshot (empty for an empty table). */
   def entries(tableDir: String): Seq[(String, String)] =
@@ -939,14 +1026,11 @@ object SnapshotTable {
     case (LongStat(l1, h1), LongStat(l2, h2)) =>
       LongStat(math.min(l1, l2), math.max(h1, h2))
     case (DblStat(l1, h1), DblStat(l2, h2)) =>
-      DblStat(if (java.lang.Double.compare(l1, l2) <= 0) l1 else l2,
-        if (java.lang.Double.compare(h1, h2) >= 0) h1 else h2)
+      DblStat(ColStat.dblOrder.min(l1, l2), ColStat.dblOrder.max(h1, h2))
     case (StrStat(l1, h1), StrStat(l2, h2)) =>
-      StrStat(if (ColStat.utf8Cmp(l1, l2) <= 0) l1 else l2,
-        if (ColStat.utf8Cmp(h1, h2) >= 0) h1 else h2)
+      StrStat(ColStat.strOrder.min(l1, l2), ColStat.strOrder.max(h1, h2))
     case (DecStat(l1, h1), DecStat(l2, h2)) =>
-      DecStat(if (l1.compareTo(l2) <= 0) l1 else l2,
-        if (h1.compareTo(h2) >= 0) h1 else h2)
+      DecStat(ColStat.decOrder.min(l1, l2), ColStat.decOrder.max(h1, h2))
     case other => sys.error(s"mismatched stat kinds $other")
   }
 
@@ -1027,16 +1111,7 @@ object SnapshotTable {
     val prevLines: Seq[String] =
       if (v > 1L) resolvedDataLines(tableDir, v - 1).getOrElse(Seq.empty)
       else Seq.empty
-    val prevMeta: Map[String, (Long, Long)] = prevLines.iterator
-      .map(_.split('\t')).filter(_.length >= 4)
-      .flatMap { f =>
-        f(3).split(":", 2) match {
-          case Array(b, r) =>
-            try Some(f(1) -> (b.toLong, r.toLong))
-            catch { case _: NumberFormatException => None }
-          case _ => None
-        }
-      }.filter(_._2._1 >= 0L).toMap
+    val prevMeta = metaOfLines(prevLines)
     val dataRoot = new Path(root, "data")
     def metaOf(f: String): (Long, Long) = prevMeta.getOrElse(f, {
       val rows = Option(stagedRows.get(f)).map(_.longValue).getOrElse(-1L)
@@ -1198,16 +1273,10 @@ object SnapshotTable {
     * listing only the new batch. Returns the committed version. */
   def overwrite(spark: SparkSession, tableDir: String, df: DataFrame,
       partCol: String, op: String = "overwrite",
-      txn: Option[(String, Long)] = None): Long = {
-    val (fs, root) = fsRoot(tableDir)
-    fs.mkdirs(root)
-    val basedOn = currentVersion(tableDir)
-    val tag = newBatchTag(basedOn + 1)
-    val staged = stageBatch(df, tableDir, partCol, tag)
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, staged,
-      schema = Some(df.schema), partCol = Some(partCol), op = op,
-      txn = txn))
-  }
+      txn: Option[(String, Long)] = None): Long =
+    overwriteWith(tableDir, df, partCol, op, txn) { tag =>
+      (stageBatch(df, tableDir, partCol, tag), Map.empty)
+    }
 
   /** Full-table overwrite through the range-clustered, stats-carrying
     * staging path ([[stageBatchClustered]]): the committed manifest
@@ -1215,16 +1284,10 @@ object SnapshotTable {
     * files by predicate without opening them. */
   def overwriteClustered(spark: SparkSession, tableDir: String,
       df: DataFrame, partCol: String, statsCols: Seq[String],
-      rangeFiles: Int, op: String = "overwrite"): Long = {
-    val (fs, root) = fsRoot(tableDir)
-    fs.mkdirs(root)
-    val basedOn = currentVersion(tableDir)
-    val tag = newBatchTag(basedOn + 1)
-    val (staged, stats) = stageBatchClustered(
-      df, tableDir, partCol, tag, statsCols, rangeFiles)
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, staged, stats,
-      Some(df.schema), Some(partCol), op))
-  }
+      rangeFiles: Int, op: String = "overwrite"): Long =
+    overwriteWith(tableDir, df, partCol, op) { tag =>
+      stageBatchClustered(df, tableDir, partCol, tag, statsCols, rangeFiles)
+    }
 
   /** [[overwriteClustered]] through the Z-ORDERED staging path
     * ([[stageBatchZordered]]): the manifest carries per-file min/max for
@@ -1232,15 +1295,25 @@ object SnapshotTable {
     * one (or their conjunction) from the manifest alone. */
   def overwriteZordered(spark: SparkSession, tableDir: String,
       df: DataFrame, partCol: String, statsCols: Seq[String],
-      rangeFiles: Int): Long = {
+      rangeFiles: Int): Long =
+    overwriteWith(tableDir, df, partCol, "commit") { tag =>
+      stageBatchZordered(df, tableDir, partCol, tag, statsCols, rangeFiles)
+    }
+
+  /** The commit every full-table overwrite shares: `stage` writes the new
+    * batch under the given tag and returns its entries and stats, which
+    * replace every live entry by CAS against the version read first. */
+  private def overwriteWith(tableDir: String, df: DataFrame, partCol: String,
+      op: String, txn: Option[(String, Long)] = None)(
+      stage: String => (Seq[(String, String)], Map[String, Map[String, ColStat]]))
+      : Long = {
     val (fs, root) = fsRoot(tableDir)
     fs.mkdirs(root)
     val basedOn = currentVersion(tableDir)
     val tag = newBatchTag(basedOn + 1)
-    val (staged, stats) = stageBatchZordered(
-      df, tableDir, partCol, tag, statsCols, rangeFiles)
+    val (staged, stats) = stage(tag)
     commitOrDiscard(tag)(casCommit(tableDir, basedOn, staged, stats,
-      Some(df.schema), Some(partCol)))
+      Some(df.schema), Some(partCol), op, txn))
   }
 
   /** CDC MERGE with an atomic multi-partition commit: same merge kernel
@@ -1292,15 +1365,13 @@ object SnapshotTable {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val oldStats = typedStatsAt(tableDir, basedOn)
     // a file is provably update-free iff its partition's batch keys have
-    // known bounds AND the file records LONG stats for the key AND the
-    // ranges are disjoint; anything less (no stats, wrong type, null
-    // keys) keeps the conservative read-and-merge path
+    // known bounds AND the kernel prunes the file against them; anything
+    // less (no stats, wrong type, null keys) keeps the conservative
+    // read-and-merge path
     def updateFree(partVal: String, file: String): Boolean =
       keyBounds.get(partVal).exists { case (lo, hi) =>
-        oldStats.get(file).flatMap(_.get(keyCols.head)).exists {
-          case LongStat(mn, mx) => mx < lo || mn > hi
-          case _ => false
-        }
+        keptFiles(Seq(file), oldStats,
+          Map(keyCols.head -> LongRange(Some(lo), Some(hi)))).isEmpty
       }
     val old = entriesAt(tableDir, basedOn)
     val (touchedOld, untouched) = old.partition { case (p, f) =>
@@ -1348,19 +1419,22 @@ object SnapshotTable {
     * run out — livelock surfaces loudly instead of spinning forever. */
   def upsertRetrying(spark: SparkSession, tableDir: String,
       updates: DataFrame, partCol: String, keyCols: Seq[String],
-      versionCol: String, deleteCol: String, maxAttempts: Int = 5): Long = {
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return upsert(spark, tableDir, updates, partCol, keyCols,
-        versionCol, deleteCol)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      versionCol: String, deleteCol: String, maxAttempts: Int = 5): Long =
+    retryOnConflict(maxAttempts) {
+      upsert(spark, tableDir, updates, partCol, keyCols, versionCol, deleteCol)
     }
-    -1L // unreachable
+
+  /** Run `commit` up to `maxAttempts` times while it loses the CAS race
+    * ([[java.util.ConcurrentModificationException]]); the last attempt's
+    * conflict propagates. */
+  private def retryOnConflict(maxAttempts: Int)(commit: => Long): Long = {
+    require(maxAttempts >= 1, "need at least one attempt")
+    var attempt = 1
+    while (attempt < maxAttempts) {
+      try return commit
+      catch { case _: java.util.ConcurrentModificationException => attempt += 1 }
+    }
+    commit
   }
 
   /** APPEND commit — the plain `INSERT INTO` shape: stage `rows` as one
@@ -1375,11 +1449,8 @@ object SnapshotTable {
     * appending a key that is already live breaks the unique-key-per-
     * version invariant [[diffImages]] (the change feed) relies on. */
   def append(spark: SparkSession, tableDir: String, rows: DataFrame,
-      maxAttempts: Int = 5, txn: Option[(String, Long)] = None): Long = {
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      maxAttempts: Int = 5, txn: Option[(String, Long)] = None): Long =
+    retryOnConflict(maxAttempts) {
       val basedOn = currentVersion(tableDir)
       require(basedOn >= 1, s"$tableDir has no committed version — " +
         "appending to a never-created table is a create, not an INSERT; " +
@@ -1403,16 +1474,10 @@ object SnapshotTable {
       val tag = newBatchTag(basedOn + 1)
       val staged = stageBatch(conformed, tableDir, pc, tag)
       val old = entriesAt(tableDir, basedOn)
-      try return commitOrDiscard(tag)(casCommit(tableDir, basedOn,
+      commitOrDiscard(tag)(casCommit(tableDir, basedOn,
         old ++ staged, typedStatsAt(tableDir, basedOn), Some(sch), Some(pc),
         op = "insert", txn = txn))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-      }
     }
-    -1L // unreachable
-  }
 
   /** Copy-on-write rewrite of the files a predicate MAY touch — the
     * shared kernel of [[deleteWhere]] and [[updateWhere]] (the Delta/
@@ -1442,14 +1507,10 @@ object SnapshotTable {
     val basedOn = currentVersion(tableDir)
     val all = entriesAt(tableDir, basedOn)
     val st = typedStatsAt(tableDir, basedOn)
-    val overlaps = (f: String) => pruneRange match {
-      case Some((c, lo, hi)) => st.get(f).flatMap(_.get(c)) match {
-        case Some(cs) => ColStat.overlapsLong(cs, lo, hi)
-        case None => true // no stats: conservatively a candidate
-      }
-      case None => true
-    }
-    val (touched, carried) = all.partition { case (_, f) => overlaps(f) }
+    val candidates = keptFiles(all.map(_._2), st, pruneRange.map {
+      case (c, lo, hi) => c -> (LongRange(Some(lo), Some(hi)): ColRange)
+    }.toMap).toSet
+    val (touched, carried) = all.partition { case (_, f) => candidates(f) }
     if (touched.isEmpty) return basedOn
     val sch = schemaAt(tableDir, basedOn)
     val rewritten = transform(readFiles(spark, tableDir, basedOn, touched.map(_._2), sch))
@@ -1542,22 +1603,12 @@ object SnapshotTable {
   /** Fold every live file into one fresh batch and commit — the
     * small-files/orphan-batch compaction. Old batches stay on disk for
     * time travel; physical deletion of unreferenced batches is
-    * [[vacuum]]'s retention decision. */
+    * [[vacuum]]'s retention decision. The fold LOSES the manifest column
+    * stats (its staged files carry none); [[overwriteClustered]] of
+    * [[read]] with `op = "compact"` re-clusters and re-stats it instead. */
   def compact(spark: SparkSession, tableDir: String, partCol: String): Long =
     overwrite(spark, tableDir, read(spark, tableDir), partCol,
       op = "compact")
-
-  /** [[compact]] through the range-clustered, stats-carrying staging path:
-    * plain compact folds files but LOSES the manifest column stats (its
-    * staged files carry none), silently turning [[readRange]] back into a
-    * read-everything scan — this form re-clusters the fold on
-    * `statsCols.head` and records fresh per-file min/max, so compaction
-    * IMPROVES skipping (upsert-scattered key ranges re-sort into narrow
-    * slices) instead of destroying it. */
-  def compactClustered(spark: SparkSession, tableDir: String,
-      partCol: String, statsCols: Seq[String], rangeFiles: Int): Long =
-    overwriteClustered(spark, tableDir, read(spark, tableDir), partCol,
-      statsCols, rangeFiles, op = "compact")
 
   /** SELECTIVE small-file compaction — the Delta/Iceberg OPTIMIZE
     * bin-packing shape that [[compact]]'s whole-table fold cannot give at
@@ -1787,114 +1838,56 @@ object SnapshotTable {
       entriesAt(tableDir, v).collect { case (p, f) if parts(p) => f }, v)
   }
 
-  /** Manifest-stats file skipping: read only files whose recorded
-    * `statCol` [min, max] overlaps `[lo, hi]` — files without stats are
-    * conservatively read (correctness never depends on stats; they only
-    * SHRINK the file list). The caller still applies the exact row
+  /** Manifest-stats file skipping on a LONG stat column: the live files
+    * [[keptFiles]] keeps for `statCol` in `[lo, hi]` (files without a
+    * LONG stat for it are read). The caller still applies the exact row
     * predicate on top: stats prune FILES, not rows. Returns the pruned
     * frame (schema-preserving even when everything is skipped). */
   def readRange(spark: SparkSession, tableDir: String, statCol: String,
-      lo: Long, hi: Long): DataFrame = {
-    val v = currentVersion(tableDir)
-    val st = statsAt(tableDir, v)
-    val all = entriesAt(tableDir, v).map(_._2)
-    val kept = all.filter { f =>
-      st.get(f).flatMap(_.get(statCol)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    readOrEmpty(spark, tableDir, kept, v)
-  }
+      lo: Long, hi: Long): DataFrame =
+    readKept(spark, tableDir, Map(statCol -> LongRange(Some(lo), Some(hi))))
 
-  /** Conjunctive manifest-stats skipping — [[readRange]] over several
-    * columns at once: only files whose recorded [min, max] overlaps EVERY
-    * range are opened (a file missing stats for any named column is
-    * conservatively read). With a Z-ordered layout
+  /** Conjunctive [[readRange]] over several LONG ranges at once (ranges
+    * on one column intersect): only files that may hold a row inside
+    * EVERY range are opened. With a Z-ordered layout
     * ([[overwriteZordered]]) each file is a rectangle in the interleaved
     * plane, so a two-sided predicate prunes multiplicatively — the case
-    * linear clustering cannot serve. The caller still applies the exact
-    * row predicate on top. */
+    * linear clustering cannot serve. */
   def readRanges(spark: SparkSession, tableDir: String,
       ranges: Seq[(String, Long, Long)]): DataFrame = {
     require(ranges.nonEmpty, "need at least one (column, lo, hi) range")
-    val v = currentVersion(tableDir)
-    val st = statsAt(tableDir, v)
-    val kept = entriesAt(tableDir, v).map(_._2).filter { f =>
-      ranges.forall { case (c, lo, hi) =>
-        st.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }
-    readOrEmpty(spark, tableDir, kept, v)
+    readKept(spark, tableDir, ranges.groupMapReduce(_._1) {
+      case (_, lo, hi) => LongRange(Some(lo), Some(hi)): ColRange
+    }(_ intersect _))
   }
 
-  /** STRING-stats file skipping — [[readRange]] for a string-typed stat
-    * column (the `month >= '1997-01'` class, the most common real prune):
-    * only files whose recorded [min, max] overlaps `[lo, hi]` in UNSIGNED
-    * UTF-8 BYTE order (exactly the order Spark's min/max computed them
-    * under — [[ColStat.utf8Cmp]]) are opened; either bound may be open
-    * (None). Files without a string stat for the column are
-    * conservatively read, and the caller still applies the exact row
-    * predicate on top — stats prune FILES, not rows. */
+  /** [[readRange]] for a STRING stat column (the `month >= '1997-01'`
+    * class, the most common real prune); either bound may be open (None).
+    * Bounds compare in unsigned UTF-8 byte order ([[ColRange]]). */
   def readRangeStr(spark: SparkSession, tableDir: String, statCol: String,
-      lo: Option[String], hi: Option[String]): DataFrame = {
-    val v = currentVersion(tableDir)
-    val st = typedStatsAt(tableDir, v)
-    val kept = entriesAt(tableDir, v).map(_._2).filter { f =>
-      st.get(f).flatMap(_.get(statCol)) match {
-        case Some(cs) => ColStat.overlapsStr(cs, lo, hi)
-        case None => true
-      }
-    }
-    readOrEmpty(spark, tableDir, kept, v)
-  }
+      lo: Option[String], hi: Option[String]): DataFrame =
+    readKept(spark, tableDir, Map(statCol -> StrRange(lo, hi)))
 
-  /** DOUBLE-stats file skipping — [[readRange]] for a double-typed stat
-    * column (score/price/weight bands): only files whose recorded
-    * [min, max] overlaps `[lo, hi]` under Spark's NaN-greatest ordering
-    * ([[ColStat.overlapsDbl]]) are opened — a NaN-carrying file records
-    * hi = NaN and survives every lower-bounded probe, matching Spark's
-    * `NaN >= x` = TRUE filter truth. `[lo, hi]` lives in the SAME total
-    * order: pass `hi = Double.NaN` (the order's TOP) for "no upper
-    * bound" — a +∞/MaxValue ceiling would wrongly prune an all-NaN file
-    * (min = max = NaN) whose rows a lower-bounded row predicate matches.
-    * Files without a double stat for the column are conservatively read;
-    * the caller still applies the exact row predicate on top — stats
-    * prune FILES, not rows. */
+  /** [[readRange]] for a DOUBLE stat column (score/price/weight bands),
+    * in Spark's total order ([[ColRange]]): pass `hi = Double.NaN`, the
+    * order's TOP, for "no upper bound" — a +∞ ceiling would prune an
+    * all-NaN file whose rows a lower-bounded row predicate matches. */
   def readRangeDbl(spark: SparkSession, tableDir: String, statCol: String,
-      lo: Double, hi: Double): DataFrame = {
-    val v = currentVersion(tableDir)
-    val st = typedStatsAt(tableDir, v)
-    val kept = entriesAt(tableDir, v).map(_._2).filter { f =>
-      st.get(f).flatMap(_.get(statCol)) match {
-        case Some(cs) => ColStat.overlapsDbl(cs, lo, hi)
-        case None => true
-      }
-    }
-    readOrEmpty(spark, tableDir, kept, v)
-  }
+      lo: Double, hi: Double): DataFrame =
+    readKept(spark, tableDir, Map(statCol -> DblRange(Some(lo), Some(hi))))
 
-  /** DECIMAL-stats file skipping — [[readRangeDbl]]'s exact-numeric
-    * sibling for money/quantity columns: only files whose recorded
-    * [min, max] overlaps the probe under `BigDecimal.compareTo` are
-    * opened; `None` bounds are unbounded on that side (no NaN games —
-    * DECIMAL has no NaN). Files without a decimal stat for the column
-    * are conservatively read; the exact row predicate applies on top. */
+  /** [[readRange]] for a DECIMAL stat column (money/quantity), in exact
+    * numeric order ([[ColRange]]); `None` bounds are open. */
   def readRangeDec(spark: SparkSession, tableDir: String, statCol: String,
       lo: Option[java.math.BigDecimal],
-      hi: Option[java.math.BigDecimal]): DataFrame = {
+      hi: Option[java.math.BigDecimal]): DataFrame =
+    readKept(spark, tableDir, Map(statCol -> DecRange(lo, hi)))
+
+  /** The live snapshot's [[keptFiles]] for `ranges`, as a frame. */
+  private def readKept(spark: SparkSession, tableDir: String,
+      ranges: Map[String, ColRange]): DataFrame = {
     val v = currentVersion(tableDir)
-    val st = typedStatsAt(tableDir, v)
-    val kept = entriesAt(tableDir, v).map(_._2).filter { f =>
-      st.get(f).flatMap(_.get(statCol)) match {
-        case Some(cs) => ColStat.overlapsDec(cs, lo, hi)
-        case None => true
-      }
-    }
-    readOrEmpty(spark, tableDir, kept, v)
+    readOrEmpty(spark, tableDir, keptFiles(tableDir, v, ranges), v)
   }
 
   /** The RETRACTION form of [[diff]] — one signed row per change

@@ -427,8 +427,9 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.compact(spark, dir, "part")
     assert(SnapshotTable.statsAt(dir, SnapshotTable.currentVersion(dir)).isEmpty)
     // clustered compact: content identical AND every file statted again
-    val v = SnapshotTable.compactClustered(spark, dir, "part",
-      statsCols = Seq("k"), rangeFiles = 4)
+    val v = SnapshotTable.overwriteClustered(spark, dir,
+      SnapshotTable.read(spark, dir), "part", statsCols = Seq("k"),
+      rangeFiles = 4, op = "compact")
     val after = SnapshotTable.read(spark, dir)
       .select("k", "name").as[(Long, String)].collect().toSet
     assert(after == before)
