@@ -4,7 +4,8 @@
 # Usage: scripts/loc.sh <rev>
 # A line counts when it holds code: blank lines, `//` comments and
 # block/scaladoc comments are skipped; a line carrying code and a comment
-# counts. Prints "added <n> removed <n> net <n>".
+# counts (the scanner is scripts/scala_scan.py). Prints
+# "added <n> removed <n> net <n>".
 set -euo pipefail
 cd "$(dirname "$0")/.."
 rev=${1:?usage: scripts/loc.sh <rev>}
@@ -16,6 +17,9 @@ import re
 import subprocess
 import sys
 
+sys.path.insert(0, "scripts")
+from scala_scan import scan  # noqa: E402
+
 rev = sys.argv[1]
 ROOT = "src/main/scala"
 
@@ -26,50 +30,7 @@ def git(*args):
 
 
 def code_lines(text):
-    """1-based numbers of the lines holding code outside comments and
-    string literals (block comments nest, as in Scala)."""
-    code, depth, i, n, line = set(), 0, 0, len(text), 1
-    while i < n:
-        ch = text[i]
-        if ch == "\n":
-            line += 1
-            i += 1
-        elif depth:
-            if text.startswith("/*", i):
-                depth, i = depth + 1, i + 2
-            elif text.startswith("*/", i):
-                depth, i = depth - 1, i + 2
-            else:
-                i += 1
-        elif text.startswith("//", i):
-            while i < n and text[i] != "\n":
-                i += 1
-        elif text.startswith("/*", i):
-            depth, i = 1, i + 2
-        elif text.startswith('"""', i):
-            end = text.find('"""', i + 3)
-            end = n if end < 0 else end + 3
-            while end < n and text[end] == '"':
-                end += 1
-            for _ in range(text.count("\n", i, end) + 1):
-                code.add(line)
-                line += 1
-            line -= 1
-            i = end
-        elif ch == '"':
-            code.add(line)
-            i += 1
-            while i < n and text[i] not in '"\n':
-                i += 2 if text[i] == "\\" else 1
-            i += 1
-        elif ch == "'" and re.match(r"'(\\.[^']*|[^\\'\n])'", text[i:i + 8]):
-            code.add(line)
-            i = text.index("'", i + 2) + 1
-        else:
-            if not ch.isspace():
-                code.add(line)
-            i += 1
-    return code
+    return scan(text)[0]
 
 
 def source(spec):

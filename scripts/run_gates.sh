@@ -5,6 +5,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== reachability: main code serves a query, a main, the harness or a hook =="
+python3 scripts/reach.py
+
 echo "== unit tests =="
 sbt -batch test 2>&1 | grep -E "Tests: |All tests"
 

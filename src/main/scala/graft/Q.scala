@@ -17,8 +17,6 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 
   /** Top-level Array/Map column names — the driver's oracle harness sorts
     * both result frames with pandas before hashing, and array cells crash

@@ -26,9 +26,12 @@ object Sessions {
       // doesn't own)
       .config("spark.sql.warehouse.dir", graft.core.Artifacts.dir("graft-wh"))
       .config("spark.ui.enabled", "false")
-      // checksummed local fs that sets permissions without forking chmod
+      // checksummed local fs that sets permissions without forking chmod,
+      // for FileSystem and for FileContext (streaming checkpoints)
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.core.NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.core.NoForkLocalFileSystem.Fs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -36,12 +36,6 @@ object ColFns {
   def curie(prefix: String, id: Column): Column =
     when(id.isNotNull, concat(lit(prefix.toLowerCase + ":"), id.cast("string")))
 
-  /** Strip a known CURIE prefix back off: inverse of [[curie]] for joins
-    * against un-prefixed source tables. Un-prefixed ids pass through
-    * unchanged (guarded — ANSI element_at would throw on them). */
-  def uncurie(c: Column): Column =
-    when(c.contains(":"), element_at(split(c, ":", 2), 2)).otherwise(c)
-
   /** Neo4j-safe property escaping: single-quote → caret, pipe → comma.
     * Applied only at the CSV sink, never internally. */
   def escapeProps(c: Column): Column = translate(c, "'|", "^,")

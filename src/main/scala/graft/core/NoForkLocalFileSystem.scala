@@ -1,8 +1,12 @@
 package graft.core
 
+import java.net.URI
 import java.nio.file.{FileSystems, Files}
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem of every [[graft.Sessions.local]] session: a
@@ -17,7 +21,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * any platform without the `unix` attribute view, take Hadoop's own path.
   *
   * The engine does not depend on this class for correctness: a vanilla
-  * session writes the same files with the same bits, only slower. */
+  * session writes the same files with the same bits, only slower.
+  * [[NoForkLocalFileSystem.Fs]] is the same stack for `FileContext`, which
+  * Structured Streaming's checkpoints write through. */
 class NoForkLocalFileSystem extends LocalFileSystem(new NoForkLocalFileSystem.Raw)
 
 object NoForkLocalFileSystem {
@@ -42,5 +48,30 @@ object NoForkLocalFileSystem {
         val kept = if ((old & TypeMask) == Dir) old & SetIds else 0
         Files.setAttribute(f, "unix:mode", kept | (permission.toShort & Rwx))
       }
+
+    /** Without native `libhadoop`, Hadoop learns whether a path is a
+      * symlink by running `readlink` in a child process, and `FileContext`
+      * asks on every rename (each checkpoint commit). A path that is not a
+      * symlink is its own link status; a symlink takes Hadoop's path. */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
+  }
+
+  /** The `file:` `AbstractFileSystem` behind `FileContext` (key
+    * `fs.AbstractFileSystem.file.impl`): Hadoop's `LocalFs` stack, a
+    * [[ChecksumFs]] over the raw filesystem, with [[Raw]] as the raw
+    * layer. */
+  class Fs(uri: URI, conf: Configuration) extends ChecksumFs(new RawFs(uri, conf))
+
+  /** Hadoop's `RawLocalFs` over [[Raw]]. */
+  private class RawFs(uri: URI, conf: Configuration)
+      extends DelegateToFileSystem(uri, new Raw, conf, "file", false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def getServerDefaults(): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def isValidName(src: String): Boolean = true
   }
 }

@@ -289,11 +289,20 @@ object Dedup {
     jaccardOfPairs(sh,
       Some(minhashCandidatesFromSignatures(sig, numHashes, bands)), threshold)
 
-  /** [[crossSnapshotNearDups]] over prebuilt artifacts: both sides'
-    * signatures are SLICES of the persisted signature table (signatures
-    * are per-document, so a corpus/batch split of the table IS each
-    * side's signature set), and the shared shingle table serves the
-    * verification. Candidates pair new→old only. */
+  /** Incremental (cross-snapshot) near-dup detection: near-duplicates of
+    * an incoming batch AGAINST an existing corpus — the shape a rolling
+    * crawl/snapshot pipeline runs, where the already-deduped corpus is
+    * settled and only new→old matches matter. Banded minhash buckets are
+    * built per side and the candidate join pairs new with old ONLY (never
+    * new×new or old×old), so cost scales with the incoming batch, not the
+    * corpus; exact Jaccard verifies candidates over the shared shingle
+    * table `sh`. Both sides' signatures are SLICES of the persisted
+    * signature table (signatures are per-document, so a corpus/batch
+    * split of the table IS each side's signature set), computed once and
+    * re-used across batches.
+    *
+    * Doc ids must be disjoint across the two sides (they key the shared
+    * verification). Returns (new_id, old_id, jaccard ≥ threshold). */
   def crossSnapshotNearDupsFromArtifacts(sigCorpus: DataFrame,
       sigBatch: DataFrame, sh: DataFrame, numHashes: Int = 32,
       bands: Int = 8, threshold: Double = 0.5): DataFrame = {
@@ -302,36 +311,6 @@ object Dedup {
     val cand = candNew.toDF("a", "band", "key")
       .join(candOld.toDF("b", "band", "key"), Seq("band", "key"))
       .select(col("a"), col("b")).distinct()
-    jaccardOfPairs(sh, Some(cand), threshold)
-      .select(col("a").as("new_id"), col("b").as("old_id"), col("jaccard"))
-  }
-
-  /** Incremental (cross-snapshot) near-dup detection: near-duplicates of
-    * `incoming` documents AGAINST an existing `corpus` — the shape a
-    * rolling crawl/snapshot pipeline runs, where the already-deduped
-    * corpus is settled and only new→old matches matter. Banded minhash
-    * buckets are built per side and the candidate join pairs new with old
-    * ONLY (never new×new or old×old), so cost scales with the incoming
-    * batch, not the corpus; exact Jaccard verifies candidates. At 100 TB
-    * the corpus-side signatures are computed once and persisted — re-used
-    * across batches — and the bucket join shuffles on (band, key) like
-    * every LSH path here.
-    *
-    * Doc ids must be disjoint across the two frames (they key the shared
-    * verification). Returns (new_id, old_id, jaccard ≥ threshold). */
-  def crossSnapshotNearDups(
-      corpus: DataFrame, incoming: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5): DataFrame = {
-    val candNew = bandedKeys(
-      minhashSignatures(incoming, idCol, textCol, n, numHashes), numHashes, bands)
-    val candOld = bandedKeys(
-      minhashSignatures(corpus, idCol, textCol, n, numHashes), numHashes, bands)
-    val cand = candNew.toDF("a", "band", "key")
-      .join(candOld.toDF("b", "band", "key"), Seq("band", "key"))
-      .select(col("a"), col("b")).distinct()
-    val sh = shingles(incoming, idCol, textCol, n)
-      .unionByName(shingles(corpus, idCol, textCol, n))
     jaccardOfPairs(sh, Some(cand), threshold)
       .select(col("a").as("new_id"), col("b").as("old_id"), col("jaccard"))
   }
@@ -517,26 +496,16 @@ object Dedup {
 
   /** SimHash near-duplicate pairs via simple banding. COMPLETE only when
     * `maxHamming < bands` (pigeonhole — the default 4 bands / maxHamming 3
-    * satisfies it); for wider Hamming radii use
-    * [[simhashNearDupPairsComplete]], whose combination tables restore
-    * the guarantee. Band keys narrower than ~16 bits make the bucket
-    * self-join quadratic-with-a-constant rather than bucketed — don't
-    * lower the signature width below 64 at corpus scale. */
+    * satisfies it); for wider Hamming radii use [[mankuNearDupPairs]]
+    * over [[simhashSignatures]], whose combination tables restore the
+    * guarantee. Band keys narrower than ~16 bits make the bucket self-join
+    * quadratic-with-a-constant rather than bucketed — don't lower the
+    * signature width below 64 at corpus scale. */
   def simhashNearDupPairs(
       docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, bands: Int = 4, maxHamming: Int = 3): DataFrame =
     signatureNearDupPairs(
       simhashSignatures(docs, idCol, textCol, bits), bits, bands, maxHamming)
-
-  /** SimHash near-duplicate pairs with the COMPLETE candidate guarantee at
-    * radii ≥ the band count — [[mankuNearDupPairs]] over the signatures
-    * (default: 10 blocks, C(10,2) = 45 two-block tables, complete for
-    * Hamming ≤ 8). */
-  def simhashNearDupPairsComplete(
-      docs: DataFrame, idCol: String, textCol: String,
-      bits: Int = 64, blocks: Int = 10, maxHamming: Int = 8): DataFrame =
-    mankuNearDupPairs(
-      simhashSignatures(docs, idCol, textCol, bits), bits, blocks, maxHamming)
 
   /** Banded Hamming-neighbor pairs over ANY 64-bit-signature table
     * (`(doc_id, sig)`) — the candidate machinery shared by SimHash text

@@ -5,9 +5,8 @@ import graft.Q
 import graft.core.Tables
 import graft.streaming.EventStreams
 
-/** Event-stream queries in their batch form (the driver's oracle runs
-  * batch SQL); the streaming twins (watermarks, dropDuplicatesWithin-
-  * Watermark, session_window) are exercised in EventStreamsSpec. */
+/** Event-log queries over the `events` table, each a batch plan the
+  * driver's oracle checks with the same SQL. */
 object EventQueries {
 
   val evTumbling = Q(
@@ -57,9 +56,8 @@ object EventQueries {
     EventStreams.firstEventPerKey(Tables.events(s, d))
   }
 
-  /** Click→purchase interval join — the batch form of the watermarked
-    * stream-stream join (streaming twin proven equivalent in
-    * EventStreamsSpec). */
+  /** Click→purchase interval join: purchases by the same user within
+    * 600 s after a click. */
   val evIntervalJoin = Q(
     "ev_interval_join",
     """WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
@@ -389,9 +387,8 @@ object EventQueries {
         graft.ops.Kernels.orderedMiddle(col("gap_us")).as("mid_gap_us"))
   }
 
-  /** Per-user running distinct event-type count (batch form of the
-    * transformWithState state-v2 operator — EventStreamsSpec proves the
-    * streamed twin equals this row-for-row). */
+  /** Per-user running distinct event-type count
+    * ([[EventStreams.distinctTypesRunning]]). */
   val evDistinctRunning = Q(
     "ev_distinct_running",
     """WITH f AS (SELECT user_id, event_id, ts,

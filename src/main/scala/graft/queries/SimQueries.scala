@@ -504,7 +504,7 @@ object SimQueries {
         "vec_id", "embedding", centroidStep = 40, maxRank = 1))
 
   /** Shared DuckDB replica of the multi-probe LSH machinery (Similarity
-    * .lshCandidates): hyperplane ±1 literals baked in, projections as
+    * .lshCandidatesFromIndex): hyperplane ±1 literals baked in, projections as
     * sequential folds, sign-bit bucket ids, Hamming-1 probe explode, and
     * the hot-bucket corpus cap (norm desc, vec_id asc — the deterministic
     * order the engine uses). Ends with CTEs `bk0` (bucketed, uncapped —
@@ -716,8 +716,8 @@ object SimQueries {
   }
 
   /** Cross-snapshot embedding near-dups
-    * ([[Similarity.crossSnapshotEmbNearDups]]): odd vec_ids play the
-    * incoming batch, even the settled corpus; the batch's probe buckets
+    * ([[Similarity.crossSnapshotEmbNearDupsFromIndex]]): odd vec_ids play
+    * the incoming batch, even the settled corpus; the batch's probe buckets
     * join the corpus's home buckets only — new×old candidates, cost
     * scaling with the batch (the embedding twin of x_dedup_incremental).
     * Full oracle replica of buckets, probes and cosines. */

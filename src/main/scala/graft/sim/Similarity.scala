@@ -460,15 +460,6 @@ object Similarity {
     (queries, corpus)
   }
 
-  private def lshCandidates(
-      emb: DataFrame, idCol: String, vecCol: String,
-      planes: Int, dim: Int, probes: Int,
-      bucketCap: Int, carryCols: Seq[String] = Nil,
-      capAlso: Seq[String] = Nil): (DataFrame, DataFrame) =
-    lshCandidatesFromIndex(
-      lshIndex(emb, idCol, vecCol, planes, dim, carryCols),
-      planes, probes, bucketCap, carryCols, capAlso)
-
   def lshTopK(
       emb: DataFrame, idCol: String, vecCol: String, k: Int,
       planes: Int = 6, dim: Int = 64, probes: Int = 0,
@@ -760,29 +751,20 @@ object Similarity {
   }
 
   /** Cross-snapshot embedding near-dups — the embedding twin of
-    * [[graft.dedup.Dedup.crossSnapshotNearDups]]: the incoming batch's
-    * multi-probe buckets join the settled corpus's HOME buckets only, so
-    * candidates pair new×old and cost scales with the batch, never
-    * corpus². The corpus bucket table is computable once and persisted at
-    * scale (8 bytes + vector per row); determinism and the
-    * one-pair-per-candidate property follow from the shared machinery
-    * (each corpus vector sits in one bucket; probe values are distinct).
-    * Output: (new_id, old_id, cos) with cos ≥ threshold. */
-  def crossSnapshotEmbNearDups(corpus: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      planes: Int = 6, dim: Int = 64, probes: Int = 1,
-      bucketCap: Int = 512): DataFrame =
-    crossSnapshotEmbNearDupsFromIndex(
-      lshIndex(corpus, idCol, vecCol, planes, dim),
-      lshIndex(batch, idCol, vecCol, planes, dim),
-      threshold, planes, probes, bucketCap)
-
-  /** [[crossSnapshotEmbNearDups]] over prebuilt [[lshIndex]] frames — the
-    * settled corpus's index is exactly the artifact a persisted table
-    * serves across batches (compute once, probe forever); the batch index
-    * is one batch's worth of projection work. The hot-bucket cap applies
-    * to the corpus index AS GIVEN, so slice before passing when the
-    * persisted table is a superset. */
+    * [[graft.dedup.Dedup.crossSnapshotNearDupsFromArtifacts]]: the
+    * incoming batch's multi-probe buckets join the settled corpus's HOME
+    * buckets only, so candidates pair new×old and cost scales with the
+    * batch, never corpus². Determinism and the one-pair-per-candidate
+    * property follow from the shared machinery (each corpus vector sits in
+    * one bucket; probe values are distinct). Output: (new_id, old_id, cos)
+    * with cos ≥ threshold.
+    *
+    * Both sides are prebuilt [[lshIndex]] frames: the settled corpus's
+    * index is exactly the artifact a persisted table serves across batches
+    * (compute once, probe forever); the batch index is one batch's worth
+    * of projection work. The hot-bucket cap applies to the corpus index AS
+    * GIVEN, so slice before passing when the persisted table is a
+    * superset. */
   def crossSnapshotEmbNearDupsFromIndex(corpusIdx: DataFrame,
       batchIdx: DataFrame, threshold: Double, planes: Int,
       probes: Int = 1, bucketCap: Int = 512): DataFrame = {
@@ -834,7 +816,7 @@ object Similarity {
   }
 
   /** The SCALE form of hard-negative mining: candidates come from the
-    * multi-probe LSH bucket machinery ([[lshCandidates]] — corpus
+    * multi-probe LSH bucket machinery ([[lshCandidatesFromIndex]] — corpus
     * bucketed once and hot-bucket-capped, query probe set exploded,
     * bucket equi-join), the different-label filter prunes the pair
     * stream before the exact cosine, and ranking runs through the

@@ -49,47 +49,6 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Compact a small-files table (the operational counterpart of the
-    * partitioned layout): rewrite `inDir`'s parquet into `outDir` with
-    * ~`targetRowsPerFile` rows per file. The small-file problem is a real
-    * 100 TB failure mode — a streaming sink or over-parallel write leaves
-    * thousands of KB-sized files and every later scan pays per-file open
-    * cost + starved row groups. Row-count-based sizing keeps this
-    * deterministic (byte-based would depend on encoder state); the
-    * repartition distributes rows round-robin so output files are even,
-    * and `maxRecordsPerFile` caps any residual overflow. Returns the
-    * output file count. */
-  def compactParquet(
-      spark: SparkSession, inDir: String, outDir: String,
-      targetRowsPerFile: Long = 1000000L): Int = {
-    val df = spark.read.parquet(inDir)
-    val rows = df.count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile)
-    df.repartition(nFiles.toInt)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(outDir)
-    new java.io.File(outDir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-  }
-
-  /** Range-clustered rewrite — compaction plus DATA SKIPPING: rows are
-    * range-partitioned on `clusterCols` and sorted within each partition,
-    * so each output file covers a disjoint key range and its parquet
-    * footer min/max statistics prune whole FILES for range predicates
-    * (the layout Z-ordering generalizes; for a single clustering
-    * dimension plain range clustering is optimal). The spec asserts the
-    * disjointness from the written files themselves. `nFiles` is explicit
-    * because the right number is a capacity decision (rows × row width ÷
-    * target file size), not something to infer from a sample. */
-  def clusterParquet(
-      spark: SparkSession, inDir: String, outDir: String,
-      clusterCols: Seq[String], nFiles: Int): Unit =
-    spark.read.parquet(inDir)
-      .repartitionByRange(nFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode("overwrite").parquet(outDir)
-
   /** Morton (bit-interleaved) Z-value of two non-negative integer
     * columns, 21 bits each: bit i of `a` lands at position 2i, bit i of
     * `b` at 2i+1. Pure integer shift/mask expressions — whole-stage
@@ -101,24 +60,6 @@ object Sinks {
           shiftleft(shiftrightunsigned(b.cast("long"), i).bitwiseAND(lit(1L)),
             2 * i + 1))
     }.reduce(_.bitwiseOR(_))
-
-  /** Two-dimensional Z-order clustering rewrite — the multi-column
-    * generalization of [[clusterParquet]]: range-partition + sort on the
-    * Morton interleave of the two cluster keys, so each output file
-    * covers a small rectangle of the (c1, c2) plane and parquet footer
-    * min/max prune files for range predicates on EITHER column (plain
-    * range clustering only prunes on the leading one). Keys must be
-    * non-negative integers (ranks/ids/bucketed values — the usual
-    * clustering keys). */
-  def zorderParquet(
-      spark: SparkSession, inDir: String, outDir: String,
-      c1: String, c2: String, nFiles: Int): Unit =
-    spark.read.parquet(inDir)
-      .withColumn("__z", zValue(col(c1), col(c2)))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
 
   /** Key-based MERGE (upsert + delete) into a month/whatever-partitioned
     * parquet table WITHOUT a transactional table format — the classic

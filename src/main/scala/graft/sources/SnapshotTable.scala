@@ -1992,8 +1992,9 @@ object SnapshotTable {
     * current) gets an empty frame. Requires the window's manifests to
     * still exist — vacuum's `keepVersions` IS the consumer's grace
     * period, and a consumer below it fails loudly via [[readAt]]'s
-    * contract rather than silently skipping changes ([[changesSinceOrRebase]]
-    * is the recovering form). */
+    * contract rather than silently skipping changes (the
+    * `graft-snapshot-cdf` source's `onVacuumedCheckpoint=rebase` is the
+    * recovering form). */
   def changesSince(spark: SparkSession, tableDir: String, fromVersion: Long,
       keyCols: Seq[String]): DataFrame =
     changesBetween(spark, tableDir, fromVersion, currentVersion(tableDir),
@@ -2032,37 +2033,6 @@ object SnapshotTable {
       .getOrElse(
         diff(spark, tableDir, toVersion, toVersion, keyCols)
           .withColumn("change_version", lit(toVersion)).limit(0))
-  }
-
-  /** The RECOVERING change feed — what a consumer that slept past
-    * vacuum's grace window actually needs: when `fromVersion` is still
-    * within the retention window this is exactly [[changesSince]]
-    * (`rebased = false`); when the version has been vacuumed away (or the
-    * consumer has never synced, `fromVersion = 0`), the incremental
-    * history is gone, so the feed RE-BASELINES — the full current
-    * snapshot comes back as `insert` rows at `change_version = current`
-    * with `rebased = true`, and the consumer must replace (not fold into)
-    * its derived state before resuming incremental polling from the
-    * returned version. Deletes that happened inside the lost window are
-    * covered by the replace semantics: anything absent from the baseline
-    * is gone. Returns (feed, versionToCheckpoint, rebased). */
-  def changesSinceOrRebase(spark: SparkSession, tableDir: String,
-      fromVersion: Long, keyCols: Seq[String])
-      : (DataFrame, Long, Boolean) = {
-    val cur = currentVersion(tableDir)
-    val incremental = fromVersion >= 1 && fromVersion <= cur &&
-      manifestExists(tableDir, fromVersion)
-    if (incremental)
-      (changesSince(spark, tableDir, fromVersion, keyCols), cur, false)
-    else {
-      val full = read(spark, tableDir)
-      val valCols = full.columns.filterNot(keyCols.contains).toSeq
-      val feed = full.select(
-        lit("insert").as("change_type") +:
-          (keyCols.map(col) ++ valCols.map(col)) :+
-          lit(cur).as("change_version"): _*)
-      (feed, cur, true)
-    }
   }
 
   /** Change-data-feed between two committed versions — the row-level diff

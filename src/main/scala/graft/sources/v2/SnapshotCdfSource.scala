@@ -24,10 +24,9 @@ import graft.sources.SnapshotTable
   *
   * First batch semantics: with no `startingVersion` the stream
   * BASELINES — the full snapshot at the first observed version arrives
-  * as `insert` rows (the [[SnapshotTable.changesSinceOrRebase]] shape),
-  * then incremental windows follow; with `startingVersion = v` the first
-  * batch is the changes of `(v, latest]` (the consumer already holds
-  * v's state). Vacuum past a checkpointed version fails the stream
+  * as `insert` rows tagged with that version, then incremental windows
+  * follow; with `startingVersion = v` the first batch is the changes of
+  * `(v, latest]` (the consumer already holds v's state). Vacuum past a checkpointed version fails the stream
   * LOUDLY through [[SnapshotTable.changesBetween]]'s manifest check —
   * retention (`keepVersions`) is the stream's downtime budget, the same
   * contract as the open table formats'. A consumer that can REPLACE its
@@ -35,8 +34,8 @@ import graft.sources.SnapshotTable
   * `onVacuumedCheckpoint=rebase`: the feed gains a `rebased` boolean
   * column (false on every incremental batch), and the first batch after
   * a lost retention window is the full current snapshot as `insert`
-  * rows with `rebased = true` — the streaming form of
-  * [[SnapshotTable.changesSinceOrRebase]]'s batch contract.
+  * rows with `rebased = true`, and the consumer replaces (not folds
+  * into) its derived state.
   *
   * V1 [[Source]] rather than a DSv2 MicroBatchStream because the batch
   * is COMPUTED (per-version diffs are joins over manifest-selected

@@ -81,9 +81,9 @@ class SnapshotSource extends RelationProvider
     * the recorded watermark is skipped — checked both before staging
     * (cheap fast path) and again INSIDE the commit lock (the race-proof
     * check). One streaming query per txnAppId is the contract (Delta's
-    * `txnAppId` semantics); CDC upserts belong to the dedicated helper
-    * (`SinkStreams.streamingSnapshotUpsert`), so update mode is
-    * refused loudly rather than half-supported. */
+    * `txnAppId` semantics); a CDC upsert stream calls
+    * `SnapshotTable.upsert` from `foreachBatch` instead, so update mode
+    * is refused loudly rather than half-supported. */
   override def createSink(sqlContext: SQLContext,
       parameters: Map[String, String], partitionColumns: Seq[String],
       outputMode: OutputMode): Sink = {
@@ -93,7 +93,7 @@ class SnapshotSource extends RelationProvider
         outputMode == OutputMode.Complete(),
       "graft-snapshot sink supports append (transactional INSERT per " +
         "trigger) and complete (overwrite per trigger); for update-mode " +
-        "CDC apply use SinkStreams.streamingSnapshotUpsert")
+        "CDC apply call SnapshotTable.upsert from foreachBatch")
     val appId = parameters.getOrElse("txnAppId",
       parameters.getOrElse("txnappid", "graft-snapshot-sink"))
     require(!appId.exists(c => c == ':' || c == '\t' || c == '\n'),

@@ -1,28 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Event-stream processing (SURVEY §2.10: absent from the reference,
-  * additive here): tumbling/sliding window aggregation, sessionization, and
-  * keyed dedup over the `events` table — each as a batch DataFrame transform
-  * (oracle-checkable) plus a Structured-Streaming entry point with
-  * watermarking, verified equivalent in the test suite.
+/** Event-log analytics (SURVEY §2.10: absent from the reference, additive
+  * here): window aggregation, sessionization, keyed dedup, funnels,
+  * interval and as-of joins, rolling and running per-user state over the
+  * `events` table — each a batch DataFrame transform that an
+  * `EventQueries` entry runs and the oracle checks. There is no separate
+  * streaming body: Structured Streaming runs a batch plan incrementally,
+  * and the engine's own streaming surface is the `graft-snapshot` sink and
+  * `graft-snapshot-cdf` source (`s_snapshot_sink_stream`,
+  * `s_snapshot_cdf_stream`).
   *
   * Determinism: window keys are emitted as epoch seconds or formatted
   * strings (parquet µs vs external-engine ns precision never meets the
   * comparison); sums of doubles go through DECIMAL.
   */
 object EventStreams {
-
-  /** Raw file-source schema: `ts` is µs-precision parquet TIMESTAMP,
-    * read as session-zoned TimestampType (the batch Tables.events shape;
-    * NTZ inference is off in Sessions/SparkSpec). */
-  val eventsRawSchema: StructType = StructType.fromDDL(
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
-      "value DOUBLE, props STRING")
 
   /** Tumbling 1-hour windows per event type. */
   def tumblingAgg(events: DataFrame): DataFrame =
@@ -284,36 +280,6 @@ object EventStreams {
         (col("value") > lit(2) * col("med")).as("is_anomaly"))
   }
 
-  // ---- Structured Streaming entry points ----------------------------------
-
-  /** File-source stream over an events directory (parquet), no watermark
-    * yet — for operators that watermark per-branch (stream-stream joins
-    * re-watermark renamed event-time columns, and Spark forbids
-    * redefining an inherited one). */
-  def readEventStreamRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventsRawSchema).parquet(dir)
-
-  /** File-source stream over an events directory (parquet), 10-minute
-    * watermark. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    readEventStreamRaw(spark, dir).withWatermark("ts", "10 minutes")
-
-  /** Streaming tumbling window aggregation (event-time, watermarked) —
-    * the streaming twin of [[tumblingAgg]], keyed identically so results
-    * can be compared after `processAllAvailable`. */
-  def streamingTumblingAgg(stream: DataFrame): DataFrame =
-    stream
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("n"), col("total"))
-
-  /** Streaming keyed dedup within the watermark. */
-  def streamingDedup(stream: DataFrame): DataFrame =
-    stream.dropDuplicatesWithinWatermark("user_id", "event_type")
-
   /** Click→purchase attribution interval join (batch form): purchases by
     * the same user within `windowSeconds` after a click. lag_sec is the
     * whole-second event-time gap. */
@@ -551,218 +517,10 @@ object EventStreams {
         col("__to").isNull.as("is_current"))
   }
 
-  /** Stream-stream twin of [[intervalJoin]]: both sides are watermarked
-    * branches of the same RAW stream (use [[readEventStreamRaw]] — the
-    * branches set their own watermarks on the renamed time columns); the event-time bound in the join
-    * condition lets Spark expire join state (the canonical watermarked
-    * stream-stream interval join). Inner join → results are identical to
-    * the batch form once all input is processed (proven in the spec). */
-  def streamingIntervalJoin(
-      stream: DataFrame, windowSeconds: Long = 600): DataFrame = {
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = stream.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    clicks.join(purchases,
-      expr(s"""c_user = p_user AND purchase_ts >= click_ts
-              |AND purchase_ts < click_ts + INTERVAL $windowSeconds SECONDS"""
-        .stripMargin))
-      .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"),
-        (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("click_ts")))
-          .as("lag_sec"))
-  }
-
-  /** Stream-static enrichment: the streaming fact joins a STATIC dimension
-    * (re-broadcast per micro-batch — no stream state, no watermark
-    * required, the canonical streaming lookup shape). Works identically on
-    * a batch DataFrame, so the twin equality is structural. Left join +
-    * default: unmatched facts pass through, they are not dropped. */
-  def enrichWithSegments(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("user_id"), "left")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        coalesce(col("segment"), lit("unknown")).as("segment"))
-
-  /** LEFT OUTER watermarked stream-stream interval join: clicks that never
-    * convert inside the window emit with NULL purchase columns once the
-    * watermark passes the window end (Spark can only declare "no match
-    * ever" after event time moves on — unmatched rows near the head of the
-    * stream therefore stay in state; the spec asserts inner-part equality
-    * and outer-part ⊆ batch). Batch twin: [[intervalJoinLeftOuter]]. */
-  def streamingIntervalJoinLeftOuter(
-      stream: DataFrame, windowSeconds: Long = 600): DataFrame = {
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = stream.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    clicks.join(purchases,
-        expr(s"""c_user = p_user AND purchase_ts >= click_ts
-                |AND purchase_ts < click_ts + INTERVAL $windowSeconds SECONDS"""
-          .stripMargin),
-        "leftOuter")
-      .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"),
-        (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("click_ts")))
-          .as("lag_sec"))
-  }
-
-  /** Batch twin of [[streamingIntervalJoinLeftOuter]]. */
-  def intervalJoinLeftOuter(
-      events: DataFrame, windowSeconds: Long = 600): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    clicks.join(purchases,
-        col("user_id") === col("p_user")
-          && col("purchase_ts") >= col("click_ts")
-          && col("purchase_ts") < col("click_ts")
-            + expr(s"INTERVAL $windowSeconds SECONDS"),
-        "left")
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        (unix_timestamp(col("purchase_ts")) - unix_timestamp(col("click_ts")))
-          .as("lag_sec"))
-  }
-
-  /** Streaming sessionization via session_window (5-minute gap). */
-  def streamingSessionize(stream: DataFrame): DataFrame =
-    stream
-      .groupBy(session_window(col("ts"), "5 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_timestamp(col("session_window.start")).as("session_start"),
-        col("n_events"))
-
-  /** Streaming exact dedup via `dropDuplicatesWithinWatermark`: state
-    * holds one entry per key seen inside the watermark horizon and is
-    * PURGED once the watermark passes it — plain streaming
-    * `dropDuplicates` keeps every key forever (the classic unbounded-
-    * state OOM), so within-watermark is the only form that survives an
-    * unbounded stream. At-least-once upstream delivery (file-source
-    * replay, queue redelivery) becomes exactly-once downstream provided
-    * the redelivery lands within the watermark; the first arrival wins
-    * and is emitted once, in append mode. */
-  def streamingDedup(stream: DataFrame, keys: Seq[String],
-      watermark: String = "10 minutes"): DataFrame =
-    stream.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Exactly-once parquet sink via foreachBatch: each micro-batch is
-    * written under its batch id (idempotent on replay — a restarted query
-    * re-runs the last uncommitted batch and OVERWRITES the same directory,
-    * never duplicating). Checkpointed; restart-safe (proven in the spec). */
-  def streamToParquet(
-      agg: DataFrame, outDir: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  // ---- custom state: flatMapGroupsWithState ------------------------------
-
-  case class RollEvent(
-      user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
-  case class RollEntry(us: Long, event_id: Long, value: Double)
-  case class RollState(recent: List[RollEntry])
-  case class RollOut(user_id: Long, event_id: Long, roll_n: Long,
-      roll_sum: Double, roll_min: Double, roll_max: Double)
-
-  /** Stateful streaming twin of [[rollingStats]]: per-user state is ONLY
-    * the last w−1 events (O(w) per key, bounded), kept in (event-time,
-    * event_id) order; each arriving event emits its trailing-window row.
-    * The sum replicates the batch DECIMAL(18,4) detour (BigDecimal
-    * HALF_UP at scale 4 — the same rounding Spark's double→decimal cast
-    * applies), so streamed rows equal batch rows bit-for-bit when input
-    * arrives in order. Cross-batch out-of-order arrival diverges from
-    * the batch twin for the already-emitted later rows (they are not
-    * retracted) — the same append-mode contract as [[statefulFunnel]];
-    * a late event still gets ITS correct window while its predecessors
-    * remain buffered. Idle per-user state expires one hour of EVENT TIME
-    * past that user's newest event (clamped past the watermark) — a user
-    * resuming after a longer gap restarts with an empty buffer, so the
-    * bit-for-bit claim holds within any stretch of activity without a
-    * 1h+ event-time gap. */
-  // ---- state-v2: transformWithState ------------------------------------
-
-  case class TwsEvent(
-      user_id: Long, ts: java.sql.Timestamp, event_id: Long,
-      event_type: String)
-  case class TwsOut(user_id: Long, event_id: Long, n_distinct_types: Long)
-
-  /** Stateful processor for [[statefulDistinctTypes]]: per-user running
-    * distinct event-type count on the state-v2 API — a MapState holds the
-    * seen-type SET (per-entry point lookups/puts against the state store,
-    * vs mapGroupsWithState's whole-value deserialize-reserialize per
-    * trigger: the reason the new API scales to large per-key state) and a
-    * ValueState carries the count so emission never iterates the map. */
-  private class DistinctTypesProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, TwsEvent, TwsOut] {
-    import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, OutputMode}
-    import org.apache.spark.sql.{Encoders => E}
-    @transient private var seen
-      : org.apache.spark.sql.streaming.MapState[String, Boolean] = _
-    @transient private var nTypes
-      : org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle.getMapState[String, Boolean](
-        "seen", E.STRING, E.scalaBoolean, TTLConfig.NONE)
-      nTypes = getHandle.getValueState[Long](
-        "n", E.scalaLong, TTLConfig.NONE)
-    }
-    override def handleInputRows(
-        key: Long, rows: Iterator[TwsEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[TwsOut] = {
-      // in-batch (ts, event_id) order so running counts are deterministic
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var n = if (nTypes.exists()) nTypes.get() else 0L
-      val out = sorted.map { e =>
-        if (!seen.containsKey(e.event_type)) {
-          seen.updateValue(e.event_type, true)
-          n += 1
-        }
-        TwsOut(e.user_id, e.event_id, n)
-      }
-      nTypes.update(n)
-      out.iterator
-    }
-  }
-
-  /** Per-user running distinct event-type count via `transformWithState`
-    * (Spark 4 state-v2; requires the RocksDB state store provider).
-    * Each arriving event emits its user's distinct-type count INCLUDING
-    * itself, in append mode. Streamed rows equal the batch twin
-    * [[distinctTypesRunning]] row-for-row when input arrives in order
-    * (the [[statefulRollingStats]] contract); state is O(types) per user
-    * with point lookups, never a full-value rewrite. */
-  def statefulDistinctTypes(
-      stream: DataFrame): org.apache.spark.sql.Dataset[TwsOut] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .selectExpr("user_id", "ts", "event_id", "event_type")
-      .as[TwsEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new DistinctTypesProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Batch twin of [[statefulDistinctTypes]]: first-occurrence flag per
-    * (user, type), running sum in (ts, event_id) order — both windows
-    * user-keyed. */
+  /** Per-user running distinct event-type count: each event carries its
+    * user's distinct-type count INCLUDING itself, in (ts, event_id) order —
+    * a first-occurrence flag per (user, type) summed by a running window,
+    * both windows user-keyed. */
   def distinctTypesRunning(events: DataFrame): DataFrame = {
     val wFirst = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts"), col("event_id"))
@@ -775,192 +533,5 @@ object EventStreams {
       .select(col("user_id"), col("event_id"),
         sum(col("is_first")).over(wRun).as("n_distinct_types"))
   }
-
-  def statefulRollingStats(stream: DataFrame, w: Int = 5): org.apache.spark.sql.Dataset[RollOut] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = stream.sparkSession
-    import spark.implicits._
-
-    def us(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-    def dec(v: Double): BigDecimal =
-      BigDecimal.decimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-
-    def fn(userId: Long, events: Iterator[RollEvent],
-        state: GroupState[RollState]): Iterator[RollOut] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val incoming = events.toSeq.map(_.copy())
-          .sortBy(e => (us(e.ts), e.event_id))
-        var buf = state.getOption.map(_.recent).getOrElse(Nil)
-        val out = incoming.map { e =>
-          buf = (buf :+ RollEntry(us(e.ts), e.event_id, e.value))
-            .sortBy(x => (x.us, x.event_id)).takeRight(w)
-          val vals = buf.map(_.value)
-          RollOut(userId, e.event_id, vals.size.toLong,
-            vals.map(dec).sum.toDouble, vals.min, vals.max)
-        }
-        state.update(RollState(buf.takeRight(w - 1)))
-        // arm off the newest event time clamped past the watermark (as the
-        // sessionize/funnel siblings) — watermark-relative arming alone
-        // would land at epoch+1h on the first trigger (watermark 0) and
-        // then expire every quiet key as soon as the watermark jumps,
-        // dropping its w-1 buffer mid-stream
-        val maxUs = incoming.map(e => us(e.ts)).max
-        state.setTimeoutTimestamp(math.max(
-          maxUs / 1000L + 3600000L, state.getCurrentWatermarkMs() + 1))
-        out.iterator
-      }
-    }
-
-    stream.selectExpr("user_id", "ts", "event_id", "value").as[RollEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  case class SessEvent(user_id: Long, ts: java.sql.Timestamp)
-  case class SessState(startUs: Long, lastUs: Long, n: Long)
-  case class Session(user_id: Long, session_start: Long, n_events: Long)
-
-  /** Custom stateful sessionization with flatMapGroupsWithState: per-user
-    * state carries the open session; an event-time timeout (watermark past
-    * last-event + gap) closes and emits it. The hand-rolled equivalent of
-    * session_window, for when session logic needs arbitrary state (the
-    * `KeyValueGroupedDataset` custom-state surface). */
-  def statefulSessionize(
-      stream: DataFrame, gapSeconds: Long = 300): org.apache.spark.sql.Dataset[Session] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-
-    def us(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-
-    def fn(userId: Long, events: Iterator[SessEvent],
-        state: GroupState[SessState]): Iterator[Session] = {
-      val sorted = events.toSeq.map(e => e.copy()).sortBy(e => us(e.ts))
-      var out = List.empty[Session]
-      var cur = state.getOption
-      sorted.foreach { e =>
-        val t = us(e.ts)
-        cur match {
-          case Some(st) if t - st.lastUs <= gapUs =>
-            cur = Some(st.copy(lastUs = math.max(st.lastUs, t), n = st.n + 1))
-          case Some(st) =>
-            out ::= Session(userId, st.startUs / 1000000L, st.n)
-            cur = Some(SessState(t, t, 1))
-          case None =>
-            cur = Some(SessState(t, t, 1))
-        }
-      }
-      if (state.hasTimedOut) {
-        val st = state.get
-        state.remove()
-        Iterator(Session(userId, st.startUs / 1000000L, st.n))
-      } else {
-        cur.foreach { st =>
-          state.update(st)
-          // clamp past the current watermark: a late event could otherwise
-          // request a timeout at-or-before it, which Spark rejects and
-          // fails the query
-          state.setTimeoutTimestamp(math.max(
-            st.lastUs / 1000L + gapSeconds * 1000L,
-            state.getCurrentWatermarkMs() + 1))
-        }
-        out.reverseIterator
-      }
-    }
-
-    // the watermarked ts column flows through unchanged — required for
-    // event-time timeouts
-    stream
-      .select(col("user_id"), col("ts"))
-      .as[SessEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp, event_type: String)
-  case class FunnelState(v: Long, c: Long, p: Long) // first-stage epoch-µs, -1 unset
-  case class FunnelRow(user_id: Long, first_view: Long, first_click: Option[Long],
-      first_purchase: Option[Long], stage: Int)
-
-  /** Streaming twin of [[funnel]]: per-user causal state machine via
-    * flatMapGroupsWithState. State exists only once a view is seen (clicks
-    * before the first view never count, like the batch form). Within a
-    * micro-batch, events sort by time with view < click < purchase ties,
-    * matching the batch `>=` comparisons exactly. CAVEAT — cross-batch
-    * out-of-order arrival diverges from the batch twin: a click whose
-    * event-time is at/after the first view but which is DELIVERED in an
-    * earlier micro-batch than that view is dropped (no state exists yet),
-    * while the batch funnel, seeing all events at once, counts it. In-order
-    * delivery (e.g. the file source, or any source respecting event time
-    * within the watermark) is exact.
-    *
-    * Per-user state expires after `idleGapHours` of event time with no
-    * activity (event-time timeout — requires a watermarked `ts`, as
-    * [[readEventStream]] provides): without it, one state entry per
-    * ever-seen user accumulates forever. Funnel rows already emitted are
-    * unaffected by expiry; a user re-appearing later restarts the funnel.
-    *
-    * Emits the user's current funnel row whenever it advances (update
-    * semantics — stage and stamps are monotone, so the max-stage row per
-    * user is the final answer). */
-  def statefulFunnel(stream: DataFrame,
-      idleGapHours: Long = 24): org.apache.spark.sql.Dataset[FunnelRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = stream.sparkSession
-    import spark.implicits._
-
-    def us(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-    val prio = Map("view" -> 0, "click" -> 1, "purchase" -> 2)
-
-    def fn(userId: Long, events: Iterator[FunnelEvent],
-        state: GroupState[FunnelState]): Iterator[FunnelRow] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val sorted = events.toSeq
-        .sortBy(e => (us(e.ts), prio.getOrElse(e.event_type, 3)))
-      // arm/refresh the idle-expiry clock off the newest event seen this
-      // batch, clamped past the watermark (Spark rejects timeouts ≤ it)
-      val maxUs = sorted.iterator.map(e => us(e.ts)).foldLeft(0L)(math.max)
-      def armTimeout(): Unit =
-        state.setTimeoutTimestamp(math.max(
-          maxUs / 1000L + idleGapHours * 3600L * 1000L,
-          state.getCurrentWatermarkMs() + 1))
-      val before = state.getOption
-      var st = before.getOrElse(FunnelState(-1, -1, -1))
-      sorted.foreach { e =>
-        val t = us(e.ts)
-        e.event_type match {
-          case "view" if st.v < 0 => st = st.copy(v = t)
-          case "click" if st.v >= 0 && st.c < 0 && t >= st.v =>
-            st = st.copy(c = t)
-          case "purchase" if st.c >= 0 && st.p < 0 && t >= st.c =>
-            st = st.copy(p = t)
-          case _ =>
-        }
-      }
-      if (st.v < 0 || before.contains(st)) {
-        if (state.exists) armTimeout() // keep live state on expiry clock
-        Iterator.empty
-      } else {
-        state.update(st)
-        armTimeout()
-        val opt = (x: Long) => if (x >= 0) Some(x / 1000000L) else None
-        Iterator(FunnelRow(userId, st.v / 1000000L, opt(st.c), opt(st.p),
-          1 + (if (st.c >= 0) 1 else 0) + (if (st.p >= 0) 1 else 0)))
-      }
-    }
-
-    stream
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
 }
+

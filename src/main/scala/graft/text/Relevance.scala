@@ -282,41 +282,12 @@ object Relevance {
       pmod(TextFns.portableHash(col("token"), lit(s"cms$i")),
         lit(width.toLong))): _*)
 
+  /** The sparse CMS cell table (r, b, c) over a token column (an absent
+    * cell ≡ 0). */
   private def cmsCellsFromTokens(
       toks: DataFrame, depth: Int, width: Int): DataFrame =
     toks.select(posexplode(cmsBuckets(depth, width)).as(Seq("r", "b")))
       .groupBy(col("r"), col("b")).agg(count(lit(1)).as("c"))
-
-  /** The CMS cell table (r, b, c) over a document frame — the sketch's
-    * persistable state, sparse (an absent cell ≡ 0). Counts are additive,
-    * so cells over disjoint corpus parts SUM-merge ([[cmsMerge]]) — the
-    * dual of HLL's max-merge — which is what makes the sketch
-    * incrementally maintainable (SketchStreams.streamingCmsCells) without
-    * ever re-reading the corpus. */
-  def cmsCells(docs: DataFrame, textCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    cmsCellsFromTokens(
-      docs.select(explode(TextFns.tokens(col(textCol))).as("token")),
-      depth, width)
-
-  /** Cell-wise sum of two CMS cell tables: cells(A ⊎ B) = cmsMerge(
-    * cells(A), cells(B)) for DISJOINT corpus parts (counts add; unlike
-    * HLL's idempotent max, merging overlapping parts double-counts —
-    * the epoch discipline in SketchStreams guarantees disjointness). */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("r"), col("b")).agg(sum(col("c")).as("c"))
-
-  /** Probe a cell table for the given (`tokenCol`) tokens: est = min over
-    * the depth probed cells, 0 for a token whose every cell is absent.
-    * The cell table is a bounded dimension (≤ depth·width rows) —
-    * broadcast, so probing never shuffles the query side. */
-  def cmsProbe(cells: DataFrame, queries: DataFrame, tokenCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    queries.select(col(tokenCol).as("token"))
-      .select(col("token"), posexplode(cmsBuckets(depth, width)).as(Seq("r", "b")))
-      .join(broadcast(cells), Seq("r", "b"), "left")
-      .groupBy(col("token"))
-      .agg(min(coalesce(col("c"), lit(0L))).as("cms_est"))
 
   /** PMI-style collocation mining: top-k adjacent word pairs by lift over
     * unigram independence, lift_ppm = (c_xy · 10⁶ · N) div (c_x · c_y) —
@@ -479,38 +450,16 @@ object Relevance {
     * (confident-learning label issues, abstention) need every class's
     * score, not just the argmax. Output: (doc_id, cl, actual,
     * score_micro), |classes| rows per document. */
-  /** The NB model's SUM-MERGEABLE state: per-(class, token) counts and
-    * per-class document counts. Everything else the classifier needs
-    * (vocab size, per-class token totals, priors, smoothed log-weights)
-    * derives from these two tables, so they are what an INCREMENTAL
-    * retraining pipeline maintains (SketchStreams.streamingNbModel): a
-    * batch's counts SUM-merge into the settled state — counts are
-    * additive over disjoint corpora — and the merged state equals a
-    * one-shot train over everything seen. */
-  def nbModelCounts(docs: DataFrame, textCol: String,
-      classCol: String): (DataFrame, DataFrame) = {
+  def nbScoreMatrix(docs: DataFrame, idCol: String, textCol: String,
+      classCol: String): DataFrame = {
+    // the model is two count tables: per-(class, token) counts `m` and
+    // per-class document counts `cls`; vocab size, per-class token totals,
+    // priors and smoothed log-weights all derive from them
     val tok = docs.select(col(classCol).as("cl"),
       explode(TextFns.tokens(col(textCol))).as("w"))
     val m = tok.groupBy(col("cl"), col("w")).agg(count(lit(1)).as("c"))
     val cls = docs.groupBy(col(classCol).as("cl"))
       .agg(count(lit(1)).as("n_docs"))
-    (m, cls)
-  }
-
-  def nbScoreMatrix(docs: DataFrame, idCol: String, textCol: String,
-      classCol: String): DataFrame = {
-    val (m, cls) = nbModelCounts(docs, textCol, classCol)
-    nbScoreMatrixFromModel(m, cls, docs, idCol, textCol, classCol)
-  }
-
-  /** Score `docs` against a PRECOMPUTED model state (the two
-    * [[nbModelCounts]] tables — possibly maintained incrementally):
-    * identical math to [[nbScoreMatrix]] (vocab = distinct model tokens,
-    * n_s/priors/log-weights all derive from the counts), so scoring
-    * against a streamed-and-merged model equals scoring against a
-    * one-shot train (proven in SketchStreamsSpec). */
-  def nbScoreMatrixFromModel(m: DataFrame, cls: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, classCol: String): DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"), col(classCol).as("cl"),
       TextFns.tokens(col(textCol)).as("ws"))
     val ns = m.groupBy(col("cl")).agg(sum(col("c")).as("n_s"))

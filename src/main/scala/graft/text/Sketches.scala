@@ -44,12 +44,9 @@ object Sketches {
   }
 
   /** The k-min-value sketch itself: per group, the k smallest distinct
-    * portable token hashes — the persistable/streamable state behind
+    * portable token hashes — the persistable state behind
     * [[kmvDistinctTokens]] and [[kmvSetOps]]. MIN-mergeable: the k-mins
-    * of a union are contained in the union of each part's k-mins
-    * ([[kmvMerge]]), so sketches maintain incrementally without
-    * re-reading the corpus (the fourth merge law beside HLL max, CMS sum,
-    * histogram sum). */
+    * of a union are contained in the union of each part's k-mins. */
   def kmvSketch(
       docs: DataFrame, textCol: String, groupCol: String,
       k: Int = 64): DataFrame = {
@@ -65,31 +62,6 @@ object Sketches {
       .filter(col("rn") <= k)
       .select(col("g"), col("h"))
   }
-
-  /** Min-merge of two KMV sketch tables: distinct hash union per group,
-    * re-truncated to the k smallest — sketch(A ∪ B) exactly (set-union
-    * distinct-ness makes the merge idempotent, so crash-replay under the
-    * epoch discipline is exactly-once like the HLL max-merge). */
-  def kmvMerge(k: Int)(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).distinct()
-      .withColumn("rn",
-        row_number().over(Window.partitionBy(col("g")).orderBy(col("h"))))
-      .filter(col("rn") <= k)
-      .select(col("g"), col("h"))
-
-  /** Distinct-count estimates from a stored/streamed [[kmvSketch]] table:
-    * (k−1)·2⁵⁶/h₍ₖ₎, exact-size fallback when the sketch holds fewer
-    * than k values. */
-  def kmvEstimateFromSketch(sk: DataFrame, k: Int = 64): DataFrame =
-    sk.withColumn("rn",
-      row_number().over(Window.partitionBy(col("g")).orderBy(col("h"))))
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("n_sketch"),
-        max(when(col("rn") === k, col("h"))).as("kth_hash"))
-      .select(col("g"), col("n_sketch"), col("kth_hash"),
-        when(col("kth_hash").isNull, col("n_sketch").cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(HashSpace)
-            / col("kth_hash").cast("double")).as("est"))
 
   /** KMV set-operation estimates between every pair of groups: union and
     * intersection distinct-token counts from the two k-min-value sketches
@@ -181,17 +153,8 @@ object Sketches {
           / col("n_exact").cast("double")).as("rel_err"))
   }
 
-  /** The HLL register table (g, bucket, reg) for a document frame — the
-    * sketch's persistable state. See [[hllDistinctTokens]] for the
-    * register derivation contract. */
-  def hllRegisters(
-      docs: DataFrame, textCol: String, groupCol: String,
-      p: Int = 7): DataFrame =
-    hllRegistersFromWords(
-      docs.select(col(groupCol).as("g"),
-        explode(TextFns.tokens(col(textCol))).as("word"))
-        .distinct(), p)
-
+  /** The HLL register table (g, bucket, reg) over distinct (g, word)
+    * rows — the sketch's persistable, max-mergeable state. */
   private def hllRegistersFromWords(words: DataFrame, p: Int): DataFrame = {
     val subBits = 56 - p
     words
@@ -205,14 +168,6 @@ object Sketches {
       .groupBy(col("g"), col("bucket"))
       .agg(max(col("rank")).as("reg"))
   }
-
-  /** Max-merge two register tables — HLL's defining property: registers
-    * over A ∪ B equal the cell-wise max of registers over A and over B,
-    * for ANY split (proven in the spec; exercised operationally by
-    * SketchStreams' incremental register maintenance). */
-  def hllMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("g"), col("bucket"))
-      .agg(max(col("reg")).as("reg"))
 
   /** (g, v_filled, est) from a register table. Empty registers contribute
     * 2^0 = 1 each to the harmonic sum — 2^(subBits+1) in the scaled
@@ -266,17 +221,12 @@ object Sketches {
 
   /** The histogram-bin table (bin, cnt) for a value column — the
     * persistable, SUM-mergeable state behind [[histogramQuantiles]]
-    * (cell-wise sum over disjoint corpus parts, like the CMS; maintained
-    * incrementally by SketchStreams.streamingHistogramBins). */
+    * (cell-wise sum over disjoint corpus parts, like the CMS). */
   def histogramBins(df: DataFrame, valueCol: String,
       binWidth: Int = 50): DataFrame =
     df.select(col(valueCol).cast("long").as("val"))
       .groupBy(floor(col("val") / binWidth.toDouble).cast("long").as("bin"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Bin-wise sum of two histogram tables (disjoint corpus parts). */
-  def histogramMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
 
   /** (q, minbin, target_rank) from a bin table: the first bin whose
     * cumulative count reaches ⌈q·N⌉. The cumulative window runs over the

@@ -13,6 +13,19 @@ class DedupSpec extends SparkSpec {
     (5L, "tiny doc")                                     // shorter than shingle width
   ).toDF("doc_id", "text")
 
+  /** Cross-snapshot near-dups of `incoming` against `corpus` over each
+    * side's minhash signatures and the shared shingle table (n = 3, 32
+    * hashes), the artifacts x_dedup_incremental persists. */
+  private def crossSnapshot(corpus: org.apache.spark.sql.DataFrame,
+      incoming: org.apache.spark.sql.DataFrame, bands: Int,
+      threshold: Double): org.apache.spark.sql.DataFrame =
+    Dedup.crossSnapshotNearDupsFromArtifacts(
+      Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 32),
+      Dedup.minhashSignatures(incoming, "doc_id", "text", 3, 32),
+      Dedup.shingles(incoming, "doc_id", "text", 3)
+        .unionByName(Dedup.shingles(corpus, "doc_id", "text", 3)),
+      numHashes = 32, bands = bands, threshold = threshold)
+
   test("crossSnapshotNearDups pairs incoming with corpus only, oriented new->old") {
     val corpus = Seq(
       (10L, "the quick brown fox jumps over the lazy dog"),
@@ -27,8 +40,7 @@ class DedupSpec extends SparkSpec {
       // NOT appear (new x new pairs are out of scope by construction)
       (27L, "fresh unseen content with no earlier counterpart anytime")
     ).toDF("doc_id", "text")
-    val got = Dedup.crossSnapshotNearDups(corpus, incoming, "doc_id", "text",
-      n = 3, numHashes = 32, bands = 8, threshold = 0.5)
+    val got = crossSnapshot(corpus, incoming, bands = 8, threshold = 0.5)
       .as[(Long, Long, Double)].collect()
     val pairs = got.map(r => (r._1, r._2)).toSet
     assert(pairs.contains((21L, 10L)))
@@ -484,8 +496,7 @@ class DedupSpec extends SparkSpec {
       .toDF("a", "b")
     val newNew = Dedup.minhashLshPairs(batch, "doc_id", "text",
       n = 3, numHashes = 32, bands = 32, threshold = 0.3).select("a", "b")
-    val newOld = Dedup.crossSnapshotNearDups(corpus, batch, "doc_id", "text",
-      n = 3, numHashes = 32, bands = 32, threshold = 0.3)
+    val newOld = crossSnapshot(corpus, batch, bands = 32, threshold = 0.3)
       .select(col("new_id").as("a"), col("old_id").as("b"))
     val inc = cc(star.unionByName(newNew).unionByName(newOld))
 

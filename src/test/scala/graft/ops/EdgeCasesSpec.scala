@@ -118,8 +118,15 @@ class EdgeCasesSpec extends SparkSpec {
     "yields no pairs") {
     val docs = Seq((2L, "the quick brown fox jumps over it")).toDF("doc_id", "text")
     val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(Dedup.crossSnapshotNearDups(docs, none, "doc_id", "text").count() === 0)
-    assert(Dedup.crossSnapshotNearDups(none, docs, "doc_id", "text").count() === 0)
+    def cross(corpus: org.apache.spark.sql.DataFrame,
+        incoming: org.apache.spark.sql.DataFrame) =
+      Dedup.crossSnapshotNearDupsFromArtifacts(
+        Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 32),
+        Dedup.minhashSignatures(incoming, "doc_id", "text", 3, 32),
+        Dedup.shingles(incoming, "doc_id", "text", 3)
+          .unionByName(Dedup.shingles(corpus, "doc_id", "text", 3)))
+    assert(cross(docs, none).count() === 0)
+    assert(cross(none, docs).count() === 0)
   }
 
   test("keepBest on empty clusters is empty; singleton cluster keeps itself") {

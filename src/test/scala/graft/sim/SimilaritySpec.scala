@@ -741,8 +741,10 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val batch = Seq((11L, v(3)), (13L, v(3)), (15L, v(21)))
       .toDF("vec_id", "embedding")
-    val got = Similarity.crossSnapshotEmbNearDups(corpus, batch,
-      "vec_id", "embedding", threshold = 0.9)
+    val got = Similarity.crossSnapshotEmbNearDupsFromIndex(
+      Similarity.lshIndex(corpus, "vec_id", "embedding", planes = 6, dim = 64),
+      Similarity.lshIndex(batch, "vec_id", "embedding", planes = 6, dim = 64),
+      threshold = 0.9, planes = 6)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(got === Set((11L, 10L), (13L, 10L)))
   }

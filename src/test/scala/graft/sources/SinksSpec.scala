@@ -46,76 +46,6 @@ class SinksSpec extends SparkSpec {
     assert(pruned.count() < all)
   }
 
-  test("compactParquet collapses a many-small-files table to the target " +
-    "file count with identical content") {
-    import org.apache.spark.sql.functions.col
-    val in = scratch("graft-small")
-    val out = scratch("graft-compact")
-    // 40 tiny files of 25 rows each
-    spark.range(1000).select(col("id"), (col("id") % 7).as("v"))
-      .repartition(40).write.mode("overwrite").parquet(in)
-    val inFiles = new java.io.File(in).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(inFiles == 40)
-    val outFiles = Sinks.compactParquet(spark, in, out, targetRowsPerFile = 500)
-    assert(outFiles == 2, s"expected 2 compacted files, got $outFiles")
-    val a = spark.read.parquet(in).as[(Long, Long)].collect().toSet
-    val b = spark.read.parquet(out).as[(Long, Long)].collect().toSet
-    assert(a === b)
-  }
-
-  test("clusterParquet: output files cover disjoint key ranges (footer " +
-    "min/max prune whole files for range predicates)") {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val in = scratch("graft-unclustered")
-    val out = scratch("graft-clustered")
-    // hash-partitioned write: every file spans ~the full key range
-    spark.range(2000).select(col("id"), (col("id") * 37 % 1000).as("k"))
-      .repartition(8, col("id")).write.mode("overwrite").parquet(in)
-    Sinks.clusterParquet(spark, in, out, Seq("k"), nFiles = 4)
-    val files = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
-    assert(files.length == 4)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f).agg(min(col("k")), max(col("k")))
-        .as[(Long, Long)].head()
-      r
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach { case Array((_, hiA), (loB, _)) =>
-      assert(hiA < loB, s"overlapping file ranges: ${ranges.mkString(",")}")
-    }
-    // content preserved
-    assert(spark.read.parquet(out).count() === 2000)
-  }
-
-  test("zorderParquet: every file covers a small rectangle of BOTH key " +
-    "domains (range clustering only bounds the leading key)") {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val in = scratch("graft-zin")
-    val outZ = scratch("graft-zout")
-    // two independent 0..1023 keys, hash-scattered input layout
-    spark.range(4096).select(
-        (col("id") * 37 % 1024).as("x"), (col("id") * 101 % 1024).as("y"))
-      .repartition(8, col("x"))
-      .write.mode("overwrite").parquet(in)
-    Sinks.zorderParquet(spark, in, outZ, "x", "y", nFiles = 16)
-    val files = new java.io.File(outZ).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    assert(files.length == 16)
-    val spans = files.map { f =>
-      spark.read.parquet(f)
-        .agg(max(col("x")) - min(col("x")), max(col("y")) - min(col("y")))
-        .as[(Long, Long)].head()
-    }
-    // a 16-file Z-order is a ~4x4 grid: each file spans ~1/4 of each
-    // domain; assert well under the full range on BOTH dimensions
-    assert(spans.map(_._1).sum / spans.length < 512,
-      s"x spans: ${spans.map(_._1).mkString(",")}")
-    assert(spans.map(_._2).sum / spans.length < 512,
-      s"y spans: ${spans.map(_._2).mkString(",")}")
-    assert(spark.read.parquet(outZ).count() === 4096)
-  }
-
   test("ORC round trip: content identical, predicate pushed to the ORC scan") {
     import org.apache.spark.sql.functions._
     val dir = scratch("graft-orc")

@@ -809,39 +809,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, dir).count() == 600)
   }
 
-  test("changesSinceOrRebase: within the window it IS changesSince; past " +
-      "vacuum's grace it re-baselines with the full snapshot as inserts " +
-      "and flags the consumer to replace its state") {
-    val dir = scratch("graft-snap-rebase")
-    val v1 = SnapshotTable.overwrite(spark, dir, baseRows, "month")
-    SnapshotTable.upsert(spark, dir, updateRows, "month", Seq("k"),
-      "version", "del")                                              // v2
-    val (feed1, ckpt1, rebased1) =
-      SnapshotTable.changesSinceOrRebase(spark, dir, v1, Seq("k"))
-    assert(!rebased1 && ckpt1 == 2L)
-    assert(feed1.select("change_type", "k").as[(String, Long)].collect().toSet
-      == Set(("update", 1L), ("delete", 3L), ("insert", 9L)))
-    // consumer sleeps; table advances and vacuums past its checkpoint
-    SnapshotTable.compact(spark, dir, "month")                       // v3
-    SnapshotTable.compact(spark, dir, "month")                       // v4
-    SnapshotTable.vacuum(dir, keepVersions = 1)
-    intercept[IllegalArgumentException] {
-      SnapshotTable.changesSince(spark, dir, 2L, Seq("k"))
-    }
-    val (feed2, ckpt2, rebased2) =
-      SnapshotTable.changesSinceOrRebase(spark, dir, 2L, Seq("k"))
-    assert(rebased2 && ckpt2 == 4L)
-    assert(feed2.select("change_type").distinct()
-      .as[String].collect().toSeq == Seq("insert"))
-    // replacing state with the baseline reaches the live table exactly
-    assert(contents(feed2.select("k", "name", "price", "month"))
-      == contents(SnapshotTable.read(spark, dir)))
-    // a never-synced consumer (fromVersion 0) re-baselines the same way
-    val (_, ckpt0, rebased0) =
-      SnapshotTable.changesSinceOrRebase(spark, dir, 0L, Seq("k"))
-    assert(rebased0 && ckpt0 == 4L)
-  }
-
   test("DML against a Z-ordered table restages with the FULL stat-column " +
       "set: the second dimension keeps its min/max on rewritten files, so " +
       "two-sided skipping survives row-level deletes") {

@@ -83,7 +83,7 @@ class SnapshotSinkSpec extends SparkSpec {
       new SnapshotSource().createSink(spark.sqlContext,
         Map("path" -> dir), Nil, OutputMode.Update())
     }
-    assert(exMode.getMessage.contains("streamingSnapshotUpsert"))
+    assert(exMode.getMessage.contains("SnapshotTable.upsert from foreachBatch"))
     val exPc = intercept[IllegalArgumentException] {
       new SnapshotSource().createSink(spark.sqlContext,
         Map("path" -> scratch("graft-sink-nopc")),
