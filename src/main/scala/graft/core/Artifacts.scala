@@ -4,7 +4,13 @@ import java.nio.file.{Files, Path}
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** The one artifact store: every directory the engine writes (persisted
   * query artifacts, query scratch, fixture tables, the session warehouse)
@@ -20,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * immutable for the session (bench/verify fixtures are); a corpus
   * mutated at the same path would be served the stale artifact.
   *
-  * Memos hold parquet PATHS and scalars, never frames, so
+  * Memos hold parquet PATHS, schemas and scalars, never frames, so
   * [[StorageHygiene.drainAll]] between queries never truncates a lineage
   * an artifact still depends on. */
 object Artifacts {
@@ -53,12 +59,35 @@ object Artifacts {
       s"${s.sparkContext.applicationId}|$d|$name", build).asInstanceOf[T]
 
   /** `df` written once per (application, corpus, name) into a fresh
-    * [[dir]]; every call returns a fresh read of that parquet. */
+    * [[dir]]; every call returns a fresh [[readParquet]] of it. */
   def parquet(s: SparkSession, d: String, name: String)(
       df: => DataFrame): DataFrame =
-    s.read.parquet(memo(s, d, name) {
+    readParquet(s, memo(s, d, name) {
       val p = dir(name)
       df.write.mode("overwrite").parquet(p)
       p
     })
+
+  /** A fresh read of the parquet file or directory at `p`, with its schema
+    * resolved once per application: a plain `spark.read.parquet` infers
+    * the schema anew on every call, and that inference is a Spark job.
+    * The schema is the one Spark's own inference gives without schema
+    * merging, read on the driver from one footer: that of the first data
+    * file by path, skipping `_*` and `.*` entries. */
+  def readParquet(s: SparkSession, p: String): DataFrame =
+    s.read.schema(memo(s, p, "#schema") {
+      val conf = s.sessionState.newHadoopConf()
+      val fs = new HPath(p).getFileSystem(conf)
+      def files(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(c => "_.".contains(c.getPath.getName.head)).flatMap(files)
+      files(fs.getFileStatus(new HPath(p))).minByOption(_.getPath.toString)
+        .fold(s.read.parquet(p).schema) { f => // none: Spark's own error
+          val footer = ParquetFooterReader.readFooter(HadoopInputFile
+            .fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(s.sessionState.conf))
+        }
+    }).parquet(p)
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *  - pipeJoin/pipeSplit: multi-valued cells are pipe-delimited strings at
   *                  CSV boundaries (node_data/drug.py:1370, :1240-1241);
   *                  internally we keep real ArrayType.
-  *  - emptyToNull/noneToNull: NaN/""/"None" canonicalization
+  *  - emptyToNull: "" canonicalization
   *                  (node_data/drug.py:427-428, node_data/compound.py:184,192-193).
   *  - commaLong:    comma-grouped number parse, "53,651" → 53651L
   *                  (node_data/uniprot.py:128-132).
@@ -51,11 +51,6 @@ object ColFns {
 
   /** "" → null. */
   def emptyToNull(c: Column): Column = when(c =!= "", c)
-
-  /** "" / "None" / "nan" → null (the reference stringifies missing values in
-    * several shapes before `fillna(np.nan)`; see compound.py:184). */
-  def noneToNull(c: Column): Column =
-    when(c =!= "" && c =!= "None" && c =!= "nan" && c =!= "NaN", c)
 
   /** "53,651" → 53651 (uniprot.py:128-132 mass parse). */
   def commaLong(c: Column): Column =

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.LongType
   * (`.explain` shows `PushedFilters` / `ReadSchema` on these scans).
   */
 object Tables {
-  /** Scan one table from a scale-factor directory. */
+  /** Scan one table from a scale-factor directory; its schema is read
+    * once per application ([[Artifacts.readParquet]]). */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Artifacts.readParquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

@@ -116,21 +116,6 @@ object Multimodal {
     }
   }
 
-  /** STUB resize: re-stripe a decoded feature vector to `channels` buckets
-    * (the shape a real image resize would have: fixed output dims from
-    * variable input). Deterministic, pure. */
-  def fakeResize(feature: Array[Float], channels: Int): Array[Float] = {
-    val out = new Array[Float](channels)
-    if (feature.nonEmpty) {
-      var i = 0
-      while (i < feature.length) {
-        out(i * channels / feature.length) += feature(i)
-        i += 1
-      }
-    }
-    out
-  }
-
   /** STUB frame sampling: every `stride`-th fixed-size block of the payload
     * (the video-frame-sampling batch shape: one row in, many frames out). */
   def frameSample(

@@ -760,14 +760,13 @@ object SnapshotTable {
           s"partition value ${part.replaceAll("[\\t\\n\\r]", "?")} contains " +
             "a tab/newline/CR — manifest lines are tab/line-delimited; " +
             "sanitize the partition column before staging")
-        val sz = fs.listStatus(d.getPath).toSeq
+        fs.listStatus(d.getPath).toSeq
           .filter(_.getPath.getName.endsWith(".parquet"))
           .map { f =>
             val rel = s"$batchRel/${d.getPath.getName}/${f.getPath.getName}"
             stagedSizes.put(rel, f.getLen)
             part -> rel
           }
-        sz
       }
   }
 
@@ -781,7 +780,7 @@ object SnapshotTable {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Row counts of files this JVM staged — filled by the stats scan of
-    * [[stageBatchOrdered]] (one extra COUNT in an aggregation that runs
+    * [[stageBatchWithStats]] (one extra COUNT in an aggregation that runs
     * anyway; the plain staging path records −1 = unknown). Same
     * consume-on-commit lifecycle as [[stagedSizes]]. */
   private val stagedRows =
@@ -840,42 +839,14 @@ object SnapshotTable {
     listStaged(tableDir, batchRel)
   }
 
-  /** Range-clustered staging WITH file statistics — the data-skipping
-    * layout: rows are range-partitioned on `statsCols.head` into
-    * `rangeFiles` tasks before the per-partition split, so each output
-    * file covers a narrow slice of the clustering key WITHIN its
-    * partition, and one distributed pass over the staged batch records
-    * every file's per-column min/max for the manifest. The stats lift
-    * parquet's footer min/max to the MANIFEST level (Iceberg's
-    * column-stats design): [[readRange]] prunes files from the file list
-    * alone — zero footers opened for skipped files, the difference
-    * between "open 10⁶ footers to skip them" and "skip them for free" at
-    * 100 TB. Stat columns must be LONG-typed. */
-  def stageBatchClustered(df: DataFrame, tableDir: String, partCol: String,
-      batchTag: String, statsCols: Seq[String], rangeFiles: Int)
-      : (Seq[(String, String)], Map[String, Map[String, ColStat]]) =
-    stageBatchOrdered(df, tableDir, partCol, batchTag, statsCols,
-      rangeFiles, Seq(col(statsCols.head)))
-
-  /** Z-ORDERED, stats-carrying staging: files split on the Morton
-    * bit-interleave of the first TWO stat columns, so each file covers a
-    * small rectangle of the (c1, c2) plane and the manifest min/max prune
-    * files for range predicates on EITHER column — linear clustering
-    * ([[stageBatchClustered]]) only skips on the leading key; this is the
-    * Delta/Iceberg OPTIMIZE ZORDER trade (slightly wider per-column
-    * ranges per file, bought for two prunable dimensions). Both columns
-    * must be non-negative LONGs (ids/ranks/bucketed values). */
-  def stageBatchZordered(df: DataFrame, tableDir: String, partCol: String,
-      batchTag: String, statsCols: Seq[String], rangeFiles: Int)
-      : (Seq[(String, String)], Map[String, Map[String, ColStat]]) = {
-    require(statsCols.size >= 2, "Z-order staging needs two stat columns")
-    stageBatchOrdered(df, tableDir, partCol, batchTag, statsCols, rangeFiles,
-      Seq(Sinks.zValue(col(statsCols.head), col(statsCols(1)))))
-  }
-
-  private def stageBatchOrdered(df: DataFrame, tableDir: String,
-      partCol: String, batchTag: String, statsCols: Seq[String],
-      rangeFiles: Int, orderCols: Seq[org.apache.spark.sql.Column])
+  /** The one stats-carrying staging tail: write `df` split by partition
+    * value with no exchange of its own, so each write task stages exactly
+    * the rows its input partition holds (an ordered stager puts its range
+    * exchange in front; [[rewriteWhere]] hands over its scan as it is),
+    * then list the batch and record every file's min/max for `statsCols`
+    * and its row count. */
+  private def stageBatchWithStats(df: DataFrame, tableDir: String,
+      partCol: String, batchTag: String, statsCols: Seq[String])
       : (Seq[(String, String)], Map[String, Map[String, ColStat]]) = {
     require(statsCols.nonEmpty, "statsCols must name at least one column")
     val statTypes = statsCols.map(c => c -> df.schema(c).dataType).toMap
@@ -891,8 +862,7 @@ object SnapshotTable {
     val batchRel = s"batch-$batchTag"
     val (_, root) = fsRoot(tableDir)
     val batchDir = new Path(new Path(root, "data"), batchRel).toString
-    df.repartitionByRange(rangeFiles, orderCols: _*)
-      .withColumn("__p", col(partCol))
+    df.withColumn("__p", col(partCol))
       .write.mode("overwrite").partitionBy("__p").parquet(batchDir)
     val staged = listStaged(tableDir, batchRel)
     // an empty batch (a rewrite that deleted every candidate row) stages
@@ -1278,27 +1248,45 @@ object SnapshotTable {
       (stageBatch(df, tableDir, partCol, tag), Map.empty)
     }
 
-  /** Full-table overwrite through the range-clustered, stats-carrying
-    * staging path ([[stageBatchClustered]]): the committed manifest
-    * carries per-file min/max for `statsCols`, so [[readRange]] skips
-    * files by predicate without opening them. */
+  /** Full-table overwrite through range-clustered, stats-carrying
+    * staging — the data-skipping layout: rows are range-partitioned on
+    * `statsCols.head` into `rangeFiles` tasks before the per-partition
+    * split, so each output file covers a narrow slice of the clustering
+    * key WITHIN its partition, and the committed manifest carries per-file
+    * min/max for `statsCols` ([[stageBatchWithStats]]). The stats lift
+    * parquet's footer min/max to the MANIFEST level (Iceberg's
+    * column-stats design): [[readRange]] prunes files from the file list
+    * alone — zero footers opened for skipped files, the difference
+    * between "open 10⁶ footers to skip them" and "skip them for free" at
+    * 100 TB. */
   def overwriteClustered(spark: SparkSession, tableDir: String,
       df: DataFrame, partCol: String, statsCols: Seq[String],
       rangeFiles: Int, op: String = "overwrite"): Long =
     overwriteWith(tableDir, df, partCol, op) { tag =>
-      stageBatchClustered(df, tableDir, partCol, tag, statsCols, rangeFiles)
+      stageBatchWithStats(
+        df.repartitionByRange(rangeFiles, col(statsCols.head)),
+        tableDir, partCol, tag, statsCols)
     }
 
-  /** [[overwriteClustered]] through the Z-ORDERED staging path
-    * ([[stageBatchZordered]]): the manifest carries per-file min/max for
-    * BOTH interleaved columns, so [[readRanges]] prunes files on either
-    * one (or their conjunction) from the manifest alone. */
+  /** [[overwriteClustered]] through Z-ORDERED staging: files split on the
+    * Morton bit-interleave of the first TWO stat columns, so each file
+    * covers a small rectangle of the (c1, c2) plane and the manifest
+    * min/max prune files for range predicates on EITHER column (or their
+    * conjunction, [[readRanges]]) — linear clustering only skips on the
+    * leading key; this is the Delta/Iceberg OPTIMIZE ZORDER trade
+    * (slightly wider per-column ranges per file, bought for two prunable
+    * dimensions). Both columns must be non-negative LONGs
+    * (ids/ranks/bucketed values). */
   def overwriteZordered(spark: SparkSession, tableDir: String,
       df: DataFrame, partCol: String, statsCols: Seq[String],
-      rangeFiles: Int): Long =
+      rangeFiles: Int): Long = {
+    require(statsCols.size >= 2, "Z-order staging needs two stat columns")
     overwriteWith(tableDir, df, partCol, "commit") { tag =>
-      stageBatchZordered(df, tableDir, partCol, tag, statsCols, rangeFiles)
+      stageBatchWithStats(df.repartitionByRange(rangeFiles,
+        Sinks.zValue(col(statsCols.head), col(statsCols(1)))),
+        tableDir, partCol, tag, statsCols)
     }
+  }
 
   /** The commit every full-table overwrite shares: `stage` writes the new
     * batch under the given tag and returns its entries and stats, which
@@ -1489,17 +1477,25 @@ object SnapshotTable {
     * fresh batch; untouched files keep their manifest lines AND their
     * stats. Cost: O(files that can match), not O(table) — at 100 TB a
     * DELETE of one key band rewrites a handful of clustered files while
-    * millions carry forward for free. When `pruneRange` names a stat
-    * column, the rewritten batch restages range-clustered on it with
-    * fresh per-file min/max FOR EVERY stat column the based-on version
+    * millions carry forward for free.
+    *
+    * When `pruneRange` names a stat column, the rewrite is written
+    * straight from the scan of the candidates, as Delta's copy-on-write
+    * DML writes it: one job, no exchange. Each write task stages the rows
+    * of the files it read, one file per partition value, so a rewritten
+    * file covers the key range of its inputs — one input file, or several
+    * small ones of a partition that Spark packed into the same scan task —
+    * and the rewrite keeps its inputs' clustering. Every rewritten file
+    * gets fresh min/max FOR EVERY stat column the based-on version
     * recorded (not just the prune column — a Z-ordered table's second
-    * dimension keeps skipping after DML), so DML never degrades data
-    * skipping. Without `pruneRange` every file is a candidate (correct,
-    * full rewrite — the caller's explicit choice). Commits via
-    * [[casCommit]] against the version the rewrite read; returns the
-    * committed version, or the current version unchanged when nothing
-    * can match (a provably-empty candidate set commits no spurious
-    * version). */
+    * dimension keeps skipping after DML). Re-clustering stays with
+    * [[compactSmall]] and [[overwriteClustered]]. Without `pruneRange`
+    * every file is a candidate (correct, full rewrite — the caller's
+    * explicit choice) and the batch stages through [[stageBatch]].
+    * Commits via [[casCommit]] against the version the rewrite read;
+    * returns the committed version, or the current version unchanged when
+    * nothing can match (a provably-empty candidate set commits no
+    * spurious version). */
   private def rewriteWhere(spark: SparkSession, tableDir: String,
       partCol: String, pruneRange: Option[(String, Long, Long)],
       op: String)(
@@ -1517,24 +1513,9 @@ object SnapshotTable {
     val tag = newBatchTag(basedOn + 1)
     val (staged, newStats) = pruneRange match {
       case Some((c, _, _)) =>
-        // staging splits range slices BY PARTITION (files = slices ×
-        // partitions), so size the slice count per touched partition —
-        // the rewrite emits about as many files as it consumed.
-        // touched.size slices here would emit touched.size² files: the
-        // small-file explosion that turns one band delete into a
-        // thousand-file table.
-        val partsTouched = math.max(1, touched.map(_._1).distinct.size)
-        val rangeFiles = math.max(1,
-          (touched.size + partsTouched - 1) / partsTouched)
-        // restage with the based-on version's FULL stat-column set (the
-        // prune column leading as the clustering key): a Z-ordered
-        // table's second dimension would otherwise lose its min/max on
-        // every rewritten file and degrade to read-always forever
-        val allStatCols = st.valuesIterator.flatMap(_.keysIterator).toSet
-        val statCols = (c +: (allStatCols - c).toSeq.sorted)
-          .filter(rewritten.columns.contains)
-        stageBatchClustered(rewritten, tableDir, partCol, tag, statCols,
-          rangeFiles)
+        val statCols = (st.valuesIterator.flatMap(_.keysIterator).toSet + c)
+          .toSeq.sorted.filter(rewritten.columns.contains)
+        stageBatchWithStats(rewritten, tableDir, partCol, tag, statCols)
       case None =>
         (stageBatch(rewritten, tableDir, partCol, tag),
           Map.empty[String, Map[String, ColStat]])
@@ -1656,9 +1637,10 @@ object SnapshotTable {
         // range-splitting on the key alone would emit slices x partitions
         // files when the key is uncorrelated with the partition (an
         // OPTIMIZE that inflates the file count)
-        stageBatchOrdered(rewritten, tableDir, partCol, tag, statCols,
-          rangeFiles = math.max(1, smallByPart.size),
-          orderCols = Seq(col(partCol), col(statCols.head)))
+        stageBatchWithStats(
+          rewritten.repartitionByRange(math.max(1, smallByPart.size),
+            col(partCol), col(statCols.head)),
+          tableDir, partCol, tag, statCols)
       else (stageBatch(rewritten, tableDir, partCol, tag, 1L << 40),
         Map.empty[String, Map[String, ColStat]])
     val carriedFiles = carried.map(_._2).toSet

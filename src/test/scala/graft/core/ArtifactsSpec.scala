@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** Child-JVM entry for the exit-time deletion test: creates one store
@@ -59,6 +61,53 @@ class ArtifactsSpec extends SparkSpec {
     assert(builds === 1)
     assert(before === (0L until 50L).map(k => (k, k * 3)))
     assert(after === before)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+  private val tables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("building a Tables frame, then building it again, launches no job") {
+    val (frames, ran) = ranIn(Seq.fill(2)(tables.map(Tables.t(spark, sf, _))))
+    assert(ran.jobs === 0, s"building the frames launched ${ran.jobs} job(s)")
+    assert(frames.flatten.forall(_.schema.nonEmpty))
+  }
+
+  test("a resolved schema is the one Spark's own inference gives: every " +
+      "table, a nanosecond timestamp under nanosAsLong, an artifact " +
+      "directory with its _SUCCESS and .crc siblings") {
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    tables.foreach { t =>
+      val p = s"$sf/$t.parquet"
+      assert(Tables.t(spark, sf, t).schema === spark.read.parquet(p).schema, t)
+    }
+    // a nanosecond timestamp, which Spark reads as LONG under nanosAsLong
+    val nanos = new org.apache.hadoop.fs.Path(scratch("graft-nanos"), "ns.parquet")
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(nanos).withType(msg).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      .append("ts", 1700000000123456789L))
+    finally w.close()
+    val ns = Artifacts.readParquet(spark, nanos.toString)
+    assert(ns.schema === spark.read.parquet(nanos.toString).schema)
+    assert(ns.schema("ts").dataType === org.apache.spark.sql.types.LongType)
+    assert(ns.head().getLong(0) === 1700000000123456789L)
+    val art = Artifacts.parquet(spark, "/corpus-schema", "graft-spec-schema") {
+      spark.range(0L, 20L).select($"id".as("k"),
+        ($"id" * 1.5).cast("decimal(12,2)").as("amt"),
+        array($"id", $"id" + 1).as("arr"),
+        struct($"id".cast("string").as("s"), lit(null).cast("double").as("d"))
+          .as("nested"),
+        timestamp_seconds($"id").as("ts")).repartition(3)
+    }
+    val dir = new File(new java.net.URI(art.inputFiles.head)).getParentFile
+    val names = dir.list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(n =>
+      n.startsWith(".") && n.endsWith(".crc")), names)
+    assert(art.schema === spark.read.parquet(dir.getPath).schema)
+    assert(art.count() === 20L)
   }
 
   test("the root is deleted when the JVM exits") {

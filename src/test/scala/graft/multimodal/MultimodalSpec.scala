@@ -21,10 +21,7 @@ class MultimodalSpec extends SparkSpec {
       again.sortBy(_.media_id).map(_.feature.toSeq).toSeq)
   }
 
-  test("fakeResize re-stripes to fixed channels; frame sampling strides") {
-    val f = Multimodal.fakeResize(Array(1f, 2f, 3f, 4f, 5f, 6f, 7f, 8f), 4)
-    assert(f.toSeq === Seq(3f, 7f, 11f, 15f))
-    assert(Multimodal.fakeResize(Array.emptyFloatArray, 4).toSeq === Seq(0f, 0f, 0f, 0f))
+  test("frame sampling strides") {
     val frames = Multimodal.frameSample((0 until 300).map(_.toByte).toArray,
       frameBytes = 64, stride = 2)
     assert(frames.length === 3) // blocks 0,2,4 of the 5 blocks

@@ -129,20 +129,18 @@ class KernelsSpec extends SparkSpec {
       ("k3", "s5", "vc")))
   }
 
-  test("ColFns: curie / commaLong / stripXrefs / noneToNull / mergePipes") {
-    val df = Seq(("P1", "53,651", "a;b; ;", "None", "x|y", null: String))
-      .toDF("id", "mass", "xrefs", "maybe", "p1", "p2")
+  test("ColFns: curie / commaLong / stripXrefs / mergePipes") {
+    val df = Seq(("P1", "53,651", "a;b; ;", "x|y", null: String))
+      .toDF("id", "mass", "xrefs", "p1", "p2")
     val got = df.select(
       ColFns.curie("UniProt", $"id").as("c"),
       ColFns.commaLong($"mass").as("m"),
       ColFns.stripXrefs($"xrefs").as("x"),
-      ColFns.noneToNull($"maybe").as("n"),
       ColFns.mergePipes($"p1", $"p2").as("mp"))
       .collect().head
     assert(got.getString(0) === "uniprot:P1")
     assert(got.getLong(1) === 53651L)
     assert(got.getSeq[String](2) === Seq("a", "b"))
-    assert(got.isNullAt(3))
-    assert(got.getString(4) === "x|y")
+    assert(got.getString(3) === "x|y")
   }
 }

@@ -66,6 +66,37 @@ class PipelinesSpec extends SparkSpec {
     got.foreach(r => assert(r.get(0) === r.get(1), r.toString))
   }
 
+  test("keep-best contract of PpiPipeline.merged and SideEffectPipeline." +
+      "merged: over an ordering struct a null component sorts first, NaN " +
+      "last, and a struct the outer when nulls whole is skipped") {
+    import org.apache.spark.sql.functions._
+    // (group, in slice, ordering score, value); the out-of-slice row has
+    // the smallest score of its group and must never win
+    val rows = Seq[(String, Boolean, Option[Double], String)](
+      ("nullFirst", true, Some(1.0), "one"),
+      ("nullFirst", true, None, "null"),
+      ("nullFirst", true, Some(Double.NaN), "nan"),
+      ("nanLast", true, Some(Double.NaN), "nan"),
+      ("nanLast", true, Some(Double.MaxValue), "max"),
+      ("skipped", false, Some(-5.0), "out"),
+      ("skipped", true, Some(3.0), "three"),
+      ("allSkipped", false, Some(-5.0), "out"))
+      .toDF("g", "in", "score", "v")
+    val in = col("in")
+    val got = rows.groupBy("g").agg(
+      // PpiPipeline.merged's shape
+      min_by(when(in, col("v")), when(in, struct(col("score"), col("v"))))
+        .as("by"),
+      // SideEffectPipeline.merged's firstOf shape
+      min(when(in, struct(col("score"), col("v").as("v")))).getField("v")
+        .as("first"))
+      .as[(String, String, String)].collect()
+      .map { case (g, by, first) => g -> (Option(by), Option(first)) }.toMap
+    val want = Map("nullFirst" -> Some("null"), "nanLast" -> Some("max"),
+      "skipped" -> Some("three"), "allSkipped" -> None)
+    assert(got === want.map { case (g, v) => g -> (v, v) })
+  }
+
   test("SideEffectPipeline: non-numeric meddra ids drop, sources pipe-merge") {
     val m = SideEffectPipeline.merged(spark, sf).cache()
     assert(m.count() > 0)

@@ -754,36 +754,13 @@ class SnapshotTableSpec extends SparkSpec {
       rows.withColumn("name", concat(col("name"), lit("'"))), "part",
       Seq("k"), rangeFiles = 40)
     assert(Seq(v1, v2).forall(v => SnapshotTable.entriesAt(dir, v).size > 32))
-    // jobs started while `body` runs, by job group; listener events arrive
-    // in order, so once a later barrier job shows every earlier one has
-    def jobsIn[A](body: => A): (A, Int) = {
-      val sc = spark.sparkContext
-      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          groups.add(String.valueOf(Option(e.properties)
-            .map(_.getProperty("spark.jobGroup.id")).orNull))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup("counted", "snapshot read construction")
-        val out = try body finally sc.clearJobGroup()
-        sc.setJobGroup("barrier", "listener barrier")
-        try spark.range(1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!groups.contains("barrier") && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        assert(groups.contains("barrier"), "listener never saw the barrier")
-        (out, groups.toArray.count(_ == "counted"))
-      } finally sc.removeSparkListener(listener)
-    }
-    val (frames, jobs) = jobsIn(Seq(
+    val (frames, ran) = ranIn(Seq(
       "readAt" -> SnapshotTable.readAt(spark, dir, v1),
       "readRange" -> SnapshotTable.readRange(spark, dir, "k", 0L, 3999L),
       "changesBetween" ->
         SnapshotTable.changesBetween(spark, dir, v1, v2, Seq("k"))))
-    assert(jobs == 0, s"building the read frames launched $jobs Spark job(s)")
+    assert(ran.jobs == 0,
+      s"building the read frames launched ${ran.jobs} Spark job(s)")
     frames.foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("SnapshotFileIndex") &&
@@ -791,6 +768,61 @@ class SnapshotTableSpec extends SparkSpec {
         s"$name must scan through the manifest index:\n${plan.take(800)}")
     }
     assert(frames.map(_._2.count()) == Seq(4000L, 4000L, 4000L))
+  }
+
+  test("DML rewrites straight from the scan: on one file per partition " +
+      "a deleteWhere and an updateWhere each run one job, shuffle nothing " +
+      "and write from more than one task") {
+    val dir = scratch("graft-snap-dmlscan")
+    val rows = spark.range(0L, 4000L).select(col("id").as("k"),
+      concat(lit("n"), col("id").cast("string")).as("name"),
+      (col("id") % 4).cast("string").as("part"))
+    // one range slice: one file per partition, the layout compactSmall
+    // leaves, so every file overlaps every key band
+    SnapshotTable.overwriteClustered(spark, dir, rows, "part",
+      Seq("k"), rangeFiles = 1)
+    assert(SnapshotTable.entriesAt(dir, 1L).size == 4)
+    val (vDel, del) = ranIn(SnapshotTable.deleteWhere(spark, dir,
+      col("k").between(100L, 199L), "part", Some(("k", 100L, 199L))))
+    val (vUpd, upd) = ranIn(SnapshotTable.updateWhere(spark, dir,
+      col("k").between(300L, 399L), Seq("name" -> lit("u")), "part",
+      Some(("k", 300L, 399L))))
+    assert((vDel, vUpd) == (2L, 3L))
+    Seq("deleteWhere" -> del, "updateWhere" -> upd).foreach { case (op, r) =>
+      assert(r.jobs == 1, s"$op ran ${r.jobs} jobs")
+      assert(r.shuffleWriteBytes == 0L,
+        s"$op shuffled ${r.shuffleWriteBytes} bytes")
+      assert(r.tasks > 1, s"$op wrote from ${r.tasks} task(s)")
+    }
+    // every rewritten file still carries fresh stats
+    val st = SnapshotTable.statsAt(dir, vUpd)
+    assert(SnapshotTable.entriesAt(dir, vUpd).forall(e => st.contains(e._2)))
+    val live = SnapshotTable.read(spark, dir)
+    assert(live.count() == 3900)
+    assert(live.filter(col("name") === "u").count() == 100)
+  }
+
+  test("a band delete keeps the clustering of the files it rewrites: a " +
+      "later readRange over another band skips at least as many files") {
+    val dir = scratch("graft-snap-dmlclust")
+    val rows = spark.range(0L, 4000L).select(col("id").as("k"),
+      (col("id") % 2).cast("string").as("part"))
+    SnapshotTable.overwriteClustered(spark, dir, rows, "part",
+      Seq("k"), rangeFiles = 8)
+    def skipped(v: Long): Int = {
+      val read = SnapshotTable.readRange(spark, dir, "k", 3000L, 3099L)
+      assert(read.filter(col("k").between(3000L, 3099L)).count() == 100)
+      SnapshotTable.entriesAt(dir, v).size - read.inputFiles.length
+    }
+    val before = skipped(1L)
+    assert(before > 0, "the fixture must skip files to begin with")
+    val v2 = SnapshotTable.deleteWhere(spark, dir,
+      col("k").between(1200L, 1299L), "part", Some(("k", 1200L, 1299L)))
+    assert(v2 == 2L)
+    val after = skipped(v2)
+    assert(after >= before,
+      s"readRange skipped $after files after the delete, $before before")
+    assert(SnapshotTable.read(spark, dir).count() == 3900)
   }
 
   test("stageBatch with NULL partition values: null-part rows stage into " +
