@@ -2,15 +2,20 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options,
   Path}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.FileFormatWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType,
+  StringType, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.v2.SnapshotFileIndex
 
@@ -688,26 +693,44 @@ object SnapshotTable {
     * FileStatus from this map instead of paying one `getFileStatus` round
     * trip per live file (10⁶ files = 10⁶ NameNode/S3 calls per read
     * without it — the reason the open table formats record length in the
-    * log entry). Rows may be −1
-    * (unknown — the plain staging path doesn't count them); files whose
-    * lines predate the field are absent, and readers fall back to the
-    * filesystem for those only. */
+    * log entry). Rows may be −1 (unknown — an entry committed without
+    * metadata, see [[prepareManifest]]); files whose lines predate the
+    * field are absent, and readers fall back to the filesystem for those
+    * only. Unparseable fields and unknown lengths are skipped. */
   def fileMetaAt(tableDir: String, v: Long): Map[String, (Long, Long)] =
-    resolvedDataLines(tableDir, v).map(metaOfLines).getOrElse(Map.empty)
+    resolvedDataLines(tableDir, v).map {
+      _.iterator
+        .map(_.split('\t')).filter(_.length >= 4)
+        .flatMap { f =>
+          f(3).split(":", 2) match {
+            case Array(b, r) =>
+              try Some(f(1) -> (b.toLong, r.toLong))
+              catch { case _: NumberFormatException => None }
+            case _ => None
+          }
+        }.filter(_._2._1 >= 0L).toMap
+    }.getOrElse(Map.empty)
 
-  /** The `bytes:rows` field of resolved data lines, by file; unparseable
-    * fields and unknown lengths are skipped. */
-  private def metaOfLines(lines: Seq[String]): Map[String, (Long, Long)] =
-    lines.iterator
-      .map(_.split('\t')).filter(_.length >= 4)
-      .flatMap { f =>
-        f(3).split(":", 2) match {
-          case Array(b, r) =>
-            try Some(f(1) -> (b.toLong, r.toLong))
-            catch { case _: NumberFormatException => None }
-          case _ => None
-        }
-      }.filter(_._2._1 >= 0L).toMap
+  /** Files as a manifest records them: (partitionValue, relativePath)
+    * entries, each file's (bytes, rows) and its column stats — what staging
+    * returns for a new batch, what [[filesAt]] returns for a committed
+    * version's files, and what [[casCommit]] publishes. `meta` and `stats`
+    * are looked up by entry path; keys of paths not listed are ignored. */
+  final case class FileSet(entries: Seq[(String, String)],
+      meta: Map[String, (Long, Long)] = Map.empty,
+      stats: Map[String, Map[String, ColStat]] = Map.empty) {
+    def ++(o: FileSet): FileSet =
+      FileSet(entries ++ o.entries, meta ++ o.meta, stats ++ o.stats)
+    def filter(p: ((String, String)) => Boolean): FileSet =
+      copy(entries = entries.filter(p))
+  }
+
+  /** The live files of version `v` with the metadata and stats its
+    * manifest records — the carried-forward (or restored) half of a
+    * commit keeps them as they are. */
+  def filesAt(tableDir: String, v: Long): FileSet =
+    FileSet(entriesAt(tableDir, v), fileMetaAt(tableDir, v),
+      typedStatsAt(tableDir, v))
 
   /** Live entries of the current snapshot (empty for an empty table). */
   def entries(tableDir: String): Seq[(String, String)] =
@@ -726,8 +749,45 @@ object SnapshotTable {
   def newBatchTag(v: Long): String =
     s"$v-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** List a staged batch directory's parquet files as
-    * (partitionValue, relativePath) manifest entries.
+  /** Stage `df` as a new immutable batch directory and return its files
+    * with their bytes, rows and `statsCols` bounds. NOT visible to readers
+    * until a manifest referencing the entries is committed —
+    * stage-then-commit is the crash-safety contract, and the spec
+    * exercises the gap. `batchTag` should come from [[newBatchTag]] so
+    * concurrent writers never share a staging directory.
+    *
+    * ONE write, no sizing pass: rows are rebalanced on the partition
+    * value and the writer caps every file at `targetRowsPerFile` rows
+    * (`maxRecordsPerFile`), so no partition lands as one unbounded file.
+    * A hot partition does not funnel through one writer task either:
+    * AQE's rebalance skew split divides any shuffle partition above
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` across tasks,
+    * sized by bytes, while small partitions still stage one file each
+    * (and small batches coalesce into few tasks). The write tasks record
+    * every file's facts as they write it ([[writeBatch]]). */
+  def stageBatch(df: DataFrame, tableDir: String, partCol: String,
+      batchTag: String, targetRowsPerFile: Long = 1L << 20,
+      statsCols: Seq[String] = Nil): FileSet =
+    writeBatch(df.withColumn("__p", col(partCol)).hint("rebalance", col("__p")),
+      tableDir, batchTag, statsCols,
+      Map("maxRecordsPerFile" -> targetRowsPerFile.toString))
+
+  /** [[stageBatch]] with no exchange of its own, so each write task stages
+    * exactly the rows its input partition holds: an ordered stager puts
+    * its range exchange in front, [[rewriteWhere]] hands over its scan as
+    * it is. */
+  private def stageBatchWithStats(df: DataFrame, tableDir: String,
+      partCol: String, batchTag: String, statsCols: Seq[String]): FileSet =
+    writeBatch(df.withColumn("__p", col(partCol)), tableDir, batchTag,
+      statsCols, Map.empty)
+
+  /** The one staging write. `df` carries the partition value as `__p`, and
+    * Spark's own file writer puts its rows under
+    * `data/batch-<batchTag>/__p=<value>/`, inside a SQL execution of `df`'s
+    * plan so listeners see the write as they see any other. A
+    * [[StagedStats]] tracker in every write task records each file's bytes,
+    * rows and `statsCols` bounds, and those are the whole result: the files
+    * are never listed or opened again.
     *
     * The directory-name suffix is Hive-ESCAPED by Spark's partitioned
     * write (':' → '%3A', '%' → '%25', …), so the recorded partition value
@@ -739,318 +799,77 @@ object SnapshotTable {
     * contains an escaped character (pruned files are never read, so
     * Spark's row-level re-filter cannot recover the loss). Relative PATHS
     * keep the escaped directory names — they address real directories. */
-  private def listStaged(tableDir: String, batchRel: String)
-      : Seq[(String, String)] = {
-    val (fs, root) = fsRoot(tableDir)
-    val batchDir = new Path(new Path(root, "data"), batchRel)
-    fs.listStatus(batchDir).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__p="))
-      .flatMap { d =>
-        val part = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(d.getPath.getName.stripPrefix("__p="))
-        // the manifest is tab/line-delimited text and records the RAW
-        // value — a value containing \t/\n/\r would shift or split its
-        // own line (and every parser indexes fields positionally), so
-        // such values are rejected LOUDLY at stage time (before any
-        // manifest references the batch: crash-safety leaves only an
-        // orphan staging dir). This hardens the documented
-        // "directory-safe strings" contract instead of silently
-        // corrupting metadata.
-        require(!part.exists(c => c == '\t' || c == '\n' || c == '\r'),
-          s"partition value ${part.replaceAll("[\\t\\n\\r]", "?")} contains " +
-            "a tab/newline/CR — manifest lines are tab/line-delimited; " +
-            "sanitize the partition column before staging")
-        fs.listStatus(d.getPath).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val rel = s"$batchRel/${d.getPath.getName}/${f.getPath.getName}"
-            stagedSizes.put(rel, f.getLen)
-            part -> rel
-          }
-      }
-  }
-
-  /** Sizes of files this JVM staged, by manifest-relative path — filled by
-    * [[listStaged]] (the listing already holds the FileStatus, so the
-    * bytes are free) and consumed by [[prepareManifest]] so every NEW
-    * manifest line records its file's length without a second metadata
-    * round trip. Bounded: entries are dropped once a manifest records
-    * them (prepareManifest removes what it consumed). */
-  private val stagedSizes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Row counts of files this JVM staged — filled by the stats scan of
-    * [[stageBatchWithStats]] (one extra COUNT in an aggregation that runs
-    * anyway; the plain staging path records −1 = unknown). Same
-    * consume-on-commit lifecycle as [[stagedSizes]]. */
-  private val stagedRows =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Drop a staged batch's size/row entries — the FAILED-commit half of
-    * the consume-on-commit lifecycle: a successful [[prepareManifest]]
-    * removes what it recorded, but a CAS loser's (or any aborted commit's)
-    * staged batch is abandoned with its map entries stranded, and every
-    * retry stages a FRESH batch — unbounded growth in a long-lived driver
-    * JVM without this. Keyed by the batch-relative prefix, so only the
-    * abandoned batch's entries go. */
-  private def discardStaged(batchTag: String): Unit = {
-    val prefix = s"batch-$batchTag/"
-    stagedSizes.keySet.removeIf(_.startsWith(prefix))
-    stagedRows.keySet.removeIf(_.startsWith(prefix))
-  }
-
-  /** Run `commit` and on ANY failure drop the staged batch's metadata
-    * entries before rethrowing — the shared guard of every
-    * stage-then-CAS call site. */
-  private def commitOrDiscard(batchTag: String)(commit: => Long): Long =
-    try commit catch {
-      case e: Throwable => discardStaged(batchTag); throw e
-    }
-
-  /** Test hook: current staged-metadata entry count across both maps —
-    * the spec pins that failed/retried commits leave nothing behind. */
-  private[sources] def stagedMetaCount: Int =
-    stagedSizes.size + stagedRows.size
-
-  /** Stage `df` as a new immutable batch directory and return its
-    * (partitionValue, relativePath) entries. NOT visible to readers until
-    * a manifest referencing the entries is committed — stage-then-commit
-    * is the crash-safety contract, and the spec exercises the gap.
-    * `batchTag` should come from [[newBatchTag]] so concurrent writers
-    * never share a staging directory.
-    *
-    * ONE write, no sizing pass: rows are rebalanced on the partition
-    * value and the writer caps every file at `targetRowsPerFile` rows
-    * (`maxRecordsPerFile`), so no partition lands as one unbounded file.
-    * A hot partition does not funnel through one writer task either:
-    * AQE's rebalance skew split divides any shuffle partition above
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` across tasks,
-    * sized by bytes, while small partitions still stage one file each
-    * (and small batches coalesce into few tasks). */
-  def stageBatch(df: DataFrame, tableDir: String, partCol: String,
-      batchTag: String, targetRowsPerFile: Long = 1L << 20)
-      : Seq[(String, String)] = {
-    val batchRel = s"batch-$batchTag"
-    val (_, root) = fsRoot(tableDir)
-    val batchDir = new Path(new Path(root, "data"), batchRel).toString
-    df.withColumn("__p", col(partCol)).hint("rebalance", col("__p"))
-      .write.mode("overwrite").option("maxRecordsPerFile", targetRowsPerFile)
-      .partitionBy("__p").parquet(batchDir)
-    listStaged(tableDir, batchRel)
-  }
-
-  /** The one stats-carrying staging tail: write `df` split by partition
-    * value with no exchange of its own, so each write task stages exactly
-    * the rows its input partition holds (an ordered stager puts its range
-    * exchange in front; [[rewriteWhere]] hands over its scan as it is),
-    * then list the batch and record every file's min/max for `statsCols`
-    * and its row count. */
-  private def stageBatchWithStats(df: DataFrame, tableDir: String,
-      partCol: String, batchTag: String, statsCols: Seq[String])
-      : (Seq[(String, String)], Map[String, Map[String, ColStat]]) = {
-    require(statsCols.nonEmpty, "statsCols must name at least one column")
-    val statTypes = statsCols.map(c => c -> df.schema(c).dataType).toMap
-    statTypes.foreach { case (c, t) =>
-      require(t == org.apache.spark.sql.types.LongType ||
-          t == org.apache.spark.sql.types.StringType ||
-          t == org.apache.spark.sql.types.DoubleType ||
-          t.isInstanceOf[org.apache.spark.sql.types.DecimalType],
+  private def writeBatch(df: DataFrame, tableDir: String, batchTag: String,
+      statsCols: Seq[String], options: Map[String, String]): FileSet = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    val plan = qe.executedPlan
+    val (part, data) = plan.output.partition(_.name == "__p")
+    val statCols = statsCols.map { c =>
+      val t = df.schema(c).dataType
+      require(statable(t),
         s"stat column $c is $t — manifest stats carry LONG, STRING, " +
           "DOUBLE and DECIMAL min/max only (cast ids/epochs to LONG, " +
           "codes to STRING, scores to DOUBLE, money to DECIMAL)")
+      (c, data.indexWhere(_.name == c), t)
     }
     val batchRel = s"batch-$batchTag"
     val (_, root) = fsRoot(tableDir)
-    val batchDir = new Path(new Path(root, "data"), batchRel).toString
-    df.withColumn("__p", col(partCol))
-      .write.mode("overwrite").partitionBy("__p").parquet(batchDir)
-    val staged = listStaged(tableDir, batchRel)
-    // an empty batch (a rewrite that deleted every candidate row) stages
-    // zero files — nothing to stat
-    if (staged.isEmpty)
-      return (staged, Map.empty[String, Map[String, ColStat]])
-    // Per-file stats + row counts come from the staged files' parquet
-    // FOOTERS, read on the driver (round-11 verdict #5): the writer
-    // already computed column-chunk min/max and block row counts during
-    // the write, so re-deriving them with a distributed scan job was one
-    // full read of the batch plus a scheduling round trip per clustered
-    // commit. O(files) footer opens replace it; the distributed scan
-    // remains for DOUBLE stat columns (parquet-mr drops NaN from chunk
-    // bounds — the hi = NaN contract needs Spark's own max) and as the
-    // fallback when a footer can't be read or a chunk carries no usable
-    // statistics (ParquetFooterStatsSpec pins footer ≡ scan per type).
-    val stats = footerStatsOrRescan(df.sparkSession, tableDir, batchDir,
-      staged, statsCols, statTypes)
-    (staged, stats)
-  }
-
-  /** Footer-based stats for a freshly staged batch, with the distributed
-    * scan as fallback. Soundness rule: a column chunk that HAS non-null
-    * values but carries no (or unusable) statistics poisons the whole
-    * batch back to the rescan path — never a silently narrower bound. */
-  private def footerStatsOrRescan(spark: SparkSession, tableDir: String,
-      batchDir: String, staged: Seq[(String, String)], statsCols: Seq[String],
-      statTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : Map[String, Map[String, ColStat]] = {
-    // DOUBLE columns never take the footer path: parquet-mr's writer
-    // DROPS NaN from column-chunk min/max (measured — the spec's
-    // NaN-carrying file came back with a finite hi), which would silently
-    // violate the hi = NaN prune contract. Spark's own scan keeps NaN as
-    // the max, so double batches keep the rescan.
-    if (statsCols.exists(c =>
-        statTypes(c) == org.apache.spark.sql.types.DoubleType))
-      return rescanStats(spark, batchDir, statsCols, statTypes)
-    try {
-      val (fs, root) = fsRoot(tableDir)
-      val dataRoot = new Path(root, "data")
-      staged.map { case (_, rel) =>
-        val (rows, st) = footerFileStats(
-          new Path(dataRoot, rel), statsCols, statTypes)
-        stagedRows.put(rel, rows)
-        rel -> st
-      }.toMap.filter(_._2.nonEmpty)
-    } catch { case NonFatal(_) =>
-      rescanStats(spark, batchDir, statsCols, statTypes)
+    val out = new Path(new Path(root, "data"), batchRel).toString
+    val conf = spark.sessionState.newHadoopConf()
+    val tracker = new StagedStats(statCols, new SerializableConfiguration(conf))
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, out)
+    SQLExecution.withNewExecutionId(qe, Some("command")) {
+      FileFormatWriter.write(spark, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(out, Map.empty, plan.output), conf, part,
+        None, Seq(tracker), options)
     }
-  }
-
-  /** One file's (rowCount, per-column ColStat) from its parquet footer.
-    * Throws on any chunk with values but unusable stats (the caller falls
-    * back to the rescan). A column whose every chunk is all-null gets no
-    * entry — "no stats → always read", same as the scan path. */
-  private def footerFileStats(file: Path, statsCols: Seq[String],
-      statTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : (Long, Map[String, ColStat]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(file, hadoopConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val byCol = statsCols.flatMap { c =>
-        val chunks = blocks.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == c).getOrElse(
-            sys.error(s"stat column $c missing from a footer of $file"))
-        }
-        // chunks that are entirely null contribute no bound; a chunk with
-        // values but no usable stats makes the footer unusable
-        val valued = chunks.filter { ch =>
-          val s = ch.getStatistics
-          require(s != null && !s.isEmpty && s.isNumNullsSet,
-            s"unusable footer statistics for $c in $file")
-          s.hasNonNullValue
-        }
-        if (valued.isEmpty) None
-        else {
-          val bounds = valued.map(ch => footerBounds(ch, statTypes(c)))
-          Some(c -> bounds.reduce(mergeStat))
-        }
-      }.toMap
-      (rows, byCol)
-    } finally reader.close()
-  }
-
-  /** A single column chunk's (min, max) as a ColStat, converted per the
-    * TABLE type (parquet physical → engine domain). */
-  private def footerBounds(
-      ch: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
-      t: org.apache.spark.sql.types.DataType): ColStat = {
-    val s = ch.getStatistics
-    t match {
-      case org.apache.spark.sql.types.LongType =>
-        LongStat(s.genericGetMin.asInstanceOf[java.lang.Long],
-          s.genericGetMax.asInstanceOf[java.lang.Long])
-      case org.apache.spark.sql.types.DoubleType =>
-        DblStat(s.genericGetMin.asInstanceOf[java.lang.Double],
-          s.genericGetMax.asInstanceOf[java.lang.Double])
-      case org.apache.spark.sql.types.StringType =>
-        val mn = s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-        val mx = s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-        StrStat(new String(mn.getBytes, java.nio.charset.StandardCharsets.UTF_8),
-          new String(mx.getBytes, java.nio.charset.StandardCharsets.UTF_8))
-      case d: org.apache.spark.sql.types.DecimalType =>
-        // Spark writes DECIMAL as INT32 (p≤9) / INT64 (p≤18) /
-        // FIXED_LEN_BYTE_ARRAY unscaled values
-        def dec(v: AnyRef): java.math.BigDecimal = v match {
-          case i: java.lang.Integer => java.math.BigDecimal.valueOf(
-            i.longValue, d.scale)
-          case l: java.lang.Long => java.math.BigDecimal.valueOf(l, d.scale)
-          case b: org.apache.parquet.io.api.Binary =>
-            new java.math.BigDecimal(
-              new java.math.BigInteger(b.getBytes), d.scale)
-          case other => sys.error(s"unexpected decimal physical $other")
-        }
-        DecStat(dec(s.genericGetMin.asInstanceOf[AnyRef]),
-          dec(s.genericGetMax.asInstanceOf[AnyRef]))
-      case other => sys.error(s"unsupported stat type $other")
+    val files = tracker.files.map { case (k, f) => s"$batchRel/$k" -> f }
+    val entries = files.keys.toSeq.sorted.map { rel =>
+      val value = ExternalCatalogUtils.unescapePathName(
+        rel.split('/')(1).stripPrefix("__p="))
+      // the manifest is tab/line-delimited text and records the RAW
+      // value — a value containing \t/\n/\r would shift or split its
+      // own line (and every parser indexes fields positionally), so
+      // such values are rejected LOUDLY at stage time (before any
+      // manifest references the batch: crash-safety leaves only an
+      // orphan staging dir). This hardens the documented
+      // "directory-safe strings" contract instead of silently
+      // corrupting metadata.
+      require(!value.exists(c => c == '\t' || c == '\n' || c == '\r'),
+        s"partition value ${value.replaceAll("[\\t\\n\\r]", "?")} contains " +
+          "a tab/newline/CR — manifest lines are tab/line-delimited; " +
+          "sanitize the partition column before staging")
+      value -> rel
     }
+    FileSet(entries, files.map { case (r, f) => r -> (f.bytes, f.rows) },
+      files.collect { case (r, f) if f.stats.nonEmpty => r -> f.stats })
   }
 
-  /** Merge two per-chunk bounds of the same column into one file bound,
-    * under the SAME orders the engine's min/max and [[ColStat]] probes
-    * use: Long natural, Double total order (Double.compare — NaN high),
-    * String unsigned UTF-8 bytes ([[ColStat.utf8Cmp]]), Decimal
-    * scale-insensitive compareTo. */
-  private def mergeStat(a: ColStat, b: ColStat): ColStat = (a, b) match {
-    case (LongStat(l1, h1), LongStat(l2, h2)) =>
-      LongStat(math.min(l1, l2), math.max(h1, h2))
-    case (DblStat(l1, h1), DblStat(l2, h2)) =>
-      DblStat(ColStat.dblOrder.min(l1, l2), ColStat.dblOrder.max(h1, h2))
-    case (StrStat(l1, h1), StrStat(l2, h2)) =>
-      StrStat(ColStat.strOrder.min(l1, l2), ColStat.strOrder.max(h1, h2))
-    case (DecStat(l1, h1), DecStat(l2, h2)) =>
-      DecStat(ColStat.decOrder.min(l1, l2), ColStat.decOrder.max(h1, h2))
-    case other => sys.error(s"mismatched stat kinds $other")
+  private def statable(t: DataType): Boolean = t match {
+    case LongType | StringType | DoubleType | _: DecimalType => true
+    case _ => false
   }
 
-  /** The pre-round-12 distributed stats pass — one scan of the NEW BATCH
-    * only (never the table), kept as the fallback for footers the driver
-    * cannot use. Double bounds are recorded EXACTLY as Spark's min/max
-    * computed them — including hi = NaN for a NaN-carrying file. */
-  private def rescanStats(spark: SparkSession, batchDir: String,
-      statsCols: Seq[String],
-      statTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : Map[String, Map[String, ColStat]] = {
-    val aggs = count(lit(1)).as("__rows") +: statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    spark.read.parquet(batchDir)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .flatMap { r =>
-        // file URI → manifest-relative path
-        val rel = r.getString(0).split("/data/").last
-        stagedRows.put(rel, r.getLong(1))
-        val m = statsCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(2 + 2 * i)) None // all-null file: no stats → always read
-          else statTypes(c) match {
-            case org.apache.spark.sql.types.StringType =>
-              Some(c -> (StrStat(r.getString(2 + 2 * i),
-                r.getString(3 + 2 * i)): ColStat))
-            case org.apache.spark.sql.types.DoubleType =>
-              Some(c -> (DblStat(r.getDouble(2 + 2 * i),
-                r.getDouble(3 + 2 * i)): ColStat))
-            case _: org.apache.spark.sql.types.DecimalType =>
-              Some(c -> (DecStat(r.getDecimal(2 + 2 * i),
-                r.getDecimal(3 + 2 * i)): ColStat))
-            case _ =>
-              Some(c -> (LongStat(r.getLong(2 + 2 * i),
-                r.getLong(3 + 2 * i)): ColStat))
-          }
-        }.toMap
-        if (m.isEmpty) None else Some(rel -> m)
-      }.toMap
-  }
+  /** The columns the stats `st` of a based-on version record, plus
+    * `extra`, that `df` still has with a type stats can carry: what every
+    * file a commit stages records, so a merge, append, rewrite or
+    * compaction never narrows the table's skipping. */
+  private def recordedStatCols(st: Map[String, Map[String, ColStat]],
+      df: DataFrame, extra: Option[String] = None): Seq[String] =
+    (st.valuesIterator.flatMap(_.keysIterator).toSet ++ extra).toSeq.sorted
+      .filter(c => df.schema.find(_.name == c).exists(f => statable(f.dataType)))
 
-  /** Write the next manifest file (version current+1) with `entries`
-    * (and, per file, any column stats plus its length and row count —
-    * every line carries `bytes:rows` so reads never pay a per-file
-    * metadata round trip; see [[fileMetaAt]]). Lengths come, in order,
-    * from the PREVIOUS manifest (carried-forward files), this JVM's
-    * staging listing ([[stagedSizes]] — free bytes from the stage-time
-    * listStatus), then one fallback `getFileStatus` (foreign entries a
-    * test hand-builds; −1 when even that misses). The manifest exists on
+  /** Write the next manifest file (version current+1) listing `files`:
+    * per file its column stats and its `bytes:rows` — every line carries
+    * them so reads never pay a per-file metadata round trip (see
+    * [[fileMetaAt]]). Both come with `files` itself: a staged batch's from
+    * its write tasks ([[stageBatch]]), carried or restored entries' from the
+    * manifest they come from ([[filesAt]]). Only an entry that arrives with
+    * no metadata (a hand-built one) costs a `getFileStatus`, recording
+    * rows −1 (and bytes −1 when even that misses). The manifest exists on
     * disk after this call but is NOT live until [[swapPointer]] — a
     * crash between the two leaves readers on the old snapshot.
     *
@@ -1068,28 +887,20 @@ object SnapshotTable {
     * add/replace/remove records against version−1 — commit I/O is
     * O(touched + live/N) amortized, never O(live) per commit. Returns
     * the prepared version. */
-  def prepareManifest(tableDir: String, newEntries: Seq[(String, String)],
-      stats: Map[String, Map[String, ColStat]] = Map.empty,
+  def prepareManifest(tableDir: String, files: FileSet,
       schema: Option[StructType] = None,
       partCol: Option[String] = None,
       op: Option[String] = None,
       txn: Option[(String, Long)] = None): Long = {
     val (fs, root) = fsRoot(tableDir)
     val v = currentVersion(tableDir) + 1
-    // ONE resolve of the predecessor feeds both the carried-forward
-    // bytes:rows lookup and the delta diff below
     val prevLines: Seq[String] =
       if (v > 1L) resolvedDataLines(tableDir, v - 1).getOrElse(Seq.empty)
       else Seq.empty
-    val prevMeta = metaOfLines(prevLines)
     val dataRoot = new Path(root, "data")
-    def metaOf(f: String): (Long, Long) = prevMeta.getOrElse(f, {
-      val rows = Option(stagedRows.get(f)).map(_.longValue).getOrElse(-1L)
-      Option(stagedSizes.get(f)).map(b => (b.longValue, rows)).getOrElse {
-        try (fs.getFileStatus(new Path(dataRoot, f)).getLen, rows)
-        catch { case _: java.io.FileNotFoundException => (-1L, rows) }
-      }
-    })
+    def metaOf(f: String): (Long, Long) = files.meta.getOrElse(f,
+      try (fs.getFileStatus(new Path(dataRoot, f)).getLen, -1L)
+      catch { case _: java.io.FileNotFoundException => (-1L, -1L) })
     // headers are written on EVERY manifest, deltas included — schema/
     // partcol inherit from the predecessor when the caller passes none,
     // so header reads ([[schemaAt]]/[[partColAt]]) stay single-file and
@@ -1106,8 +917,8 @@ object SnapshotTable {
       pcEff.map(c => s"#partcol\t$c\n").getOrElse("") +
       op.map(o => s"#op\t$o\n").getOrElse("") +
       txns.toSeq.sorted.map { case (a, b) => s"#txn\t$a:$b\n" }.mkString
-    val fullLines = newEntries.map { case (p, f) =>
-      val st = stats.get(f).filter(_.nonEmpty)
+    val fullLines = files.entries.map { case (p, f) =>
+      val st = files.stats.get(f).filter(_.nonEmpty)
         .map(_.toSeq.sortBy(_._1).map {
           case (c, LongStat(lo, hi)) => s"$c=$lo:$hi"
           case (c, StrStat(lo, hi)) => s"$c=s:${encStr(lo)}:${encStr(hi)}"
@@ -1146,9 +957,6 @@ object SnapshotTable {
       throw new IllegalStateException(
         s"manifest v$v of $tableDir already exists — a racing writer " +
           "prepared the same version; re-read and retry")
-    newEntries.foreach { case (_, f) =>
-      stagedSizes.remove(f); stagedRows.remove(f)
-    }
     v
   }
 
@@ -1204,7 +1012,7 @@ object SnapshotTable {
   }
 
   /** Optimistic-concurrency commit (the Iceberg/Delta CAS shape): publish
-    * `newEntries` as the next version ONLY if the table is still at
+    * `files` as the next version ONLY if the table is still at
     * `basedOnVersion` — the version the writer's merge actually read. A
     * concurrent writer that committed in between makes this throw
     * [[java.util.ConcurrentModificationException]] instead of silently
@@ -1212,9 +1020,7 @@ object SnapshotTable {
     * re-reads the new current version, re-merges, and retries. The check
     * and the pointer swap sit inside the commit lock, so two CAS commits
     * can never interleave between check and swap. */
-  def casCommit(tableDir: String, basedOnVersion: Long,
-      newEntries: Seq[(String, String)],
-      stats: Map[String, Map[String, ColStat]] = Map.empty,
+  def casCommit(tableDir: String, basedOnVersion: Long, files: FileSet,
       schema: Option[StructType] = None,
       partCol: Option[String] = None,
       op: String = "commit",
@@ -1233,8 +1039,8 @@ object SnapshotTable {
         if (txnsAt(tableDir, cur).get(app).exists(_ >= batch)) return cur
       }
       val keepPartCol = partCol.orElse(partColAt(tableDir, cur))
-      val v = prepareManifest(tableDir, newEntries, stats, schema,
-        keepPartCol, Some(op), txn)
+      val v = prepareManifest(tableDir, files, schema, keepPartCol, Some(op),
+        txn)
       swapPointer(tableDir, v)
       v
     }
@@ -1244,17 +1050,17 @@ object SnapshotTable {
   def overwrite(spark: SparkSession, tableDir: String, df: DataFrame,
       partCol: String, op: String = "overwrite",
       txn: Option[(String, Long)] = None): Long =
-    overwriteWith(tableDir, df, partCol, op, txn) { tag =>
-      (stageBatch(df, tableDir, partCol, tag), Map.empty)
-    }
+    overwriteWith(tableDir, df, partCol, op, txn)(
+      stageBatch(df, tableDir, partCol, _))
 
   /** Full-table overwrite through range-clustered, stats-carrying
     * staging — the data-skipping layout: rows are range-partitioned on
     * `statsCols.head` into `rangeFiles` tasks before the per-partition
     * split, so each output file covers a narrow slice of the clustering
     * key WITHIN its partition, and the committed manifest carries per-file
-    * min/max for `statsCols` ([[stageBatchWithStats]]). The stats lift
-    * parquet's footer min/max to the MANIFEST level (Iceberg's
+    * min/max for `statsCols`, recorded by the write tasks as they write
+    * each file ([[stageBatchWithStats]]).
+    * The stats lift file-level min/max to the MANIFEST level (Iceberg's
     * column-stats design): [[readRange]] prunes files from the file list
     * alone — zero footers opened for skipped files, the difference
     * between "open 10⁶ footers to skip them" and "skip them for free" at
@@ -1289,19 +1095,16 @@ object SnapshotTable {
   }
 
   /** The commit every full-table overwrite shares: `stage` writes the new
-    * batch under the given tag and returns its entries and stats, which
-    * replace every live entry by CAS against the version read first. */
+    * batch under the given tag, and its files replace every live entry by
+    * CAS against the version read first. */
   private def overwriteWith(tableDir: String, df: DataFrame, partCol: String,
       op: String, txn: Option[(String, Long)] = None)(
-      stage: String => (Seq[(String, String)], Map[String, Map[String, ColStat]]))
-      : Long = {
+      stage: String => FileSet): Long = {
     val (fs, root) = fsRoot(tableDir)
     fs.mkdirs(root)
     val basedOn = currentVersion(tableDir)
-    val tag = newBatchTag(basedOn + 1)
-    val (staged, stats) = stage(tag)
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, staged, stats,
-      Some(df.schema), Some(partCol), op, txn))
+    casCommit(tableDir, basedOn, stage(newBatchTag(basedOn + 1)),
+      Some(df.schema), Some(partCol), op, txn)
   }
 
   /** CDC MERGE with an atomic multi-partition commit: same merge kernel
@@ -1351,20 +1154,19 @@ object SnapshotTable {
     val keyBounds: Map[String, (Long, Long)] = touchedRows
       .filter(r => r.getLong(3) == 0L && !r.isNullAt(1) && !r.isNullAt(2))
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val oldStats = typedStatsAt(tableDir, basedOn)
+    val old = filesAt(tableDir, basedOn)
     // a file is provably update-free iff its partition's batch keys have
     // known bounds AND the kernel prunes the file against them; anything
     // less (no stats, wrong type, null keys) keeps the conservative
     // read-and-merge path
     def updateFree(partVal: String, file: String): Boolean =
       keyBounds.get(partVal).exists { case (lo, hi) =>
-        keptFiles(Seq(file), oldStats,
+        keptFiles(Seq(file), old.stats,
           Map(keyCols.head -> LongRange(Some(lo), Some(hi)))).isEmpty
       }
-    val old = entriesAt(tableDir, basedOn)
-    val (touchedOld, untouched) = old.partition { case (p, f) =>
-      touched(p) && !updateFree(p, f)
-    }
+    def merges(e: (String, String)): Boolean =
+      touched(e._1) && !updateFree(e._1, e._2)
+    val touchedOld = old.entries.filter(merges)
     val merged = {
       // schema evolution (add-only): the touched base reads with the
       // TABLE's recorded schema (covers files staged before any later
@@ -1384,16 +1186,14 @@ object SnapshotTable {
         .filter(col("__rn") === 1 && !col(deleteCol))
         .drop("__rn")
     }
-    val tag = newBatchTag(basedOn + 1)
-    val staged = stageBatch(merged, tableDir, partCol, tag)
-    // carry untouched files' stats forward with their entries; the new
-    // batch's files get none (the plain staging path) and are always read
-    val untouchedFiles = untouched.map(_._2).toSet
-    val carriedStats = oldStats.filter { case (f, _) => untouchedFiles(f) }
+    // untouched files carry forward with their metadata and stats; the new
+    // batch's files record the stat columns the based-on version records
+    val staged = stageBatch(merged, tableDir, partCol,
+      newBatchTag(basedOn + 1), statsCols = recordedStatCols(old.stats, merged))
     // CAS against the version this merge actually read: a concurrent
     // commit in the meantime throws instead of losing that writer's rows
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, untouched ++ staged,
-      carriedStats, Some(merged.schema), Some(partCol), op = "upsert"))
+    casCommit(tableDir, basedOn, old.filter(!merges(_)) ++ staged,
+      Some(merged.schema), Some(partCol), op = "upsert")
   }
 
   /** [[upsert]] with the optimistic-concurrency retry loop built in —
@@ -1459,12 +1259,11 @@ object SnapshotTable {
           (if (extra.nonEmpty) s"unexpected: ${extra.mkString(", ")}" else ""))
       val conformed = rows.select(
         sch.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      val tag = newBatchTag(basedOn + 1)
-      val staged = stageBatch(conformed, tableDir, pc, tag)
-      val old = entriesAt(tableDir, basedOn)
-      commitOrDiscard(tag)(casCommit(tableDir, basedOn,
-        old ++ staged, typedStatsAt(tableDir, basedOn), Some(sch), Some(pc),
-        op = "insert", txn = txn))
+      val old = filesAt(tableDir, basedOn)
+      val staged = stageBatch(conformed, tableDir, pc, newBatchTag(basedOn + 1),
+        statsCols = recordedStatCols(old.stats, conformed))
+      casCommit(tableDir, basedOn, old ++ staged, Some(sch), Some(pc),
+        op = "insert", txn = txn)
     }
 
   /** Copy-on-write rewrite of the files a predicate MAY touch — the
@@ -1485,46 +1284,39 @@ object SnapshotTable {
     * of the files it read, one file per partition value, so a rewritten
     * file covers the key range of its inputs — one input file, or several
     * small ones of a partition that Spark packed into the same scan task —
-    * and the rewrite keeps its inputs' clustering. Every rewritten file
-    * gets fresh min/max FOR EVERY stat column the based-on version
-    * recorded (not just the prune column — a Z-ordered table's second
-    * dimension keeps skipping after DML). Re-clustering stays with
-    * [[compactSmall]] and [[overwriteClustered]]. Without `pruneRange`
-    * every file is a candidate (correct, full rewrite — the caller's
-    * explicit choice) and the batch stages through [[stageBatch]].
-    * Commits via [[casCommit]] against the version the rewrite read;
-    * returns the committed version, or the current version unchanged when
-    * nothing can match (a provably-empty candidate set commits no
-    * spurious version). */
+    * and the rewrite keeps its inputs' clustering. Re-clustering stays
+    * with [[compactSmall]] and [[overwriteClustered]]. Without
+    * `pruneRange` every file is a candidate (correct, full rewrite — the
+    * caller's explicit choice) and the batch stages through
+    * [[stageBatch]]. Either way every rewritten file gets fresh min/max
+    * FOR EVERY stat column the based-on version recorded, plus the prune
+    * column (not just the prune column — a Z-ordered table's second
+    * dimension keeps skipping after DML). Commits via [[casCommit]]
+    * against the version the rewrite read; returns the committed version,
+    * or the current version unchanged when nothing can match (a
+    * provably-empty candidate set commits no spurious version). */
   private def rewriteWhere(spark: SparkSession, tableDir: String,
       partCol: String, pruneRange: Option[(String, Long, Long)],
       op: String)(
       transform: DataFrame => DataFrame): Long = {
     val basedOn = currentVersion(tableDir)
-    val all = entriesAt(tableDir, basedOn)
-    val st = typedStatsAt(tableDir, basedOn)
-    val candidates = keptFiles(all.map(_._2), st, pruneRange.map {
-      case (c, lo, hi) => c -> (LongRange(Some(lo), Some(hi)): ColRange)
-    }.toMap).toSet
-    val (touched, carried) = all.partition { case (_, f) => candidates(f) }
+    val all = filesAt(tableDir, basedOn)
+    val candidates = keptFiles(all.entries.map(_._2), all.stats,
+      pruneRange.map { case (c, lo, hi) =>
+        c -> (LongRange(Some(lo), Some(hi)): ColRange)
+      }.toMap).toSet
+    val touched = all.entries.filter(e => candidates(e._2))
     if (touched.isEmpty) return basedOn
     val sch = schemaAt(tableDir, basedOn)
     val rewritten = transform(readFiles(spark, tableDir, basedOn, touched.map(_._2), sch))
     val tag = newBatchTag(basedOn + 1)
-    val (staged, newStats) = pruneRange match {
-      case Some((c, _, _)) =>
-        val statCols = (st.valuesIterator.flatMap(_.keysIterator).toSet + c)
-          .toSeq.sorted.filter(rewritten.columns.contains)
+    val statCols = recordedStatCols(all.stats, rewritten, pruneRange.map(_._1))
+    val staged =
+      if (pruneRange.isDefined)
         stageBatchWithStats(rewritten, tableDir, partCol, tag, statCols)
-      case None =>
-        (stageBatch(rewritten, tableDir, partCol, tag),
-          Map.empty[String, Map[String, ColStat]])
-    }
-    val carriedFiles = carried.map(_._2).toSet
-    val carriedStats = st.filter { case (f, _) => carriedFiles(f) }
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, carried ++ staged,
-      carriedStats ++ newStats, sch.orElse(Some(rewritten.schema)),
-      Some(partCol), op = op))
+      else stageBatch(rewritten, tableDir, partCol, tag, statsCols = statCols)
+    casCommit(tableDir, basedOn, all.filter(e => !candidates(e._2)) ++ staged,
+      sch.orElse(Some(rewritten.schema)), Some(partCol), op = op)
   }
 
   /** Predicate DELETE: remove every row where `predicate` is TRUE (NULL
@@ -1584,9 +1376,10 @@ object SnapshotTable {
   /** Fold every live file into one fresh batch and commit — the
     * small-files/orphan-batch compaction. Old batches stay on disk for
     * time travel; physical deletion of unreferenced batches is
-    * [[vacuum]]'s retention decision. The fold LOSES the manifest column
-    * stats (its staged files carry none); [[overwriteClustered]] of
-    * [[read]] with `op = "compact"` re-clusters and re-stats it instead. */
+    * [[vacuum]]'s retention decision. The fold is a plain [[overwrite]],
+    * which records no stat columns, so it LOSES the manifest column stats;
+    * [[overwriteClustered]] of [[read]] with `op = "compact"` re-clusters
+    * and re-stats it instead, and [[compactSmall]] keeps them. */
   def compact(spark: SparkSession, tableDir: String, partCol: String): Long =
     overwrite(spark, tableDir, read(spark, tableDir), partCol,
       op = "compact")
@@ -1601,36 +1394,33 @@ object SnapshotTable {
     * based-on version records column stats, the folded files restage
     * range-clustered with fresh min/max (the [[rewriteWhere]] lesson:
     * maintenance must never degrade data skipping). File sizes come from
-    * the filesystem (one `getFileStatus` per live file — O(files)
-    * metadata, zero data reads for the decision). Returns the committed
-    * version, or the current version unchanged when nothing qualifies. */
+    * the manifest's `bytes:rows` field (zero data reads and, for files
+    * committed with it, zero metadata calls for the decision). Returns the
+    * committed version, or the current version unchanged when nothing
+    * qualifies. */
   def compactSmall(spark: SparkSession, tableDir: String, partCol: String,
       minBytes: Long): Long = {
     val basedOn = currentVersion(tableDir)
-    val all = entriesAt(tableDir, basedOn)
-    if (all.isEmpty) return basedOn
+    val all = filesAt(tableDir, basedOn)
+    if (all.entries.isEmpty) return basedOn
     val (fs, root) = fsRoot(tableDir)
     val dataRoot = new Path(root, "data")
-    // file lengths from the MANIFEST (fileMetaAt — zero RPCs); only
-    // entries written before the bytes:rows field pay a getFileStatus
-    val meta = fileMetaAt(tableDir, basedOn)
-    val sizes = all.map { case (_, f) =>
-      f -> meta.get(f).map(_._1).getOrElse(
+    // only entries written before the bytes:rows field pay a getFileStatus
+    val sizes = all.entries.map { case (_, f) =>
+      f -> all.meta.get(f).map(_._1).getOrElse(
         fs.getFileStatus(new Path(dataRoot, f)).getLen)
     }.toMap
-    val smallByPart = all.groupBy(_._1).map { case (p, es) =>
+    val smallByPart = all.entries.groupBy(_._1).map { case (p, es) =>
       p -> es.filter { case (_, f) => sizes(f) < minBytes }
     }.filter(_._2.size >= 2) // folding one file buys nothing
     if (smallByPart.isEmpty) return basedOn
     val foldFiles = smallByPart.valuesIterator.flatten.map(_._2).toSet
-    val (folded, carried) = all.partition { case (_, f) => foldFiles(f) }
     val sch = schemaAt(tableDir, basedOn)
-    val rewritten = readFiles(spark, tableDir, basedOn, folded.map(_._2), sch)
-    val st = typedStatsAt(tableDir, basedOn)
-    val statCols = st.valuesIterator.flatMap(_.keysIterator).toSet
-      .toSeq.sorted.filter(c => sch.forall(_.fieldNames.contains(c)))
+    val rewritten = readFiles(spark, tableDir, basedOn,
+      all.entries.map(_._2).filter(foldFiles), sch)
+    val statCols = recordedStatCols(all.stats, rewritten)
     val tag = newBatchTag(basedOn + 1)
-    val (staged, newStats) =
+    val staged =
       if (statCols.nonEmpty)
         // range-split on (partition, clustering key) so slices ALIGN with
         // partition boundaries — one fresh file per touched partition;
@@ -1641,31 +1431,26 @@ object SnapshotTable {
           rewritten.repartitionByRange(math.max(1, smallByPart.size),
             col(partCol), col(statCols.head)),
           tableDir, partCol, tag, statCols)
-      else (stageBatch(rewritten, tableDir, partCol, tag, 1L << 40),
-        Map.empty[String, Map[String, ColStat]])
-    val carriedFiles = carried.map(_._2).toSet
-    val carriedStats = st.filter { case (f, _) => carriedFiles(f) }
-    commitOrDiscard(tag)(casCommit(tableDir, basedOn, carried ++ staged,
-      carriedStats ++ newStats, sch, partColAt(tableDir, basedOn),
-      op = "optimize"))
+      else stageBatch(rewritten, tableDir, partCol, tag, 1L << 40)
+    casCommit(tableDir, basedOn, all.filter(e => !foldFiles(e._2)) ++ staged,
+      sch, partColAt(tableDir, basedOn), op = "optimize")
   }
 
   /** RESTORE the table to a previously committed version — a NEW commit
-    * whose entries/stats/schema are version `v`'s (Delta RESTORE): the
-    * bad commits stay in history (auditable, still time-travelable until
-    * vacuum), the live pointer moves FORWARD to a snapshot that equals
-    * the old one, and downstream change feeds see the restoration as
-    * ordinary diff rows rather than a version rollback they'd have to
-    * special-case. Zero data movement — batches are immutable, so
-    * restoring is a manifest copy. Requires `v`'s manifest to still
+    * whose entries, file metadata, stats and schema are version `v`'s
+    * (Delta RESTORE): the bad commits stay in history (auditable, still
+    * time-travelable until vacuum), the live pointer moves FORWARD to a
+    * snapshot that equals the old one, and downstream change feeds see
+    * the restoration as ordinary diff rows rather than a version rollback
+    * they'd have to special-case. Zero data movement — batches are
+    * immutable, so restoring is a manifest copy. Requires `v`'s manifest to still
     * exist (same retention contract as [[readAt]]). */
   def restore(spark: SparkSession, tableDir: String, v: Long): Long = {
     val basedOn = currentVersion(tableDir)
     require(manifestExists(tableDir, v),
       s"version $v of $tableDir is unreadable — never committed, or " +
         "vacuumed past the retention window (keepVersions)")
-    casCommit(tableDir, basedOn, entriesAt(tableDir, v),
-      typedStatsAt(tableDir, v), schemaAt(tableDir, v),
+    casCommit(tableDir, basedOn, filesAt(tableDir, v), schemaAt(tableDir, v),
       partColAt(tableDir, v).orElse(partColAt(tableDir, basedOn)),
       op = "restore")
   }

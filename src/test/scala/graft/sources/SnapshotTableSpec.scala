@@ -75,7 +75,7 @@ class SnapshotTableSpec extends SparkSpec {
     // writer crashes AFTER staging the merged batch (files on disk)…
     // (the merge kernel replicated by hand so each phase can be cut short)
     val touched = Set("2024-01", "2024-02", "2024-09")
-    val untouched = SnapshotTable.entries(dir).filterNot(e => touched(e._1))
+    val untouched = SnapshotTable.filesAt(dir, 1L).filter(e => !touched(e._1))
     val merged = SnapshotTable
       .readPartitions(spark, dir, Set("2024-01", "2024-02"))
       .unionByName(updateRows)
@@ -224,7 +224,7 @@ class SnapshotTableSpec extends SparkSpec {
     // ...writer A now tries to publish a manifest merged against v1
     val ex = intercept[java.util.ConcurrentModificationException] {
       SnapshotTable.casCommit(dir, basedOnVersion = v1,
-        SnapshotTable.entries(dir))
+        SnapshotTable.filesAt(dir, v2))
     }
     assert(ex.getMessage.contains("re-read and retry"))
     // the failed CAS released the lock and published nothing
@@ -232,7 +232,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(contents(SnapshotTable.read(spark, dir)) == mergedWant)
     // the retry (re-read against the REAL current version) succeeds
     val v3 = SnapshotTable.casCommit(dir, basedOnVersion = v2,
-      SnapshotTable.entries(dir))
+      SnapshotTable.filesAt(dir, v2))
     assert(v3 == v2 + 1 && SnapshotTable.currentVersion(dir) == v3)
     assert(contents(SnapshotTable.read(spark, dir)) == mergedWant)
   }
@@ -403,7 +403,7 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.vacuum(dir, keepVersions = 2)
     // its files survived the vacuum and the commit still succeeds
     val v4 = SnapshotTable.casCommit(dir, 3L,
-      SnapshotTable.entries(dir) ++ staged)
+      SnapshotTable.filesAt(dir, 3L) ++ staged)
     assert(SnapshotTable.read(spark, dir).filter(col("k") === 42L).count() == 1)
     assert(v4 == 4L)
   }
@@ -416,7 +416,7 @@ class SnapshotTableSpec extends SparkSpec {
       .toDF("k", "name", "price", "part", "version", "del")
     SnapshotTable.overwriteClustered(spark, dir, rows, "part",
       statsCols = Seq("k"), rangeFiles = 4)
-    // scattered upsert: new-batch files carry NO stats
+    // scattered upsert: its new-batch files record the table's stat column
     val upd = Seq((5L, "N", 1.5, "p1", 1L, false),
       (900L, "M", 2.5, "p0", 1L, false))
       .toDF("k", "name", "price", "part", "version", "del")
@@ -710,7 +710,7 @@ class SnapshotTableSpec extends SparkSpec {
       .toDF("k", "name", "part")
     val staged = SnapshotTable.stageBatch(rows, dir, "part",
       SnapshotTable.newBatchTag(1L), targetRowsPerFile = 200L)
-    val byPart = staged.groupBy(_._1).map { case (p, fs) => p -> fs.size }
+    val byPart = staged.entries.groupBy(_._1).map { case (p, fs) => p -> fs.size }
     assert(byPart("hot") > 1,
       s"hot partition must split across tasks, got ${byPart("hot")} file(s)")
     assert(byPart("cold") == 1,
@@ -718,7 +718,7 @@ class SnapshotTableSpec extends SparkSpec {
     // no unbounded file: the row cap holds for every hot file
     def hotFiles(st: Seq[(String, String)]) =
       st.collect { case ("hot", f) => s"$dir/data/$f" }
-    hotFiles(staged).foreach { f =>
+    hotFiles(staged.entries).foreach { f =>
       val n = spark.read.parquet(f).count()
       assert(n <= 200L, s"$f holds $n rows, above targetRowsPerFile 200")
     }
@@ -736,7 +736,7 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.stageBatch(rows, dir, "part",
         SnapshotTable.newBatchTag(2L), targetRowsPerFile = 1L << 40)
     }
-    val tasks = hotFiles(split)
+    val tasks = hotFiles(split.entries)
       .map(f => f.split('/').last.split('-')(1)).distinct
     assert(tasks.size > 1,
       s"hot partition must stage from several write tasks, got $tasks")
@@ -835,7 +835,7 @@ class SnapshotTableSpec extends SparkSpec {
     // own partition all the same
     val staged = SnapshotTable.stageBatch(rows, dir, "part",
       SnapshotTable.newBatchTag(1L), targetRowsPerFile = 100L)
-    assert(staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"),
+    assert(staged.entries.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"),
       "null-part rows must stage under the hive default directory")
     SnapshotTable.casCommit(dir, 0L, staged, schema = Some(rows.schema))
     assert(SnapshotTable.read(spark, dir).count() == 600)
@@ -1014,7 +1014,7 @@ class SnapshotTableSpec extends SparkSpec {
       Seq("k"), "version", "del")
     assert(SnapshotTable.partColAt(dir, v2) == Some("month"))
     // a bare casCommit without partCol inherits the table's recorded one
-    val v3 = SnapshotTable.casCommit(dir, v2, SnapshotTable.entries(dir))
+    val v3 = SnapshotTable.casCommit(dir, v2, SnapshotTable.filesAt(dir, v2))
     assert(SnapshotTable.partColAt(dir, v3) == Some("month"))
   }
 
@@ -1053,9 +1053,10 @@ class SnapshotTableSpec extends SparkSpec {
     meta1.foreach { case (f, (bytes, rows)) =>
       assert(bytes == new java.io.File(s"$dir/data/$f").length,
         s"recorded length of $f must be the real one")
-      assert(rows == -1L, "plain staging does not count rows")
+      assert(rows == spark.read.parquet(s"$dir/data/$f").count(),
+        s"recorded rows of $f must be the real count")
     }
-    // clustered staging rides a stats scan — rows are free there
+    // clustered staging records them the same way
     val dir2 = scratch("graft-snap-meta2")
     SnapshotTable.overwriteClustered(spark, dir2,
       baseRows.withColumn("k2", col("k")), "month",
@@ -1382,23 +1383,6 @@ class SnapshotTableSpec extends SparkSpec {
       "both retained versions stay exactly readable")
   }
 
-  test("a failed commit attempt discards its staged-batch metadata: the " +
-      "size/row maps never grow across CAS losses (driver-JVM leak pin)") {
-    val dir = scratch("graft-snap-leak")
-    SnapshotTable.overwrite(spark, dir, baseRows, "month") // v1
-    val before = SnapshotTable.stagedMetaCount
-    // deterministically occupy manifest v2 WITHOUT moving the pointer:
-    // the next committer passes the CAS version check but loses the
-    // manifest no-replace rename — the "racing writer prepared the same
-    // version" path — and must clean up after itself
-    SnapshotTable.prepareManifest(dir, SnapshotTable.entries(dir))
-    intercept[IllegalStateException] {
-      SnapshotTable.append(spark, dir, baseRows, maxAttempts = 1)
-    }
-    assert(SnapshotTable.stagedMetaCount == before,
-      "the failed append must discard its staged size/row entries")
-  }
-
   test("upsert with a narrow LONG key batch restages only files whose " +
       "recorded key stats overlap the batch; disjoint files carry forward " +
       "by identical path with their stats") {
@@ -1438,5 +1422,57 @@ class SnapshotTableSpec extends SparkSpec {
       case k => (k, s"n$k", k * 1.0)
     }.toSet
     assert(got == want)
+  }
+
+  test("restore records the restored files' bytes:rows and stats from " +
+      "the version it restores") {
+    val dir = scratch("graft-snap-restore-meta")
+    SnapshotTable.overwriteClustered(spark, dir, baseRows, "month",
+      statsCols = Seq("k"), rangeFiles = 2)                         // v1
+    SnapshotTable.overwrite(spark, dir, updateRows, "month")        // v2
+    val v3 = SnapshotTable.restore(spark, dir, 1L)
+    assert(v3 == 3L)
+    assert(SnapshotTable.fileMetaAt(dir, 3L) == SnapshotTable.fileMetaAt(dir, 1L))
+    assert(SnapshotTable.typedStatsAt(dir, 3L) ==
+      SnapshotTable.typedStatsAt(dir, 1L))
+  }
+
+  test("upsert- and append-staged files record the table's stat columns: " +
+      "a disjoint upsert carries them by path, a range read skips them") {
+    val dir = scratch("graft-snap-upsert-stats")
+    val rows = (1L to 100L).map(k =>
+      (k, s"n$k", k * 1.0, if (k % 2 == 0) "2024-01" else "2024-02",
+        0L, false))
+      .toDF("k", "name", "price", "month", "version", "del")
+    SnapshotTable.overwriteClustered(spark, dir, rows, "month",
+      statsCols = Seq("k"), rangeFiles = 10)                        // v1
+    def upd(ks: Long*) = ks.map(k =>
+      (k, s"N$k", k * 10.0, if (k % 2 == 0) "2024-01" else "2024-02",
+        1L, false)).toDF("k", "name", "price", "month", "version", "del")
+    SnapshotTable.upsert(spark, dir, upd(10L, 11L, 20L), "month",
+      Seq("k"), "version", "del")                                   // v2
+    val first = SnapshotTable.entriesAt(dir, 2L).map(_._2).toSet --
+      SnapshotTable.entriesAt(dir, 1L).map(_._2)
+    val st2 = SnapshotTable.typedStatsAt(dir, 2L)
+    assert(first.nonEmpty && first.forall(f => st2.get(f).exists(_.contains("k"))),
+      "the upsert's own files must record the table's stat column")
+    // a second upsert on a disjoint key band finds the first one's files
+    // update-free and carries them forward by identical path
+    SnapshotTable.upsert(spark, dir, upd(80L, 81L, 90L), "month",
+      Seq("k"), "version", "del")                                   // v3
+    assert(first.subsetOf(SnapshotTable.entriesAt(dir, 3L).map(_._2).toSet))
+    // and a range read off the first band skips them
+    val band = SnapshotTable.readRange(spark, dir, "k", 60L, 100L)
+    assert(!band.inputFiles.exists(f => first.exists(f.endsWith)))
+    assert(band.filter(col("k").between(60L, 100L)).count() == 41L)
+    // appended files record the table's stat column too
+    val v4 = SnapshotTable.append(spark, dir,
+      Seq((200L, "x", 1.0, "2024-03", 0L, false))
+        .toDF("k", "name", "price", "month", "version", "del"))
+    val added = SnapshotTable.entriesAt(dir, v4).map(_._2).toSet --
+      SnapshotTable.entriesAt(dir, 3L).map(_._2)
+    val st4 = SnapshotTable.typedStatsAt(dir, v4)
+    assert(added.nonEmpty && added.forall(f =>
+      st4.get(f).flatMap(_.get("k")).contains(SnapshotTable.LongStat(200L, 200L))))
   }
 }
